@@ -26,7 +26,9 @@ pruned input.
 
 from __future__ import annotations
 
+import collections
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -91,6 +93,15 @@ _EMPTY = {
     "pipeline_metrics": METRICS_SCHEMA,
 }
 
+# On-disk schema: the feed carries its partition column.
+_STORED = dict(
+    _EMPTY,
+    feed_by_user=T.StructType(
+        list(FEED_SCHEMA.fields)
+        + [T.StructField("user_bucket", T.IntegerType(), True)]
+    ),
+)
+
 
 class FeedStore:
     """Parquet-backed feed store rooted at ``base_dir``.
@@ -98,38 +109,81 @@ class FeedStore:
     ``feed_buckets`` controls the user-bucket partitioning of the feed sink
     (reference: one Cassandra partition per user, cql:30-37; at 100 TB a
     bucket count ~ O(cluster cores) keeps files large and reads pruned).
+
+    Table handles: every read goes through one schema-pinned DataFrame per
+    table, resolved lazily on first use and then reused, so a point read
+    (``get_feed``, ``get_followers``, ``user_id_by_username``) pays neither
+    an existence probe, a directory re-listing nor a schema-inference job.
+    A handle's file listing is fixed when it is resolved, so:
+
+    - every write through this store drops the written table's handle
+      right after the write (inside any lease it holds), and the next
+      read re-lists — read-your-writes holds on one instance;
+    - exclusive mutators (``create_users``/``fan_out`` with
+      ``exclusive=True``, ``compact``) also drop the handle right after
+      acquiring the lease, so they see what other instances or
+      processes committed under it;
+    - any other outside writer (another instance, a copy into the
+      table directory) becomes visible after ``refresh(table)``.
+
+    A table whose directory does not exist yet reads as an empty frame
+    of its schema and is not cached; no directory is created until the
+    first write.
     """
 
     def __init__(self, spark: SparkSession, base_dir: str, feed_buckets: int = 32):
         self.spark = spark
         self.base = base_dir
         self.feed_buckets = feed_buckets
+        self._handles: dict[str, DataFrame] = {}
+        # bumped on every drop: a handle whose resolution overlapped a
+        # drop (another thread's write) is returned but not cached, since
+        # its listing may predate that write
+        self._drops: collections.Counter = collections.Counter()
+        self._handles_lock = threading.Lock()
 
     # -- table plumbing ----------------------------------------------------
 
     def _path(self, table: str) -> str:
         return os.path.join(self.base, table)
 
-    def table(self, name: str) -> DataFrame:
+    def refresh(self, table: str | None = None) -> None:
+        """Drop the cached handle of ``table`` (every table when None);
+        the next read re-lists the table directory.  Call after writing
+        to the store's tables from outside this instance."""
+        with self._handles_lock:
+            for name in [table] if table is not None else list(_EMPTY):
+                self._drops[name] += 1
+                self._handles.pop(name, None)
+
+    def _handle(self, name: str) -> DataFrame:
+        """The table's schema-pinned DataFrame in its stored layout
+        (the feed keeps ``user_bucket`` for partition pruning)."""
         from golang_cassandra_kafka_feed_spark.sources.fsutil import (
             path_exists,
         )
 
+        df = self._handles.get(name)
+        if df is not None:
+            return df
+        drops = self._drops[name]
         path = self._path(name)
         if not path_exists(self.spark, path):
-            return self.spark.createDataFrame([], _EMPTY[name])
-        df = self.spark.read.schema(
-            _EMPTY[name]
-            if name != "feed_by_user"
-            else T.StructType(
-                list(FEED_SCHEMA.fields)
-                + [T.StructField("user_bucket", T.IntegerType(), True)]
-            )
-        ).parquet(path)
-        return df.select(*[f.name for f in _EMPTY[name].fields])
+            return self.spark.createDataFrame([], _STORED[name])
+        df = self.spark.read.schema(_STORED[name]).parquet(path)
+        with self._handles_lock:
+            if self._drops[name] == drops:
+                self._handles[name] = df
+        return df
+
+    def table(self, name: str) -> DataFrame:
+        return self._handle(name).select(*[f.name for f in _EMPTY[name].fields])
 
     def _append(self, df: DataFrame, name: str) -> None:
-        df.write.mode("append").parquet(self._path(name))
+        try:
+            df.write.mode("append").parquet(self._path(name))
+        finally:
+            self.refresh(name)
 
     def _table_lease(self, table: str):
         """Cross-job mutual exclusion on a table's read-modify-write
@@ -176,6 +230,9 @@ class FeedStore:
         """
         if exclusive:
             with self._table_lease("users"):
+                # other instances/processes may have committed under the
+                # lease: re-list before the anti-join
+                self.refresh("users")
                 return self.create_users(usernames, exclusive=False)
         valid = usernames.filter(valid_length("username", 1, 50))
         fresh = (
@@ -297,6 +354,7 @@ class FeedStore:
         """
         if exclusive:
             with self._table_lease("feed_by_user"):
+                self.refresh("feed_by_user")  # see create_users
                 return self.fan_out(posts, exclusive=False)
         follows = self.table("follows")
         feed_rows = (
@@ -323,13 +381,16 @@ class FeedStore:
             "user_bucket",
             F.pmod(F.xxhash64("user_id"), F.lit(self.feed_buckets)).cast("int"),
         )
-        (
-            bucketed.repartition(self.feed_buckets, "user_bucket")
-            .sortWithinPartitions(F.desc("created_at"), F.desc("post_id"))
-            .write.mode("append")
-            .partitionBy("user_bucket")
-            .parquet(self._path("feed_by_user"))
-        )
+        try:
+            (
+                bucketed.repartition(self.feed_buckets, "user_bucket")
+                .sortWithinPartitions(F.desc("created_at"), F.desc("post_id"))
+                .write.mode("append")
+                .partitionBy("user_bucket")
+                .parquet(self._path("feed_by_user"))
+            )
+        finally:
+            self.refresh("feed_by_user")
 
     def record_pipeline_metrics(
         self, epoch_id: int, n_envelopes: int, n_decoded: int, n_fresh: int
@@ -359,28 +420,21 @@ class FeedStore:
 
     def get_feed(self, user_id: str, limit: int = 50) -> DataFrame:
         """GetFeed (feed.go:143-171): newest-``limit`` feed rows for one
-        user, tie-break on post_id DESC (cql:36-37).  Physical plan:
-        bucket-pruned scan + TakeOrderedAndProject (default limit 50,
-        httphandlers.go:191-196)."""
-        from golang_cassandra_kafka_feed_spark.sources.fsutil import (
-            path_exists,
-        )
+        user, tie-break on post_id DESC (cql:36-37), default limit 50
+        (httphandlers.go:191-196).
 
-        bucket = None
-        path = self._path("feed_by_user")
-        if path_exists(self.spark, path):
-            # Prune to the user's bucket directory before filtering.
-            df = self.spark.read.parquet(path)
-            df = df.filter(
-                F.col("user_bucket")
-                == F.pmod(F.xxhash64(F.lit(user_id)), F.lit(self.feed_buckets)).cast(
-                    "int"
-                )
-            )
-            bucket = df
-        feed = bucket if bucket is not None else self.table("feed_by_user")
+        Reads the store's cached ``feed_by_user`` handle (see the class
+        docstring): its file listing and pinned schema are reused, so the
+        read is ONE Spark job — a scan pruned to the user's bucket
+        directory by the ``user_bucket`` literal, then
+        TakeOrderedAndProject.  It sees every write made through this
+        store; a write from outside it needs ``refresh("feed_by_user")``
+        first."""
+        bucket = F.pmod(F.xxhash64(F.lit(user_id)), F.lit(self.feed_buckets))
         return (
-            feed.filter(F.col("user_id") == user_id)
+            self._handle("feed_by_user")
+            .filter(F.col("user_bucket") == bucket.cast("int"))
+            .filter(F.col("user_id") == user_id)
             .orderBy(F.desc("created_at"), F.desc("post_id"))
             .limit(limit)
             .select(*[f.name for f in FEED_SCHEMA.fields])
@@ -415,7 +469,12 @@ class FeedStore:
         deployments run every mutator exclusive.
         """
         with self._table_lease(table):
-            return self._compact_locked(table)
+            self.refresh(table)  # see create_users
+            try:
+                return self._compact_locked(table)
+            finally:
+                # the swap deleted the files a cached handle lists
+                self.refresh(table)
 
     def _compact_locked(self, table: str) -> int:
         import shutil
@@ -431,8 +490,8 @@ class FeedStore:
         staging = path + ".compact"
         shutil.rmtree(staging, ignore_errors=True)
         shutil.rmtree(old, ignore_errors=True)
+        df = self._handle(table)
         if table == "feed_by_user":
-            df = self.spark.read.parquet(path)
             (
                 df.repartition(self.feed_buckets, "user_bucket")
                 .sortWithinPartitions(F.desc("created_at"), F.desc("post_id"))
@@ -440,7 +499,6 @@ class FeedStore:
                 .parquet(staging)
             )
         else:
-            df = self.table(table)
             n = max(1, df.count() // 1_000_000 + 1)
             df.coalesce(n).write.parquet(staging)
         os.rename(path, old)

@@ -368,12 +368,16 @@ class _HFS:
         return True
 
     def read(self, p: str) -> str | None:
+        from golang_cassandra_kafka_feed_spark.sources.fsutil import (
+            read_stream,
+        )
+
         try:
             stream = self._fs.open(self._path(p))
         except Exception:
             return None
         try:
-            return bytes(stream.readAllBytes()).decode("utf-8")
+            return read_stream(self._jvm, stream).decode("utf-8")
         finally:
             stream.close()
 

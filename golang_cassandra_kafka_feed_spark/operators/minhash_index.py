@@ -56,7 +56,10 @@ from golang_cassandra_kafka_feed_spark.operators.dedup import (
     _shingles,
     banded_rows,
 )
-from golang_cassandra_kafka_feed_spark.sources.fsutil import path_exists
+from golang_cassandra_kafka_feed_spark.sources.fsutil import (
+    path_exists,
+    read_stream,
+)
 
 _BANDS_SCHEMA = T.StructType(
     [
@@ -341,7 +344,7 @@ def read_index_meta(spark: SparkSession, path: str) -> dict:
     blobs.sort(key=lambda p: p.getName())
     stream = fs.open(blobs[0])
     try:
-        raw = json.loads(bytes(stream.readAllBytes()).decode("utf-8"))
+        raw = json.loads(read_stream(spark._jvm, stream).decode("utf-8"))
     finally:
         stream.close()
     return {f.name: raw.get(f.name) for f in _META_SCHEMA.fields}

@@ -32,6 +32,16 @@ def path_exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(p))
 
 
+def read_stream(jvm, stream) -> bytes:
+    """Every remaining byte of a JVM ``InputStream`` in ONE Py4J call.
+
+    ``InputStream.readAllBytes()`` is Java 9+, and a per-byte ``read()``
+    loop costs one Py4J round trip PER BYTE; commons-io ships with Spark
+    and its ``toByteArray`` runs on Java 8.  The caller closes the
+    stream."""
+    return bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
+
+
 def write_marker(spark: SparkSession, path: str, content: str = "") -> None:
     """Write a tiny commit-marker file through the Hadoop FS API
     (file://, hdfs://, s3a://, ...).  Write the marker LAST, after
@@ -125,8 +135,6 @@ def read_marker(spark: SparkSession, path: str) -> str | None:
     fs = p.getFileSystem(spark._jsc.hadoopConfiguration())  # type: ignore[union-attr]
     stream = fs.open(p)
     try:
-        # one JVM call (Java 11+ InputStream API) — the per-byte
-        # read() loop costs one Py4J round trip PER BYTE (review-found)
-        return bytes(stream.readAllBytes()).decode("utf-8")
+        return read_stream(jvm, stream).decode("utf-8")
     finally:
         stream.close()

@@ -189,3 +189,93 @@ def test_get_followers(spark, store):
     )
     got = {r.user_id for r in store.get_followers("a").collect()}
     assert got == {"u1", "u2"}
+
+
+def test_reads_see_writes_at_once_on_cached_handles(spark, store):
+    """Every read goes through one cached handle per table; each store
+    write drops its table's handle, so the next read sees it at once."""
+    store.create_users(_users(spark, ["alice"]))
+    assert store.user_id_by_username("bob").count() == 0
+    assert store._handle("users") is store._handle("users")  # cached
+    store.create_users(_users(spark, ["bob"]))
+    assert store.user_id_by_username("bob").count() == 1, "create_users"
+
+    store.create_follows(
+        spark.createDataFrame([("u1", "a")], "user_id string, followee_id string")
+    )
+    assert {r.user_id for r in store.get_followers("a").collect()} == {"u1"}
+    store.create_follows(
+        spark.createDataFrame([("u2", "a")], "user_id string, followee_id string")
+    )
+    got = {r.user_id for r in store.get_followers("a").collect()}
+    assert got == {"u1", "u2"}, "create_follows"
+
+    store.add_posts(_posts(spark, [("p1", "a", "one", TS)]))
+    assert [r.post_id for r in store.get_feed("u1").collect()] == ["p1"]
+    store.add_posts(_posts(spark, [("p2", "a", "two", TS + dt.timedelta(1))]))
+    feed = [r.post_id for r in store.get_feed("u1").collect()]
+    assert feed == ["p2", "p1"], "add_posts"
+
+    # redelivery of p2 plus a new p3: the anti-join must read the feed
+    # the previous write left, and the read must see p3
+    store.fan_out(
+        _posts(
+            spark,
+            [("p2", "a", "two", TS + dt.timedelta(1)),
+             ("p3", "a", "three", TS + dt.timedelta(2))],
+        )
+    )
+    feed = [r.post_id for r in store.get_feed("u1").collect()]
+    assert feed == ["p3", "p2", "p1"], "fan_out redelivery"
+
+    # the swap deletes every file the cached handle lists
+    store.compact("feed_by_user")
+    feed = [r.post_id for r in store.get_feed("u2").collect()]
+    assert feed == ["p3", "p2", "p1"], "compact"
+
+
+def test_exclusive_fan_out_across_instances_no_duplicates(spark, tmp_path):
+    """Two FeedStore instances on one base dir, each holding a warm
+    handle: an exclusive fan_out re-lists the feed under the lease, so
+    the second instance's anti-join sees the first one's rows."""
+    base = str(tmp_path / "shared")
+    a = FeedStore(spark, base, feed_buckets=4)
+    b = FeedStore(spark, base, feed_buckets=4)
+    a.create_follows(
+        spark.createDataFrame(
+            [(f"u{i}", "author") for i in range(3)],
+            "user_id string, followee_id string",
+        )
+    )
+    a.fan_out(_posts(spark, [("p0", "author", "b", TS)]), exclusive=True)
+    for s in (a, b):
+        assert s.get_feed("u0").count() == 1  # warm both handles
+
+    def batch(ids):
+        return _posts(spark, [(f"p{i}", "author", "b", TS) for i in ids])
+
+    a.fan_out(batch(range(0, 6)), exclusive=True)
+    b.fan_out(batch(range(3, 9)), exclusive=True)  # posts 3-5 overlap
+    feed = b.table("feed_by_user")
+    assert feed.count() == feed.select("user_id", "post_id").distinct().count()
+    assert feed.count() == 3 * 9
+
+
+def test_refresh_makes_external_append_visible(spark, tmp_path):
+    base = str(tmp_path / "shared")
+    reader = FeedStore(spark, base, feed_buckets=4)
+    writer = FeedStore(spark, base, feed_buckets=4)
+    writer.create_follows(
+        spark.createDataFrame([("u1", "a")], "user_id string, followee_id string")
+    )
+    writer.add_posts(_posts(spark, [("p1", "a", "one", TS)]))
+    assert reader.get_feed("u1").count() == 1
+    assert reader.table("posts").count() == 1
+    writer.add_posts(_posts(spark, [("p2", "a", "two", TS)]))
+    # the reader's handle keeps the listing it resolved ...
+    assert reader.get_feed("u1").count() == 1
+    assert reader.table("posts").count() == 1
+    reader.refresh()
+    # ... until refresh() drops it
+    assert reader.get_feed("u1").count() == 2
+    assert reader.table("posts").count() == 2

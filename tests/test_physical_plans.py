@@ -183,6 +183,44 @@ def test_get_feed_prunes_user_bucket_partitions(spark, tmp_path):
     assert "TakeOrderedAndProject" in plan
 
 
+def test_get_feed_is_one_spark_job(spark, tmp_path):
+    """A single-user feed read is ONE Spark job on a populated store: the
+    store's handle pins the schema (no inference job) and reuses its file
+    listing; the scan is bucket-pruned, then TakeOrderedAndProject."""
+    import datetime as dt
+
+    from golang_cassandra_kafka_feed_spark.feed import FeedStore
+
+    store = FeedStore(spark, str(tmp_path / "s"), feed_buckets=4)
+    store.create_follows(
+        spark.createDataFrame(
+            [(f"u{i}", "a") for i in range(8)],
+            "user_id string, followee_id string",
+        )
+    )
+    for epoch in range(3):
+        store.add_posts(
+            spark.createDataFrame(
+                [(f"p{epoch}", "a", "b", dt.datetime(2026, 1, 1 + epoch))],
+                "post_id string, author_id string, body string, "
+                "created_at timestamp",
+            )
+        )
+    sc = spark.sparkContext
+    jobs = []
+    try:
+        for i in range(2):  # the first read resolves the handle
+            group = f"get_feed_jobs_{tmp_path.name}_{i}"
+            sc.setJobGroup(group, "get_feed job count")
+            rows = store.get_feed("u3", 50).collect()
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+            assert [r.post_id for r in rows] == ["p2", "p1", "p0"]
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+    assert jobs == [1, 1], jobs
+
+
 def test_fanout_join_broadcasts_follows(spark, tmp_path):
     from golang_cassandra_kafka_feed_spark.feed import FeedStore
     from golang_cassandra_kafka_feed_spark.streaming.fanout import (
