@@ -95,12 +95,19 @@ def scope_stores_for_run(tmp: str = "/tmp") -> list[str]:
     """Delete every cross-run ``materialize_once`` store so the next
     cold execution pays the build.  Returns the removed paths (for the
     scoping test).  Only the ``gckfs_*`` namespace under ``tmp`` is the
-    store protocol's; everything else in /tmp is left alone."""
+    store protocol's; everything else in /tmp is left alone.  A store
+    holding a ``.<name>.lock`` whose lease is live belongs to a build
+    still running in another process and is left alone too."""
     import glob
     import shutil
 
+    from golang_cassandra_kafka_feed_spark.feed.lock import lease_state
+
     removed = []
     for d in glob.glob(os.path.join(tmp, "gckfs_*")):
+        locks = glob.glob(os.path.join(d, ".*.lock"))
+        if any(lease_state(lock)[0] == "live" for lock in locks):
+            continue
         shutil.rmtree(d, ignore_errors=True)
         removed.append(d)
     return removed

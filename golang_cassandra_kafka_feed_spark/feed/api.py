@@ -29,6 +29,7 @@ from __future__ import annotations
 import collections
 import os
 import threading
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -101,6 +102,38 @@ _STORED = dict(
         + [T.StructField("user_bucket", T.IntegerType(), True)]
     ),
 )
+
+
+def feed_rows(
+    posts: DataFrame, follows: DataFrame, broadcast: bool | None = None
+) -> DataFrame:
+    """posts ⋈ follows ON author_id = followee_id: one feed row per
+    (post, follower) (worker.go:138-154; invariant mock_kafka.go:22-47).
+    Works on batch and streaming ``posts`` alike.
+
+    By default the planner chooses the join strategy from the follows
+    table's size: below autoBroadcastJoinThreshold it broadcasts, a
+    100 TB follower graph shuffles on the equi key.  ``broadcast=True``
+    forces the hint (small-dim case pinned regardless of stats);
+    forcing it unconditionally would OOM on a huge graph, which is why
+    it is an opt-in, not the default.
+    """
+    right = F.broadcast(follows) if broadcast else follows
+    return (
+        posts.alias("p")
+        .join(
+            right.alias("f"),
+            F.col("p.author_id") == F.col("f.followee_id"),
+            "inner",
+        )
+        .select(
+            F.col("f.user_id").alias("user_id"),
+            F.col("p.post_id").alias("post_id"),
+            F.col("p.author_id").alias("author_id"),
+            F.col("p.body").alias("body"),
+            F.col("p.created_at").alias("created_at"),
+        )
+    )
 
 
 class FeedStore:
@@ -241,7 +274,7 @@ class FeedStore:
             .withColumn("user_id", F.expr("uuid()"))
             .select("user_id", "username")
         )
-        # Checkpoint BEFORE the append (the fanout.py pattern): the plan
+        # Checkpoint BEFORE the append (as add_posts does): the plan
         # reads the users table the append is about to grow, and uuid()
         # is nondeterministic — any later action re-executing this plan
         # would anti-join against the just-written names (returning
@@ -291,52 +324,35 @@ class FeedStore:
 
     # -- AddPost / fan-out / GetFeed ---------------------------------------
 
-    def add_posts(
-        self,
-        posts: DataFrame,
-        fan_out: bool = True,
-        concurrent_appends: bool = False,
-    ) -> DataFrame:
+    def add_posts(self, posts: DataFrame) -> DataFrame:
         """AddPost (feed.go:115-127) + the worker fan-out (worker.go:112-160)
         in one batch: validate body 1..1000 (httphandlers.go:134-137),
-        append to ``posts``, then write one feed row per (post, follower).
+        append to ``posts``, and write one feed row per (post, follower).
+        Returns the written posts.
 
-        ``concurrent_appends=True`` overlaps the two independent append
-        jobs from two driver threads (guide §2.6 — the scheduler
-        happily runs both; each epoch otherwise pays their latencies
-        back-to-back, a measured slice of the 0.835 s/epoch fixed
-        floor).  ONLY safe when ``posts`` has no live lineage through
-        this store's tables (the streaming path checkpoint-truncates
-        before calling) — with lineage, the posts append could
-        invalidate/re-list the feed branch mid-flight and lose rows,
-        which is exactly why the sequential default orders the feed
-        write first.
+        The valid rows are materialized once (``localCheckpoint``), then
+        the feed fan-out and the ``posts`` append run side by side on two
+        driver threads.  The checkpoint makes the batch safe whatever its
+        lineage: a plan that reads this store's ``posts`` table (the
+        streaming anti-join does) is not re-evaluated against the grown
+        table, not even a persisted one that Spark re-caches after the
+        append.
         """
-        valid = posts.filter(valid_length("body", 1, 1000)).select(
-            *[f.name for f in POST_SCHEMA.fields]
+        valid = (
+            posts.filter(valid_length("body", 1, 1000))
+            .select(*[f.name for f in POST_SCHEMA.fields])
+            .localCheckpoint(eager=True)
         )
-        if fan_out and concurrent_appends:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                ff = pool.submit(self.fan_out, valid)
-                pf = pool.submit(self._append, valid, "posts")
-                ff.result()
-                pf.result()
-            return valid
-        # Fan out BEFORE the posts append: if ``posts`` has lineage through
-        # this store's posts table (the streaming anti-join does), the
-        # append would invalidate/re-list that lineage and the re-evaluated
-        # batch could lose rows (see streaming/fanout.py).  Order the feed
-        # write first so every action sees the pre-append snapshot.
-        if fan_out:
-            self.fan_out(valid)
-        self._append(valid, "posts")
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            fanned = pool.submit(self.fan_out, valid)
+            try:
+                self._append(valid, "posts")
+            finally:
+                fanned.result()
         return valid
 
     def fan_out(self, posts: DataFrame, exclusive: bool = False) -> None:
-        """posts ⋈ follows ON author_id = followee_id -> feed rows
-        (worker.go:138-154; mock parity: mock_kafka.go:22-47).
+        """posts ⋈ follows -> feed rows (``feed_rows``).
 
         Idempotent on (user_id, post_id) — replays of at-least-once
         delivery (kafka.go:92) are dropped by the anti-join, emulating the
@@ -356,23 +372,7 @@ class FeedStore:
             with self._table_lease("feed_by_user"):
                 self.refresh("feed_by_user")  # see create_users
                 return self.fan_out(posts, exclusive=False)
-        follows = self.table("follows")
-        feed_rows = (
-            posts.alias("p")
-            .join(
-                follows.alias("f"),
-                F.col("p.author_id") == F.col("f.followee_id"),
-                "inner",
-            )
-            .select(
-                F.col("f.user_id").alias("user_id"),
-                F.col("p.post_id").alias("post_id"),
-                F.col("p.author_id").alias("author_id"),
-                F.col("p.body").alias("body"),
-                F.col("p.created_at").alias("created_at"),
-            )
-        )
-        fresh = feed_rows.join(
+        fresh = feed_rows(posts, self.table("follows")).join(
             self.table("feed_by_user").select("user_id", "post_id"),
             ["user_id", "post_id"],
             "left_anti",

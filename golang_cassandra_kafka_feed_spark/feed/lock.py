@@ -144,11 +144,48 @@ def table_lock(
         _release(path, token)
 
 
+def lease_state(
+    path: str, grace_seconds: float = 300.0
+) -> tuple[str, str | None]:
+    """``(state, token)`` of the lock file at ``path``: ``state`` is
+    ``"live"`` while its lease runs, ``"expired"`` once it is past, and
+    ``"gone"`` when there is no lock file; ``token`` is the holder's
+    token when the metadata parses.
+
+    Unreadable metadata is EITHER a holder mid-write (empty file between
+    O_EXCL create and os.write — fresh mtime, live) OR a holder that
+    crashed inside that window (the file stays unparseable forever;
+    without this branch every future acquire would block until
+    LockTimeout — round-5 advice).  The file's mtime is the only clock
+    such a file carries: older than ``grace_seconds`` -> expired.
+    CAVEAT: this compares time.time() against the lock FILESYSTEM's
+    mtime — a shared-storage server clock more than grace_seconds behind
+    the caller could expire a live mid-write lock.  The parseable path
+    has no such skew exposure (acquired_at is writer wall-clock, and
+    writers and waiters are peer jobs); on storage with known skew, size
+    lease_seconds above the skew bound."""
+    try:
+        with open(path, "r") as f:
+            meta = json.load(f)
+        age = time.time() - float(meta.get("acquired_at", 0.0))
+        live = age <= float(meta.get("lease_seconds", 0.0))
+    except ValueError:
+        try:
+            live = time.time() - os.stat(path).st_mtime <= grace_seconds
+        except OSError:
+            return "gone", None
+        return ("live" if live else "expired"), None
+    except OSError:
+        return "gone", None
+    return ("live" if live else "expired"), meta.get("token")
+
+
 def _maybe_take_over(
     path: str, token: str, grace_seconds: float = 300.0
 ) -> None:
-    """If the current lock's lease has expired, rename it aside (the
-    single-winner break primitive) so the acquire loop can retry.
+    """If the current lock's lease has expired (``lease_state``), rename
+    it aside (the single-winner break primitive) so the acquire loop can
+    retry.
 
     TOCTOU guard: between reading the expired metadata and winning the
     rename, the lock can change hands (expired holder releases, a fresh
@@ -158,37 +195,8 @@ def _maybe_take_over(
     atomically fails if yet another waiter already created a new lock at
     the path (in that residual double-race the displaced holder's
     release raises ``LockLost`` — detected, never silent)."""
-    try:
-        with open(path, "r") as f:
-            meta = json.load(f)
-        age = time.time() - float(meta.get("acquired_at", 0.0))
-        lease = float(meta.get("lease_seconds", 0.0))
-        expired_token = meta.get("token")
-    except ValueError:
-        # Unreadable metadata is EITHER a holder mid-write (empty file
-        # between O_EXCL create and os.write — fresh mtime, wait it out)
-        # OR a holder that crashed inside that window (the file stays
-        # unparseable forever; without this branch every future acquire
-        # would block until LockTimeout — round-5 advice).  The file's
-        # mtime is the only clock such a file carries: older than the
-        # waiter's grace period -> treat as abandoned and take over.
-        # CAVEAT: this compares the waiter's time.time() against the
-        # lock FILESYSTEM's mtime — a shared-storage server clock more
-        # than grace_seconds behind the waiters could break a live
-        # mid-write lock.  The parseable path below has no such skew
-        # exposure (acquired_at is writer wall-clock, and writers and
-        # waiters are peer jobs); on storage with known skew, size
-        # lease_seconds above the skew bound.
-        try:
-            if time.time() - os.stat(path).st_mtime <= grace_seconds:
-                return
-        except OSError:
-            return  # already gone; let the acquire loop retry
-        age, lease, expired_token = 1.0, 0.0, None
-    except OSError:
-        # already gone; let the acquire loop retry
-        return
-    if age <= lease:
+    state, expired_token = lease_state(path, grace_seconds)
+    if state != "expired":
         return
     stale = f"{path}.stale.{token}"
     try:

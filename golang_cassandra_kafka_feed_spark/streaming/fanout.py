@@ -14,9 +14,12 @@ Operator-by-operator parity:
 - JSON decode, malformed dropped (worker.go:122-126)    -> from_json
   (PERMISSIVE null struct) + isNotNull filter
 - fan-out join (worker.go:128,138-154)          -> stream-static equi-join
-  against follows, broadcast when small
-- at-least-once dedup (kafka.go:92, cql:36 PK)  -> idempotent anti-join in
-  foreachBatch (and dropDuplicatesWithinWatermark when a watermark column
+  against follows, broadcast when small (``feed_api.feed_rows``)
+- AddPost + per-follower inserts (feed.go:115-127, worker.go:112-160)
+                                                -> one ``FeedStore.add_posts``
+  per epoch from foreachBatch: the sink has the store's one write path
+- at-least-once dedup (kafka.go:92, cql:36 PK)  -> idempotent anti-joins in
+  that write (and dropDuplicatesWithinWatermark when a watermark column
   is available)
 - graceful shutdown/drain (worker.go:66-70)     -> query.stop() +
   checkpoint resume
@@ -89,29 +92,14 @@ def fanout_stream(
     follows: DataFrame,
     broadcast: bool | None = None,
 ) -> DataFrame:
-    """Stream-static equi-join: one feed row per (post, follower)
-    (worker.go:138-154; invariant mock_kafka.go:22-47).
+    """Stream-static equi-join: one feed row per (post, follower), the
+    same projection ``FeedStore.fan_out`` writes (``feed_api.feed_rows``).
 
     ``follows`` is static per micro-batch and Spark re-plans the join
-    every batch, so by default the planner chooses the strategy from the
-    table's size: below autoBroadcastJoinThreshold it broadcasts, a
-    100 TB follower graph shuffles on the equi key.  ``broadcast=True``
-    forces the hint (small-dim case pinned regardless of stats);
-    forcing it unconditionally would OOM on a huge graph, which is why
-    it is an opt-in, not the default.
+    every batch, so the planner's size-based strategy choice (or the
+    ``broadcast=True`` hint) is made afresh each batch.
     """
-    right = F.broadcast(follows) if broadcast else follows
-    return post_events.join(
-        right,
-        post_events.author_id == follows.followee_id,
-        "inner",
-    ).select(
-        follows.user_id.alias("user_id"),
-        "post_id",
-        "author_id",
-        "body",
-        "created_at",
-    )
+    return feed_api.feed_rows(post_events, follows, broadcast)
 
 
 def fanout_stream_stream(
@@ -196,28 +184,34 @@ def run_fanout_pipeline(
     resumes with no loss or duplication (drain semantics,
     worker.go:66-70).
 
-    ``foreachBatch`` gives exactly-once-per-epoch sink semantics on top of
-    the source's at-least-once replay: FeedStore.fan_out anti-joins on
-    (user_id, post_id) so redelivered posts are dropped — the Cassandra
-    PK upsert (cql:36) made explicit.  Posts are also appended to the
-    ``posts`` table, mirroring AddPost on the consumer side.
+    ``foreachBatch`` hands each epoch to one plain batch write: the sink
+    decodes, validates, drops in-batch duplicates, anti-joins the
+    ``posts`` table, and passes what is left to ``FeedStore.add_posts``
+    (AddPost + fan-out, the reference's one write path).  That gives
+    exactly-once-per-epoch sink semantics on top of the source's
+    at-least-once replay: redelivered posts are dropped by the posts
+    anti-join and, for a replayed epoch whose feed write committed, by
+    ``fan_out``'s (user_id, post_id) anti-join — the Cassandra PK upsert
+    (cql:36) made explicit.  Known limit: ``add_posts`` runs its two
+    appends at once, so a crash that commits the ``posts`` append but
+    not the feed write leaves a replay that the posts anti-join empties;
+    those feed rows are not written.
 
     ``record_metrics=True`` appends one row per epoch to the store's
     ``pipeline_metrics`` table (epoch_id, n_envelopes, n_decoded, n_fresh)
     — the engine-side twin of the reference's per-run counters
     (bench/http_load/http_load.go:123-130, kafka_producer.go:45-46).  The
-    counts ride an Observation on the plans that already execute, so
-    metrics cost no extra pass over the data.
+    envelope and decoded counts ride Observations on the plan that
+    ``add_posts`` materializes, so they cost no extra pass over the data.
     """
     from pyspark.sql import Observation
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        obs_in = Observation() if record_metrics else None
-        if obs_in is not None:
+        if record_metrics:
+            obs_in, obs_dec = Observation(), Observation()
             batch_df = batch_df.observe(obs_in, F.count(F.lit(1)).alias("n"))
         decoded = decode_post_events(batch_df)
-        obs_dec = Observation() if record_metrics else None
-        if obs_dec is not None:
+        if record_metrics:
             decoded = decoded.observe(obs_dec, F.count(F.lit(1)).alias("n"))
         # Validate BEFORE dropDuplicates: if one epoch carries both a valid
         # and an invalid row for the same post_id, dedup must choose among
@@ -225,55 +219,14 @@ def run_fanout_pipeline(
         # kept invalid duplicate drop a valid post nondeterministically.
         # n_fresh thereby also counts only rows that will actually be written.
         posts = decoded.filter(feed_api.valid_length("body", 1, 1000))
-        posts = posts.dropDuplicates(["post_id"])
-        fresh = posts.join(
+        fresh = posts.dropDuplicates(["post_id"]).join(
             store.table("posts").select("post_id"), "post_id", "left_anti"
         )
-        # localCheckpoint, NOT persist: the batch plan reads the posts
-        # table that add_posts is about to append to, and Spark's
-        # recacheByPath re-materializes overlapping *cached* plans after a
-        # write — with a fresh file listing, the anti-join would then
-        # swallow the very rows just written (feed rows silently lost).
-        # Checkpointing truncates the lineage so no table-path dependency
-        # survives into the second action.
+        written = store.add_posts(fresh)
         if record_metrics:
-            # lazy + count: the count job IS the materializing job, so
-            # metrics cost no extra pass (one job, not eager-then-count)
-            fresh = fresh.localCheckpoint(eager=False)
-            n_fresh = fresh.count()
-        else:
-            # n_fresh is metrics-only; the unconditional count was one of
-            # the ~5 fixed jobs in every epoch (r10 per-batch-floor
-            # measurement: 0.94 s/epoch at 1-row batches)
-            fresh = fresh.localCheckpoint(eager=True)
-        # fresh is checkpoint-truncated above, so the two append jobs
-        # (feed fan-out, posts) share no live lineage — overlap them
-        # (r11, verdict #4: they were two of the ~5 sequential jobs in
-        # the 0.835 s/epoch fixed floor)
-        if record_metrics:
-            # The metrics row depends only on values already known (the
-            # count job above materialized both observations), and the
-            # pipeline_metrics table shares no lineage with posts/feed —
-            # overlap the metrics append with the two post appends
-            # instead of serializing it after them (r12, verdict-r11
-            # ask #6; guide §2.6).
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                ap = pool.submit(
-                    store.add_posts, fresh, True, True
-                )
-                mt = pool.submit(
-                    store.record_pipeline_metrics,
-                    epoch_id,
-                    obs_in.get["n"],
-                    obs_dec.get["n"],
-                    n_fresh,
-                )
-                ap.result()
-                mt.result()
-        else:
-            store.add_posts(fresh, fan_out=True, concurrent_appends=True)
+            store.record_pipeline_metrics(
+                epoch_id, obs_in.get["n"], obs_dec.get["n"], written.count()
+            )
 
     writer = envelopes_stream.writeStream.foreachBatch(_process).option(
         "checkpointLocation", checkpoint_dir

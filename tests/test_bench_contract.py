@@ -159,3 +159,23 @@ def test_scope_stores_removes_only_gckfs_namespace(tmp_path):
     assert sorted(removed) == sorted(str(v) for v in victims)
     assert keep.exists()
     assert not any(os.path.exists(str(v)) for v in victims)
+
+
+def test_scope_stores_skips_stores_with_a_live_lease(tmp_path):
+    """A store another process is still building (its table_lock lease
+    is live) survives; one whose lock lease expired is removed."""
+    import time
+
+    from golang_cassandra_kafka_feed_spark.feed.lock import table_lock
+
+    held = tmp_path / "gckfs_q124_rollup_held"
+    with table_lock(str(held), "rollup_build"):
+        stale = tmp_path / "gckfs_q110_index_stale"
+        stale.mkdir()
+        (stale / ".stage_build.lock").write_text(
+            json.dumps({"token": "t", "acquired_at": time.time() - 60,
+                        "lease_seconds": 1.0})
+        )
+        removed = bench.scope_stores_for_run(str(tmp_path))
+        assert removed == [str(stale)]
+        assert held.exists() and not stale.exists()

@@ -581,12 +581,15 @@ def test_differential_fuzz(spark, duck):
     rng = random.Random(SEED)
     t1, t2 = _gen_rows(rng)
 
+    # Materialize the Python-side rows once: a view over the raw local
+    # list re-runs Python workers to convert the rows on every scan of
+    # every query.  The queries still execute on Spark's operators.
     spark.createDataFrame(
         t1, "id bigint, k bigint, v bigint, s string, c string, dt date"
-    ).createOrReplaceTempView("f1")
+    ).localCheckpoint().createOrReplaceTempView("f1")
     spark.createDataFrame(
         t2, "k bigint, name string, w bigint"
-    ).createOrReplaceTempView("f2")
+    ).localCheckpoint().createOrReplaceTempView("f2")
 
     duck.sql("DROP TABLE IF EXISTS f1")
     duck.sql("DROP TABLE IF EXISTS f2")

@@ -279,3 +279,53 @@ def test_refresh_makes_external_append_visible(spark, tmp_path):
     # ... until refresh() drops it
     assert reader.get_feed("u1").count() == 2
     assert reader.table("posts").count() == 2
+
+
+@pytest.mark.parametrize("persisted", [False, True], ids=["as_is", "persisted"])
+def test_add_posts_input_reading_the_posts_table(spark, store, persisted):
+    """A batch whose plan anti-joins this store's ``posts`` table (the
+    streaming sink's shape) lands exactly once in ``posts`` and once per
+    follower in the feed, and ``add_posts`` returns exactly the rows it
+    wrote — also when the batch is persisted, which Spark re-caches with
+    a fresh listing after the ``posts`` append."""
+    store.create_follows(
+        spark.createDataFrame(
+            [("u1", "a"), ("u2", "a")], "user_id string, followee_id string"
+        )
+    )
+    store.add_posts(_posts(spark, [("p0", "a", "old", TS)]))
+    incoming = _posts(
+        spark,
+        [(f"p{i}", "a", f"body{i}", TS + dt.timedelta(minutes=i))
+         for i in range(3)],  # p0 is a redelivery
+    )
+    batch = incoming.join(
+        store.table("posts").select("post_id"), "post_id", "left_anti"
+    )
+    if persisted:
+        batch = batch.persist()
+    try:
+        written = store.add_posts(batch)
+        assert sorted(r.post_id for r in written.collect()) == ["p1", "p2"]
+        posts = [r.post_id for r in store.table("posts").collect()]
+        assert sorted(posts) == ["p0", "p1", "p2"]
+        feed = [(r.user_id, r.post_id)
+                for r in store.table("feed_by_user").collect()]
+        assert sorted(feed) == [
+            (u, p) for u in ("u1", "u2") for p in ("p0", "p1", "p2")
+        ]
+    finally:
+        batch.unpersist()
+
+
+def test_record_pipeline_metrics_replay_keeps_one_row(spark, store):
+    """foreachBatch may replay an epoch: recording the same epoch_id
+    again (the replay sees n_fresh=0) leaves the first row alone."""
+    store.record_pipeline_metrics(7, 4, 2, 1)
+    store.record_pipeline_metrics(7, 4, 2, 0)
+    store.record_pipeline_metrics(8, 3, 3, 3)
+    rows = sorted(
+        (r.epoch_id, r.n_envelopes, r.n_decoded, r.n_fresh)
+        for r in store.table("pipeline_metrics").collect()
+    )
+    assert rows == [(7, 4, 2, 1), (8, 3, 3, 3)]

@@ -420,13 +420,15 @@ def test_temporal_differential_fuzz(spark, duck):
     ev = _gen_events(rng)
     probes = _gen_probes(rng)
 
+    # Materialize the Python-side rows once (see test_differential_fuzz):
+    # every scan of a view over the raw local list re-runs Python workers.
     spark.createDataFrame(
         ev, "user_id bigint, event_id bigint, ts timestamp, us bigint, "
         "value bigint"
-    ).createOrReplaceTempView("ev")
+    ).localCheckpoint().createOrReplaceTempView("ev")
     spark.createDataFrame(
         probes, "probe_id bigint, user_id bigint, ts timestamp, us bigint"
-    ).createOrReplaceTempView("probes")
+    ).localCheckpoint().createOrReplaceTempView("probes")
 
     duck.sql("DROP TABLE IF EXISTS ev")
     duck.sql("DROP TABLE IF EXISTS probes")
