@@ -220,23 +220,19 @@ class FeedStore:
 
     def _table_lease(self, table: str):
         """Cross-job mutual exclusion on a table's read-modify-write
-        (feed/lock.py — the LWT twin).  Filesystem base dirs only; on an
-        object store swap the atomic-create primitive per the lock module
-        docstring."""
+        (feed/lock.py — the LWT twin), held in the store's base dir; a
+        ``file:`` base locks on the local filesystem.  Other URI schemes
+        are refused: ``compact`` swaps directories with ``os.rename``,
+        which cannot reach a remote store."""
         from golang_cassandra_kafka_feed_spark.feed.lock import table_lock
 
-        lock_base = self.base
-        for scheme in ("file://", "file:"):
-            if lock_base.startswith(scheme):
-                lock_base = lock_base[len(scheme):]
-                break
-        if "://" in lock_base:
+        if "://" in self.base and not self.base.startswith("file:"):
             raise NotImplementedError(
-                f"exclusive {table} mutation needs a filesystem base dir "
-                "(object stores: swap the atomic-create primitive, see "
-                "feed/lock.py docstring)"
+                f"exclusive {table} mutation needs a local base dir "
+                "(compact swaps directories with os.rename), got "
+                f"{self.base!r}"
             )
-        return table_lock(lock_base, table)
+        return table_lock(self.base, table)
 
     # -- CreateUser (feed.go:41-74): CAS -> batch dedup + anti-join --------
 
@@ -330,26 +326,37 @@ class FeedStore:
         append to ``posts``, and write one feed row per (post, follower).
         Returns the written posts.
 
-        The valid rows are materialized once (``localCheckpoint``), then
+        Each ``post_id`` is written once, the ``posts`` primary-key upsert
+        (cql:23-28) made explicit: in-batch duplicates are dropped and
+        posts already stored are anti-joined away, so a redelivered post
+        (kafka.go:92) writes nothing.
+
+        The fresh rows are materialized once (``localCheckpoint``), then
         the feed fan-out and the ``posts`` append run side by side on two
         driver threads.  The checkpoint makes the batch safe whatever its
         lineage: a plan that reads this store's ``posts`` table (the
-        streaming anti-join does) is not re-evaluated against the grown
+        gate's own anti-join does) is not re-evaluated against the grown
         table, not even a persisted one that Spark re-caches after the
         append.
         """
-        valid = (
+        # Validate BEFORE dropDuplicates: if one batch carries both a valid
+        # and an invalid row for the same post_id, dedup must choose among
+        # writable rows only — filtering afterwards would let an arbitrary
+        # kept invalid duplicate drop a valid post nondeterministically.
+        fresh = (
             posts.filter(valid_length("body", 1, 1000))
             .select(*[f.name for f in POST_SCHEMA.fields])
+            .dropDuplicates(["post_id"])
+            .join(self.table("posts").select("post_id"), "post_id", "left_anti")
             .localCheckpoint(eager=True)
         )
         with ThreadPoolExecutor(max_workers=2) as pool:
-            fanned = pool.submit(self.fan_out, valid)
+            fanned = pool.submit(self.fan_out, fresh)
             try:
-                self._append(valid, "posts")
+                self._append(fresh, "posts")
             finally:
                 fanned.result()
-        return valid
+        return fresh
 
     def fan_out(self, posts: DataFrame, exclusive: bool = False) -> None:
         """posts ⋈ follows -> feed rows (``feed_rows``).

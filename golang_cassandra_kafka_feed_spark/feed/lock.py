@@ -15,20 +15,25 @@ writers are a handful of concurrent jobs appending thousands of rows
 each, a table-level commit lock is the honest translation (the critical
 section is two Spark jobs: one anti-join read, one append).
 
+One protocol, written once against seven filesystem primitives
+(``mkdirs``, ``create_excl``, ``read``, ``mtime``, ``rename``,
+``restore``, ``delete``) with two implementations: ``_LocalFS`` (``os.*``)
+for bare paths and ``file:`` URIs, ``_HFS`` (the Hadoop FileSystem API)
+for remote schemes such as ``hdfs://`` and ``s3a://``, so the lock lives
+on the same filesystem as the data it protects.
+
 Mechanics:
-- acquire = ``os.open(O_CREAT | O_EXCL)`` of ``<base>/.<table>.lock`` —
-  atomic on POSIX and on HDFS-style filesystems (``create`` with
-  overwrite=false).  On S3-style object stores swap in a conditional
-  PUT (If-None-Match); the protocol above the primitive is unchanged.
+- acquire = ``create_excl`` of ``<base>/.<table>.lock`` — ``os.open(
+  O_CREAT | O_EXCL)`` locally, ``create`` with overwrite=false on HDFS.
 - the lock file carries owner metadata ``{token, pid, host,
   acquired_at, lease_seconds}``.
 - crash recovery = LEASE TAKEOVER: a waiter that finds the lock older
-  than its lease renames it aside (``os.rename`` — only ONE concurrent
+  than its lease (``lease_state``) renames it aside (only ONE concurrent
   renamer of the same source succeeds, so two waiters cannot both
   "break" the lock and then both acquire) and retries the atomic
   create.
 - release renames the lock to a holder-private name, verifies the
-  stored token on that pinned inode, and only then unlinks: if this
+  stored token on that pinned file, and only then deletes it: if this
   holder's lease was taken over mid-run, the successor's lock is
   restored and ``LockLost`` is raised so the caller knows its critical
   section was not exclusive to the end.
@@ -41,6 +46,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import socket
 import time
 import uuid
@@ -60,13 +66,16 @@ def _lock_path(base_dir: str, table: str) -> str:
     return os.path.join(base_dir, f".{table}.lock")
 
 
-def _uri_scheme(path: str) -> str | None:
-    """The URI scheme of ``path`` (``hdfs``, ``s3a``, ``file``, ...)
-    or None for a bare local path."""
-    import re
-
-    m = re.match(r"^([A-Za-z][A-Za-z0-9+.-]*)://", path)
-    return m.group(1).lower() if m else None
+def _filesystem(base_dir: str):
+    """``(primitives, base)`` for ``base_dir``: a ``file:`` URI
+    (``file:///x`` or Hadoop's ``file:/x``) is the local path ``/x``,
+    a bare path is local as is, any other scheme goes through Hadoop."""
+    for prefix in ("file://", "file:"):
+        if base_dir.startswith(prefix):
+            return _LocalFS(), base_dir[len(prefix):]
+    if re.match(r"[A-Za-z][A-Za-z0-9+.-]*://", base_dir):
+        return _HFS(base_dir), base_dir
+    return _LocalFS(), base_dir
 
 
 @contextmanager
@@ -84,23 +93,17 @@ def table_lock(
     jobs), otherwise a slow holder gets taken over and its release
     raises ``LockLost``.
 
-    SCOPE (review-found): a bare local path locks via ``os.*`` —
-    driver-local, the fast path.  A path carrying a URI scheme
-    (``hdfs://``, ``s3a://``, ``file://``) routes through the Hadoop
-    FileSystem API bound to the active SparkSession, so the lock lives
-    on the SAME filesystem as the data it protects — a rollup
-    maintained at an object-store path is now guarded by a lease other
-    writers of that path can actually see, instead of a lock file on
-    one driver's local disk that protects nothing across machines.
+    The lock file lives next to the data: a bare path or a ``file:``
+    URI locks on the local filesystem with its atomic ``O_EXCL``
+    create; a remote URI (``hdfs://``, ``s3a://``) locks through the
+    Hadoop FileSystem bound to the active SparkSession, so a rollup
+    maintained at an object-store path is guarded by a lease other
+    writers of that path can see, not by a lock file on one driver's
+    local disk.
     """
-    if _uri_scheme(base_dir):
-        with _hadoop_table_lock(
-            base_dir, table, lease_seconds, timeout_seconds, poll_seconds
-        ):
-            yield
-        return
-    os.makedirs(base_dir, exist_ok=True)
-    path = _lock_path(base_dir, table)
+    fs, base = _filesystem(base_dir)
+    fs.mkdirs(base)
+    path = _lock_path(base, table)
     token = uuid.uuid4().hex
     meta = {
         "token": token,
@@ -110,52 +113,52 @@ def table_lock(
     }
     deadline = time.monotonic() + timeout_seconds
     while True:
-        try:
-            fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError:
-            _maybe_take_over(path, token, grace_seconds=lease_seconds)
-            if time.monotonic() >= deadline:
-                raise LockTimeout(
-                    f"{path}: held for > {timeout_seconds}s"
-                ) from None
-            time.sleep(poll_seconds)
-            continue
-        try:
-            meta["acquired_at"] = time.time()
-            os.write(fd, json.dumps(meta).encode())
-        finally:
-            os.close(fd)
-        break
+        meta["acquired_at"] = time.time()
+        if fs.create_excl(path, json.dumps(meta)):
+            break
+        _maybe_take_over(fs, path, token, grace_seconds=lease_seconds)
+        if time.monotonic() >= deadline:
+            raise LockTimeout(f"{path}: held for > {timeout_seconds}s")
+        time.sleep(poll_seconds)
     try:
         yield
     except BaseException as primary:
         # NOTHING release raises may REPLACE the critical section's own
         # failure (the primary diagnostic) — not LockLost, and not an
-        # incidental OSError from the unlink/link calls either (round-6
+        # incidental OSError from the filesystem calls either (round-6
         # advice widened the round-5 LockLost-only shield).  Any release
         # failure is attached as a note instead.
         try:
-            _release(path, token)
+            _release(fs, path, token)
         except BaseException as lost:  # noqa: BLE001 — see above
             if hasattr(primary, "add_note"):
                 primary.add_note(f"also, releasing the lock: {lost!r}")
         raise
     else:
-        _release(path, token)
+        _release(fs, path, token)
+
+
+def _token(raw: str | None) -> str | None:
+    """The holder token in lock metadata ``raw``, None if unparseable."""
+    try:
+        return json.loads(raw).get("token") if raw else None
+    except ValueError:
+        return None
 
 
 def lease_state(
-    path: str, grace_seconds: float = 300.0
+    path: str, grace_seconds: float = 300.0, fs=None
 ) -> tuple[str, str | None]:
-    """``(state, token)`` of the lock file at ``path``: ``state`` is
-    ``"live"`` while its lease runs, ``"expired"`` once it is past, and
-    ``"gone"`` when there is no lock file; ``token`` is the holder's
-    token when the metadata parses.
+    """``(state, token)`` of the lock file at ``path`` (on ``fs``, the
+    local filesystem by default): ``state`` is ``"live"`` while its
+    lease runs, ``"expired"`` once it is past, and ``"gone"`` when there
+    is no lock file; ``token`` is the holder's token when the metadata
+    parses.
 
     Unreadable metadata is EITHER a holder mid-write (empty file between
-    O_EXCL create and os.write — fresh mtime, live) OR a holder that
-    crashed inside that window (the file stays unparseable forever;
-    without this branch every future acquire would block until
+    the exclusive create and the metadata write — fresh mtime, live) OR
+    a holder that crashed inside that window (the file stays unparseable
+    forever; without this branch every future acquire would block until
     LockTimeout — round-5 advice).  The file's mtime is the only clock
     such a file carries: older than ``grace_seconds`` -> expired.
     CAVEAT: this compares time.time() against the lock FILESYSTEM's
@@ -164,24 +167,25 @@ def lease_state(
     has no such skew exposure (acquired_at is writer wall-clock, and
     writers and waiters are peer jobs); on storage with known skew, size
     lease_seconds above the skew bound."""
+    fs = fs or _LocalFS()
+    raw = fs.read(path)
+    if raw is None:
+        return "gone", None
     try:
-        with open(path, "r") as f:
-            meta = json.load(f)
+        meta = json.loads(raw)
         age = time.time() - float(meta.get("acquired_at", 0.0))
         live = age <= float(meta.get("lease_seconds", 0.0))
     except ValueError:
-        try:
-            live = time.time() - os.stat(path).st_mtime <= grace_seconds
-        except OSError:
+        mtime = fs.mtime(path)
+        if mtime is None:
             return "gone", None
+        live = time.time() - mtime <= grace_seconds
         return ("live" if live else "expired"), None
-    except OSError:
-        return "gone", None
     return ("live" if live else "expired"), meta.get("token")
 
 
 def _maybe_take_over(
-    path: str, token: str, grace_seconds: float = 300.0
+    fs, path: str, token: str, grace_seconds: float = 300.0
 ) -> None:
     """If the current lock's lease has expired (``lease_state``), rename
     it aside (the single-winner break primitive) so the acquire loop can
@@ -191,112 +195,119 @@ def _maybe_take_over(
     rename, the lock can change hands (expired holder releases, a fresh
     holder acquires) — the rename would then break a LIVE lease.  After
     the rename the renamed file's token is re-checked against the one
-    read; on mismatch the live lock is restored via ``os.link``, which
-    atomically fails if yet another waiter already created a new lock at
-    the path (in that residual double-race the displaced holder's
-    release raises ``LockLost`` — detected, never silent)."""
-    state, expired_token = lease_state(path, grace_seconds)
+    read; on mismatch the live lock is put back with ``fs.restore``,
+    which fails if yet another waiter already created a new lock at the
+    path (in that residual double-race the displaced holder's release
+    raises ``LockLost`` — detected, never silent)."""
+    state, expired_token = lease_state(path, grace_seconds, fs)
     if state != "expired":
         return
     stale = f"{path}.stale.{token}"
-    try:
-        os.rename(path, stale)  # one concurrent renamer wins
-    except OSError:
+    if not fs.rename(path, stale):  # one concurrent renamer wins
         return
-    try:
-        with open(stale, "r") as f:
-            renamed_token = json.load(f).get("token")
-    except (OSError, ValueError):
-        renamed_token = None
+    renamed_token = _token(fs.read(stale))
     if renamed_token is not None and renamed_token != expired_token:
-        _restore(stale, path)
-    try:
-        os.unlink(stale)
-    except OSError:
-        pass
+        fs.restore(stale, path)
+    fs.delete(stale)
 
 
-def _restore(src: str, path: str) -> None:
-    """Put a mistakenly-renamed LIVE lock back at ``path``.
-
-    ``os.link`` is the preferred primitive: atomic, and fails with
-    EEXIST if yet another waiter already created a fresh lock (that
-    residual race is left to detect-at-release).  A NON-EEXIST link
-    failure means the primitive itself is unavailable (object stores
-    and some network filesystems have no hard links) — there, falling
-    through would delete the displaced holder's live lock outright;
-    instead restore by rename, which clobbers a just-created waiter
-    lock in the worst case (that waiter then detects the loss at its
-    own release — round-6 advice: strictly narrower than the delete)."""
-    try:
-        os.link(src, path)
-    except FileExistsError:
-        pass
-    except OSError:
-        try:
-            os.rename(src, path)
-        except OSError:
-            pass
-
-
-def _release(path: str, token: str) -> None:
+def _release(fs, path: str, token: str) -> None:
     """Token-verified release via rename-then-verify.
 
-    A plain read-check-unlink has a race: if the lease expires between
-    the token read and the unlink, a waiter can take over and acquire,
-    and the unlink then silently deletes the NEW holder's lock (round-5
+    A plain read-check-delete has a race: if the lease expires between
+    the token read and the delete, a waiter can take over and acquire,
+    and the delete then silently removes the NEW holder's lock (round-5
     advice).  Renaming the lock to a holder-private name FIRST pins the
-    exact inode being verified: the token check and the delete now
+    exact file being verified: the token check and the delete now
     operate on the same file, so a live successor's lock can never be
-    unlinked by a stale holder — at worst it is renamed aside for one
-    beat and restored via the same ``os.link`` primitive the takeover
-    path uses (and if yet another waiter slipped in meanwhile, the link
-    fails and BOTH displaced holders see LockLost at their own release —
-    detected, never silent)."""
+    deleted by a stale holder — at worst it is renamed aside for one
+    beat and restored via the same ``fs.restore`` the takeover path
+    uses (and if yet another waiter slipped in meanwhile, the restore
+    fails and BOTH displaced holders see LockLost at their own release
+    — detected, never silent)."""
     mine = f"{path}.rel.{token}"
-    try:
-        os.rename(path, mine)
-    except OSError:
+    if not fs.rename(path, mine):
         # lock gone entirely: taken over AND released/re-broken
         raise LockLost(
             f"{path}: lock file vanished while held; critical section "
             "was not exclusive to the end"
-        ) from None
-    try:
-        with open(mine, "r") as f:
-            holder = json.load(f).get("token")
-    except (OSError, ValueError):
-        holder = None
+        )
+    holder = _token(fs.read(mine))
     if holder == token:
-        os.unlink(mine)
+        fs.delete(mine)
         return
-    # We renamed a SUCCESSOR's live lock aside: restore it (EEXIST-aware
-    # with a rename fallback for no-hardlink filesystems — _restore).
-    _restore(mine, path)
-    try:
-        os.unlink(mine)
-    except OSError:
-        pass
+    fs.restore(mine, path)  # we renamed a SUCCESSOR's live lock aside
+    fs.delete(mine)
     raise LockLost(
         f"{path}: lease was taken over while held (holder token "
         f"{holder!r}); critical section was not exclusive to the end"
     )
 
 
-# --------------------------------------------------------------------
-# Hadoop-FS-scoped lease: the same protocol (atomic-ish create-excl,
-# lease takeover by single-winner rename, token-verified release by
-# rename-then-verify) expressed through the Hadoop FileSystem API, so
-# the lock lives on the DATA path's filesystem (hdfs://, s3a://,
-# file://).  Primitive contracts are the store's own: HDFS create
-# (overwrite=false) is atomic at the NameNode and rename is atomic;
-# S3A needs fs.s3a.create.conditional.enabled (conditional PUT) for a
-# hard exclusion guarantee; file:// has a check-then-create window in
-# Hadoop's LocalFileSystem — use bare paths locally (the os.O_EXCL
-# fast path above) and file:// only to exercise this code path in
-# tests.  The restore primitive is rename (no hard links in the FS
-# API) — the documented object-store fallback of the local protocol.
-# --------------------------------------------------------------------
+class _LocalFS:
+    """The lock primitives on the local filesystem (``os.*``)."""
+
+    def mkdirs(self, d: str) -> None:
+        os.makedirs(d, exist_ok=True)
+
+    def create_excl(self, p: str, content: str) -> bool:
+        """True if this caller created ``p`` (``O_CREAT | O_EXCL``,
+        atomic on POSIX) and wrote ``content`` into it; False if it
+        existed."""
+        try:
+            fd = os.open(p, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+        except FileExistsError:
+            return False
+        try:
+            os.write(fd, content.encode("utf-8"))
+        finally:
+            os.close(fd)
+        return True
+
+    def read(self, p: str) -> str | None:
+        try:
+            with open(p, "rb") as f:
+                return f.read().decode("utf-8", "replace")
+        except OSError:
+            return None
+
+    def mtime(self, p: str) -> float | None:
+        try:
+            return os.stat(p).st_mtime
+        except OSError:
+            return None
+
+    def rename(self, src: str, dst: str) -> bool:
+        try:
+            os.rename(src, dst)
+            return True
+        except OSError:
+            return False
+
+    def restore(self, src: str, path: str) -> None:
+        """Put a mistakenly-renamed LIVE lock back at ``path``.
+
+        ``os.link`` is the preferred primitive: atomic, and fails with
+        EEXIST if yet another waiter already created a fresh lock (that
+        residual race is left to detect-at-release).  A NON-EEXIST link
+        failure means the primitive itself is unavailable (some network
+        filesystems have no hard links) — there, falling through would
+        delete the displaced holder's live lock outright; instead
+        restore by rename, which clobbers a just-created waiter lock in
+        the worst case (that waiter then detects the loss at its own
+        release — round-6 advice: strictly narrower than the delete)."""
+        try:
+            os.link(src, path)
+        except FileExistsError:
+            pass
+        except OSError:
+            self.rename(src, path)
+
+    def delete(self, p: str) -> None:
+        try:
+            os.unlink(p)
+        except OSError:
+            pass
 
 
 def _is_create_contention(e: Exception, lock_path: str = "") -> bool:
@@ -329,8 +340,16 @@ def _is_create_contention(e: Exception, lock_path: str = "") -> bool:
 
 
 class _HFS:
-    """Thin Hadoop FileSystem wrapper for the lock protocol (one
-    getFileSystem resolution per lock acquisition)."""
+    """The lock primitives through the Hadoop FileSystem API (one
+    getFileSystem resolution per lock acquisition).
+
+    Primitive contracts are the store's own: HDFS create
+    (overwrite=false) is atomic at the NameNode and rename is atomic;
+    S3A needs fs.s3a.create.conditional.enabled (conditional PUT) for a
+    hard exclusion guarantee.  The restore primitive is rename (no hard
+    links in the FS API) — the local protocol's no-hardlink fallback.
+    Hadoop's LocalFileSystem create is check-then-create, which is why
+    ``file:`` paths lock through ``_LocalFS`` instead."""
 
     def __init__(self, path: str):
         from pyspark.sql import SparkSession
@@ -348,8 +367,8 @@ class _HFS:
                 "filesystem, resolved via the session's Hadoop conf)"
             )
         self._jvm = spark._jvm
-        self._conf = spark._jsc.hadoopConfiguration()
-        self._fs = self._path(path).getFileSystem(self._conf)
+        conf = spark._jsc.hadoopConfiguration()
+        self._fs = self._path(path).getFileSystem(conf)
 
     def _path(self, p: str):
         return self._jvm.org.apache.hadoop.fs.Path(p)
@@ -362,7 +381,7 @@ class _HFS:
         FileSystem.create(overwrite=false)); False if it existed.
         Metadata is written into the same stream — a crash between
         create and write leaves an empty lock, handled by the mtime
-        grace branch exactly like the local protocol."""
+        grace branch of ``lease_state``."""
         try:
             out = self._fs.create(self._path(p), False)
         except Exception as e:  # FileAlreadyExistsException et al.
@@ -405,118 +424,11 @@ class _HFS:
         except Exception:
             return False
 
+    def restore(self, src: str, path: str) -> None:
+        self.rename(src, path)
+
     def delete(self, p: str) -> None:
         try:
             self._fs.delete(self._path(p), False)
         except Exception:
             pass
-
-
-@contextmanager
-def _hadoop_table_lock(
-    base_dir: str,
-    table: str,
-    lease_seconds: float,
-    timeout_seconds: float,
-    poll_seconds: float,
-):
-    fs = _HFS(base_dir)
-    fs.mkdirs(base_dir)
-    path = base_dir.rstrip("/") + f"/.{table}.lock"
-    token = uuid.uuid4().hex
-    meta = {
-        "token": token,
-        "pid": os.getpid(),
-        "host": socket.gethostname(),
-        "lease_seconds": float(lease_seconds),
-        "acquired_at": None,  # stamped below, per-attempt
-    }
-    deadline = time.monotonic() + timeout_seconds
-    while True:
-        meta["acquired_at"] = time.time()
-        if fs.create_excl(path, json.dumps(meta)):
-            break
-        _hadoop_maybe_take_over(fs, path, token, lease_seconds)
-        if time.monotonic() >= deadline:
-            raise LockTimeout(f"{path}: held for > {timeout_seconds}s")
-        time.sleep(poll_seconds)
-    try:
-        yield
-    except BaseException as primary:
-        try:
-            _hadoop_release(fs, path, token)
-        except BaseException as lost:  # noqa: BLE001 — see table_lock
-            if hasattr(primary, "add_note"):
-                primary.add_note(f"also, releasing the lock: {lost!r}")
-        raise
-    else:
-        _hadoop_release(fs, path, token)
-
-
-def _hadoop_maybe_take_over(
-    fs: _HFS, path: str, token: str, grace_seconds: float
-) -> None:
-    """Lease takeover, Hadoop flavor: rename the expired lock aside
-    (HDFS rename is atomic and fails when the source vanished, so one
-    concurrent renamer wins), re-verify the renamed token, restore a
-    mistakenly-displaced live lock by rename (the no-hardlink
-    fallback), and let the acquire loop retry."""
-    raw = fs.read(path)
-    expired_token = None
-    if raw:
-        try:
-            m = json.loads(raw)
-            age = time.time() - float(m.get("acquired_at", 0.0))
-            lease = float(m.get("lease_seconds", 0.0))
-            expired_token = m.get("token")
-        except ValueError:
-            mt = fs.mtime(path)
-            if mt is None or time.time() - mt <= grace_seconds:
-                return  # holder mid-write (or gone): wait it out
-            age, lease = 1.0, 0.0
-        if age <= lease:
-            return
-    else:
-        # empty lock file: a holder crashed between create and write,
-        # or is mid-write — the mtime grace branch, as local
-        mt = fs.mtime(path)
-        if mt is None or time.time() - mt <= grace_seconds:
-            return
-    stale = f"{path}.stale.{token}"
-    if not fs.rename(path, stale):
-        return  # another waiter won the break race
-    renamed = fs.read(stale)
-    renamed_token = None
-    if renamed:
-        try:
-            renamed_token = json.loads(renamed).get("token")
-        except ValueError:
-            renamed_token = None
-    if renamed_token is not None and renamed_token != expired_token:
-        fs.rename(stale, path)  # restore the live lock (best effort)
-    fs.delete(stale)
-
-
-def _hadoop_release(fs: _HFS, path: str, token: str) -> None:
-    mine = f"{path}.rel.{token}"
-    if not fs.rename(path, mine):
-        raise LockLost(
-            f"{path}: lock file vanished while held; critical section "
-            "was not exclusive to the end"
-        )
-    raw = fs.read(mine)
-    holder = None
-    if raw:
-        try:
-            holder = json.loads(raw).get("token")
-        except ValueError:
-            holder = None
-    if holder == token:
-        fs.delete(mine)
-        return
-    fs.rename(mine, path)  # restore the displaced successor
-    fs.delete(mine)
-    raise LockLost(
-        f"{path}: lease was taken over while held (holder token "
-        f"{holder!r}); critical section was not exclusive to the end"
-    )

@@ -18,9 +18,9 @@ Operator-by-operator parity:
 - AddPost + per-follower inserts (feed.go:115-127, worker.go:112-160)
                                                 -> one ``FeedStore.add_posts``
   per epoch from foreachBatch: the sink has the store's one write path
-- at-least-once dedup (kafka.go:92, cql:36 PK)  -> idempotent anti-joins in
-  that write (and dropDuplicatesWithinWatermark when a watermark column
-  is available)
+- at-least-once dedup (kafka.go:92, cql:36 PK)  -> that write's post_id
+  gate and feed anti-join (and dropDuplicatesWithinWatermark when a
+  watermark column is available)
 - graceful shutdown/drain (worker.go:66-70)     -> query.stop() +
   checkpoint resume
 """
@@ -78,7 +78,9 @@ def deduped_post_stream(
     one entry per post_id until event time passes the watermark, so state
     is bounded by the redelivery horizon, not the stream length.  The
     foreachBatch pipeline (run_fanout_pipeline) instead dedups at the sink
-    by anti-join, which also survives restarts with fresh checkpoints.
+    through ``FeedStore.add_posts``'s post_id gate (in-batch dropDuplicates
+    + anti-join against ``posts``), which also survives restarts with
+    fresh checkpoints.
     """
     return (
         decode_post_events(envelopes)
@@ -185,17 +187,17 @@ def run_fanout_pipeline(
     worker.go:66-70).
 
     ``foreachBatch`` hands each epoch to one plain batch write: the sink
-    decodes, validates, drops in-batch duplicates, anti-joins the
-    ``posts`` table, and passes what is left to ``FeedStore.add_posts``
-    (AddPost + fan-out, the reference's one write path).  That gives
-    exactly-once-per-epoch sink semantics on top of the source's
-    at-least-once replay: redelivered posts are dropped by the posts
-    anti-join and, for a replayed epoch whose feed write committed, by
-    ``fan_out``'s (user_id, post_id) anti-join — the Cassandra PK upsert
-    (cql:36) made explicit.  Known limit: ``add_posts`` runs its two
-    appends at once, so a crash that commits the ``posts`` append but
-    not the feed write leaves a replay that the posts anti-join empties;
-    those feed rows are not written.
+    decodes and passes the rows to ``FeedStore.add_posts`` (AddPost +
+    fan-out, the reference's one write path), whose post_id gate
+    validates, drops in-batch duplicates and anti-joins the ``posts``
+    table.  That gives exactly-once-per-epoch sink semantics on top of
+    the source's at-least-once replay: redelivered posts are dropped by
+    the posts anti-join and, for a replayed epoch whose feed write
+    committed, by ``fan_out``'s (user_id, post_id) anti-join — the
+    Cassandra PK upsert (cql:36) made explicit.  Known limit:
+    ``add_posts`` runs its two appends at once, so a crash that commits
+    the ``posts`` append but not the feed write leaves a replay that the
+    posts anti-join empties; those feed rows are not written.
 
     ``record_metrics=True`` appends one row per epoch to the store's
     ``pipeline_metrics`` table (epoch_id, n_envelopes, n_decoded, n_fresh)
@@ -213,16 +215,7 @@ def run_fanout_pipeline(
         decoded = decode_post_events(batch_df)
         if record_metrics:
             decoded = decoded.observe(obs_dec, F.count(F.lit(1)).alias("n"))
-        # Validate BEFORE dropDuplicates: if one epoch carries both a valid
-        # and an invalid row for the same post_id, dedup must choose among
-        # writable rows only — filtering afterwards would let an arbitrary
-        # kept invalid duplicate drop a valid post nondeterministically.
-        # n_fresh thereby also counts only rows that will actually be written.
-        posts = decoded.filter(feed_api.valid_length("body", 1, 1000))
-        fresh = posts.dropDuplicates(["post_id"]).join(
-            store.table("posts").select("post_id"), "post_id", "left_anti"
-        )
-        written = store.add_posts(fresh)
+        written = store.add_posts(decoded)
         if record_metrics:
             store.record_pipeline_metrics(
                 epoch_id, obs_in.get["n"], obs_dec.get["n"], written.count()

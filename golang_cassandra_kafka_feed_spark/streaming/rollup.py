@@ -51,11 +51,11 @@ Two operational guards (review-found):
   read-merge-write-move sequence in the repo's filesystem lease lock
   (feed/lock.py), so a repair job racing the stream on the same path
   becomes a bounded wait or a loud error, never a lost update.  The
-  lease lives on the ROLLUP PATH'S OWN filesystem: a URI path
-  (hdfs://, s3a://, file://) routes the lock through the Hadoop
-  FileSystem API (review-found: it used to be driver-local always,
-  silently protecting nothing for object-store paths), a bare local
-  path keeps the os.O_EXCL fast path.  Exclusion strength is the
+  lease lives on the ROLLUP PATH'S OWN filesystem: a remote URI path
+  (hdfs://, s3a://) routes the lock through the Hadoop FileSystem API
+  (a driver-local lock file would protect nothing for object-store
+  paths), a bare local path or ``file:`` URI locks with the local
+  os.O_EXCL create.  Exclusion strength is the
   store's create contract (atomic on HDFS; enable conditional PUT on
   S3A) — see feed/lock.py.
 

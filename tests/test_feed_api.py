@@ -318,6 +318,32 @@ def test_add_posts_input_reading_the_posts_table(spark, store, persisted):
         batch.unpersist()
 
 
+def test_add_posts_writes_each_post_id_once(spark, store):
+    """The ``posts`` primary key (cql:23-28) is a gate in ``add_posts``:
+    a post repeated within a batch, or sent again later, lands once in
+    ``posts`` and once per follower in the feed; a duplicate with an
+    invalid body never displaces the valid row."""
+    store.create_follows(
+        spark.createDataFrame(
+            [("u1", "a"), ("u2", "a")], "user_id string, followee_id string"
+        )
+    )
+    p1 = ("p1", "a", "hello", TS)
+    written = store.add_posts(
+        _posts(spark, [p1, p1, ("p2", "a", "", TS), ("p2", "a", "ok", TS)])
+    )
+    assert sorted((r.post_id, r.body) for r in written.collect()) == [
+        ("p1", "hello"), ("p2", "ok")
+    ]
+    assert store.add_posts(_posts(spark, [p1])).count() == 0
+    posts = sorted((r.post_id, r.body) for r in store.table("posts").collect())
+    assert posts == [("p1", "hello"), ("p2", "ok")]
+    feed = sorted(
+        (r.user_id, r.post_id) for r in store.table("feed_by_user").collect()
+    )
+    assert feed == [(u, p) for u in ("u1", "u2") for p in ("p1", "p2")]
+
+
 def test_record_pipeline_metrics_replay_keeps_one_row(spark, store):
     """foreachBatch may replay an epoch: recording the same epoch_id
     again (the replay sees n_fresh=0) leaves the first row alone."""

@@ -1,8 +1,10 @@
-"""Hadoop-FS-scoped table lock (feed/lock.py dispatch on URI scheme):
-the same lease protocol exercised through the Hadoop FileSystem API
-with ``file://`` posing as a remote filesystem (verdict-r8 ask #4 —
-the lock must live on the DATA path's filesystem, so an object-store
-rollup's ``lease=True`` is honest, not a driver-local no-op)."""
+"""URI-scoped table lock (feed/lock.py routes on the scheme): the lock
+must live on the DATA path's filesystem, so an object-store rollup's
+``lease=True`` is honest, not a driver-local no-op.
+A ``file:`` URI locks with the local primitives (atomic ``O_EXCL``
+create) next to its data; remote schemes go through the Hadoop
+FileSystem primitives (``_HFS``), whose contract is tested on a
+``file://`` path directly."""
 
 from __future__ import annotations
 
@@ -31,6 +33,43 @@ def test_uri_lock_creates_on_the_data_filesystem(spark, tmp_path):
         meta = json.loads(lock_file.read_text())
         assert meta["token"] and meta["lease_seconds"] == 300.0
     assert not lock_file.exists()  # released
+
+
+def test_hadoop_style_file_uri_locks_next_to_the_data(tmp_path, monkeypatch):
+    """Hadoop renders local paths as ``file:/x``: the lock goes into
+    ``/x``, not into a relative ``file:/x`` directory under the current
+    directory (which two processes in different directories would not
+    share)."""
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    with table_lock("file:" + str(tmp_path / "d"), "t"):
+        assert (tmp_path / "d" / ".t.lock").exists()
+    assert not (tmp_path / "d" / ".t.lock").exists()
+    assert list(cwd.iterdir()) == []
+
+
+def test_hadoop_primitives_on_a_file_uri(spark, tmp_path):
+    """The Hadoop FileSystem primitives the lock protocol runs on for
+    remote schemes, exercised on ``file://`` in one thread."""
+    from golang_cassandra_kafka_feed_spark.feed.lock import _HFS
+
+    base = _uri(tmp_path)
+    fs = _HFS(base)
+    p, q = base + "/.t.lock", base + "/.t.lock.aside"
+    assert fs.read(p) is None and fs.mtime(p) is None
+    assert fs.create_excl(p, '{"token": "a"}') is True
+    assert fs.create_excl(p, '{"token": "b"}') is False
+    assert fs.read(p) == '{"token": "a"}'
+    assert abs(fs.mtime(p) - time.time()) < 60
+    assert fs.rename(p, q) is True
+    assert fs.rename(p, q) is False  # the source is gone
+    assert fs.read(p) is None and fs.read(q) == '{"token": "a"}'
+    fs.restore(q, p)
+    assert fs.read(p) == '{"token": "a"}' and fs.read(q) is None
+    fs.delete(p)
+    assert fs.read(p) is None and fs.mtime(p) is None
+    fs.delete(p)  # deleting an absent file is a no-op
 
 
 def test_uri_lock_mutual_exclusion(spark, tmp_path):

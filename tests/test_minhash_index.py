@@ -33,7 +33,11 @@ def _corpus(spark, n=60, dup_every=4):
     """Synthetic corpus with planted near-dup families (families
     mutually DISTINCT, members near-identical): every
     ``dup_every``-th doc is a light mutation of its family head, so
-    near-dup pairs exist both inside and across any id-based split."""
+    near-dup pairs exist both inside and across any id-based split.
+
+    Tests scan the corpus many times (splits, builds, full-run twins);
+    the lazy ``localCheckpoint`` keeps its rows after the first scan
+    instead of re-converting the Python list on every one."""
     rows = []
     for i in range(n):
         fam = i - (i % dup_every)
@@ -48,7 +52,7 @@ def _corpus(spark, n=60, dup_every=4):
         else:
             text = base + f" variant tail {_w(i % dup_every)}"
         rows.append((i, text))
-    return spark.createDataFrame(rows, _SCHEMA)
+    return spark.createDataFrame(rows, _SCHEMA).localCheckpoint(eager=False)
 
 
 def _pairs(df):

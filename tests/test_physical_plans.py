@@ -58,7 +58,15 @@ def test_range_theta_join_is_not_cartesian(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_declared_queries_have_no_python_udfs(spark, sf_dir):
+@pytest.fixture(scope="module")
+def declared(spark, sf_dir):
+    """Every declared query built once for the two registry-wide checks
+    below: the build is most of each check's time (13-25 s on 4 vCPUs),
+    and neither check needs a fresh one."""
+    return {name: fn(spark, sf_dir) for name, fn in QUERIES.items()}
+
+
+def test_declared_queries_have_no_python_udfs(declared):
     """Row-at-a-time Python UDFs (BatchEvalPython) are banned in EVERY
     declared plan; Arrow-vectorized stages (ArrowEvalPython /
     mapInPandas) are permitted only on the documented vectorized
@@ -92,16 +100,14 @@ def test_declared_queries_have_no_python_udfs(spark, sf_dir):
         "q114_index_retention",
         "q117_index_expiry",
     }
-    for name in QUERIES:
-        plan = _plan(spark, sf_dir, name)
+    for name, df in declared.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
         assert "BatchEvalPython" not in plan, name
         if name not in arrow_ok:
             assert "ArrowEvalPython" not in plan, name
 
 
-def test_declared_queries_emit_no_fetch_sensitive_output_types(
-    spark, sf_dir
-):
+def test_declared_queries_emit_no_fetch_sensitive_output_types(declared):
     """Spark-side twin of tests/test_oracle_dtypes.py (the q92 HUGEINT
     lesson), one registry pass for both banned classes:
 
@@ -117,8 +123,7 @@ def test_declared_queries_emit_no_fetch_sensitive_output_types(
       12:00 LTZ literal as 07:00, NTZ as 12:00).  Timestamp outputs
       must be TIMESTAMP_NTZ (q89 is the one carrier today)."""
     offenders = {}
-    for name, fn in QUERIES.items():
-        df = fn(spark, sf_dir)
+    for name, df in declared.items():
         bad = [
             (f.name, f.dataType.simpleString())
             for f in df.schema.fields
