@@ -18,10 +18,9 @@ tables, batch-native where the reference is row-at-a-time:
 
 Scale design: the feed sink is hash-partitioned into user buckets
 (``user_bucket = pmod(hash(user_id), n)``) so a single-user feed read
-prunes to one bucket directory; within buckets rows are written sorted by
-(created_at DESC) to approximate the reference's clustering order
-(cql:36-37) — readers still apply TakeOrderedAndProject, which is cheap on
-pruned input.
+prunes to one bucket directory.  Files carry no within-bucket order;
+readers get the reference's clustering order (cql:36-37) from
+TakeOrderedAndProject, which is cheap on pruned input.
 """
 
 from __future__ import annotations
@@ -104,25 +103,19 @@ _STORED = dict(
 )
 
 
-def feed_rows(
-    posts: DataFrame, follows: DataFrame, broadcast: bool | None = None
-) -> DataFrame:
+def feed_rows(posts: DataFrame, follows: DataFrame) -> DataFrame:
     """posts ⋈ follows ON author_id = followee_id: one feed row per
     (post, follower) (worker.go:138-154; invariant mock_kafka.go:22-47).
     Works on batch and streaming ``posts`` alike.
 
-    By default the planner chooses the join strategy from the follows
-    table's size: below autoBroadcastJoinThreshold it broadcasts, a
-    100 TB follower graph shuffles on the equi key.  ``broadcast=True``
-    forces the hint (small-dim case pinned regardless of stats);
-    forcing it unconditionally would OOM on a huge graph, which is why
-    it is an opt-in, not the default.
+    The planner chooses the join strategy from the follows table's size:
+    below autoBroadcastJoinThreshold it broadcasts, a 100 TB follower
+    graph shuffles on the equi key.
     """
-    right = F.broadcast(follows) if broadcast else follows
     return (
         posts.alias("p")
         .join(
-            right.alias("f"),
+            follows.alias("f"),
             F.col("p.author_id") == F.col("f.followee_id"),
             "inner",
         )
@@ -391,7 +384,6 @@ class FeedStore:
         try:
             (
                 bucketed.repartition(self.feed_buckets, "user_bucket")
-                .sortWithinPartitions(F.desc("created_at"), F.desc("post_id"))
                 .write.mode("append")
                 .partitionBy("user_bucket")
                 .parquet(self._path("feed_by_user"))
@@ -453,8 +445,8 @@ class FeedStore:
         Every micro-batch append adds files; over many epochs reads pay
         per-file open costs and lose row-group locality.  Compaction
         rewrites the table once: the feed keeps its user-bucket
-        partitioning and per-bucket newest-first sort (cql:36-37 layout),
-        other tables coalesce by size.  Returns the file count after.
+        partitioning, other tables coalesce by size.  Returns the file
+        count after.
 
         Staged write + rename-aside swap (write to .compact, move the
         live dir to .old, move staging in, drop .old): committed data
@@ -486,7 +478,10 @@ class FeedStore:
     def _compact_locked(self, table: str) -> int:
         import shutil
 
-        path = self._path(table)
+        from golang_cassandra_kafka_feed_spark.feed.lock import _filesystem
+
+        # the swap runs on the local path (a ``file:`` base stripped)
+        path = os.path.join(_filesystem(self.base)[1], table)
         old = path + ".old"
         # crash recovery: a previous compact died between the two
         # renames — the .old copy is the committed table; restore it.
@@ -501,7 +496,6 @@ class FeedStore:
         if table == "feed_by_user":
             (
                 df.repartition(self.feed_buckets, "user_bucket")
-                .sortWithinPartitions(F.desc("created_at"), F.desc("post_id"))
                 .write.partitionBy("user_bucket")
                 .parquet(staging)
             )

@@ -32,10 +32,7 @@ from golang_cassandra_kafka_feed_spark.operators.textstats import (
     tokens,
     winnowing_fingerprints,
 )
-from golang_cassandra_kafka_feed_spark.operators.skew import (
-    salted_count,
-    salted_join,
-)
+from golang_cassandra_kafka_feed_spark.operators.skew import salted_join
 from golang_cassandra_kafka_feed_spark.operators.similarity import ivf_topk
 from golang_cassandra_kafka_feed_spark.operators.sketches import (
     approx_distinct,
@@ -46,7 +43,6 @@ from golang_cassandra_kafka_feed_spark.operators.sketches import (
 from golang_cassandra_kafka_feed_spark.operators.dedup import line_dedup
 from golang_cassandra_kafka_feed_spark.operators.selection import (
     dsir_importance,
-    dsir_resample,
     weighted_bottomk,
 )
 from golang_cassandra_kafka_feed_spark.operators.textstats import (
@@ -97,14 +93,12 @@ __all__ = [
     "quality_features",
     "winnowing_fingerprints",
     "salted_join",
-    "salted_count",
     "ivf_topk",
     "approx_distinct",
     "approx_percentiles",
     "bloom_semi_filter",
     "line_dedup",
     "dsir_importance",
-    "dsir_resample",
     "weighted_bottomk",
     "typicality_buckets",
     "asof_nearest",

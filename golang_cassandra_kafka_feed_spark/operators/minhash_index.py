@@ -399,17 +399,12 @@ def _heal(live: str) -> None:
         os.rename(old, live)
 
 
-def _parquet_file_count(spark: SparkSession, path: str) -> int:
-    return len(spark.read.parquet(path).inputFiles())
-
-
 def _rewrite_index_sides(spark: SparkSession, path: str, transform) -> None:
     """Shared maintenance pass: heal any crashed prior swap on BOTH
     sides first, then staged-rewrite bands (bucket_mod layout
     preserved) and shingles through ``transform(df, side)`` and swap
     each in.  One place owns the heal/debris/stage/swap sequence so
-    compact and delete cannot drift apart (review-found duplication,
-    round 7).  Both heals happen BEFORE any transform runs because a
+    delete and expire cannot drift apart.  Both heals happen BEFORE any transform runs because a
     transform for one side may READ the other (expire's bands pass
     resolves doomed ids from the live shingles) — healing lazily
     per-iteration left that cross-read pointing at a missing dir after
@@ -437,42 +432,14 @@ def _rewrite_index_sides(spark: SparkSession, path: str, transform) -> None:
         _swap_in(live, staging)
 
 
-def compact_minhash_index(spark: SparkSession, path: str) -> dict:
-    """Heal append small-files buildup: every ``append_to_minhash_index``
-    adds O(bucket_mods) files, so a daily-crawl index accumulates
-    days x mods files and the pruned incremental reads pay per-file
-    open costs.  Rewrites bands (bucket_mod layout preserved, one
-    shuffle on bucket_mod) and shingles (size-coalesced) via staged
-    write + rename-aside swap; content is unchanged, so a crash
-    leaving one side old and one side new is still a consistent index.
-    Returns {'files_before': n, 'files_after': m}."""
-    bands_p, sh_p = _p(path, "bands"), _p(path, "shingles")
-    _heal(bands_p)
-    _heal(sh_p)
-    before = _parquet_file_count(spark, bands_p) + _parquet_file_count(
-        spark, sh_p
-    )
-
-    def compacting(df: DataFrame, side: str) -> DataFrame:
-        if side == "shingles":
-            return df.coalesce(max(1, df.count() // 2_000_000 + 1))
-        return df  # bands get the layout repartition in the rewriter
-
-    _rewrite_index_sides(spark, path, compacting)
-    after = _parquet_file_count(spark, bands_p) + _parquet_file_count(
-        spark, sh_p
-    )
-    return {"files_before": before, "files_after": after}
-
-
 def delete_from_minhash_index(
     spark: SparkSession, path: str, ids: DataFrame, id_col: str = "doc_id"
 ) -> None:
     """Remove documents from the index — the retention /
     right-to-erasure path a long-lived 100 TB index needs.  Rewrites
     bands and shingles with an anti-join against ``ids`` (broadcast
-    when small; Spark decides) through the same staged swap as
-    compaction.  Either half-completed state is semantically safe: a
+    when small; Spark decides) through the staged swap
+    (``_rewrite_index_sides``).  Either half-completed state is semantically safe: a
     doc deleted from bands is never a candidate; one deleted from
     shingles only cannot verify, so its pairs vanish either way.
 

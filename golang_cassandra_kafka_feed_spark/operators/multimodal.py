@@ -447,29 +447,3 @@ def resize_media(
             )
 
     return media.mapInPandas(_resize, RESIZED_SCHEMA)
-
-
-def frame_sample(
-    media: DataFrame, every_n_bytes: int = 64, max_frames: int = 4
-) -> DataFrame:
-    """'Frame sampling' over the opaque payload (stand-in for video frame
-    extraction): deterministic byte-offset slices as one row per frame.
-    Pure column work — explode of a computed offset sequence, no UDF."""
-    return media.select(
-        "doc_id",
-        "content_type",
-        F.posexplode(
-            F.transform(
-                F.sequence(
-                    F.lit(0),
-                    F.least(
-                        F.lit(max_frames - 1),
-                        (F.col("byte_len") / every_n_bytes).cast("long"),
-                    ),
-                ),
-                lambda i: F.substring(
-                    F.col("payload").cast("string"), i * every_n_bytes + 1, 16
-                ),
-            )
-        ).alias("frame_idx", "frame_preview"),
-    )

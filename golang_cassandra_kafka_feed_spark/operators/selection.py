@@ -67,26 +67,6 @@ def _bucket(
     return h % n_buckets
 
 
-def dsir_features(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_buckets: int = DSIR_N_BUCKETS,
-    salt: str = DSIR_SALT,
-    hasher: str = "md5",
-) -> DataFrame:
-    """(id, bucket) — one row per word-bigram instance, hashed into
-    ``n_buckets`` feature buckets.  The q70/q73 shared tokenizer feeds
-    the bigram stream (textstats.bigram_array)."""
-    return df.select(
-        F.col(id_col),
-        F.explode(bigram_array(text_col)).alias("__bg"),
-    ).select(
-        id_col,
-        _bucket(F.col("__bg"), n_buckets, salt, hasher).alias("bucket"),
-    )
-
-
 def dsir_bucket_ratios(
     df: DataFrame,
     target: Column,
@@ -369,39 +349,6 @@ def dsir_importance(
             ).alias("n_boost"),
             final.alias("dsir_score"),
         )
-    )
-
-
-def dsir_resample(
-    df: DataFrame,
-    target: Column,
-    k: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_buckets: int = DSIR_N_BUCKETS,
-    salt: str = DSIR_SALT,
-) -> DataFrame:
-    """The full DSIR pipeline: importance-weight every raw document
-    against the target subcorpus (dsir_importance), then draw k docs
-    with probability proportional to weight via the deterministic
-    weighted bottom-k sampler — the paper's importance-resampling step
-    (it uses Gumbel top-k; bottom-k with rank u/w is the same
-    weight-proportional family, hash-seeded so the sample is
-    reproducible and mergeable).
-
-    Zero-weight guard: docs with no features score 0 and are excluded
-    before sampling (u/0 would be +inf, i.e. never sampled — the filter
-    just makes that explicit).
-
-    100 TB posture: two corpus scans (ratio build + scoring, neither
-    shuffles the doc side — see dsir_importance) and a
-    TakeOrderedAndProject for the draw."""
-    scored = dsir_importance(
-        df, target, text_col=text_col, id_col=id_col,
-        n_buckets=n_buckets, salt=salt,
-    ).filter(F.col("dsir_score") > 0)
-    return weighted_bottomk(
-        scored, "dsir_score", k, id_col=id_col, salt=salt + ":resample"
     )
 
 

@@ -1,14 +1,14 @@
-"""Skew mitigation: salted joins and aggregations.
+"""Skew mitigation: salted joins.
 
 AQE's skew-join splitting (enabled in session.py) handles most skew at
-runtime; explicit salting remains the tool when (a) a *broadcast* is too
+runtime; explicit salting remains the tool when a *broadcast* is too
 big but a handful of keys dominate (the celebrity-author fan-out:
 followers_by_followee with a viral followee is exactly this shape,
-reference worker.go:128), or (b) the aggregation state itself is hot.
+reference worker.go:128).
 
 Salting trades one shuffle for bounded per-task input: the skewed side
 gets a random-ish salt in [0, salt); the other side is replicated salt
-times.  Equivalence to the unsalted operation is exact (asserted in
+times.  Equivalence to the unsalted join is exact (asserted in
 tests/test_skew.py).
 """
 
@@ -61,23 +61,3 @@ def salted_join(
         "__salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
     )
     return s.join(o, [*on, "__salt"], how).drop("__salt")
-
-
-def salted_count(
-    df: DataFrame,
-    keys: Sequence[str],
-    salt: int = 8,
-    deterministic_by: str | None = None,
-) -> DataFrame:
-    """Two-level aggregation for hot grouping keys: count per (key, salt)
-    partials, then merge partials per key.  Spark's hash aggregate already
-    does map-side partials; explicit salting additionally bounds the
-    *reduce-side* state per task when one key dominates a partition."""
-    partial = (
-        df.withColumn("__salt", _salt_col(df, salt, deterministic_by))
-        .groupBy(*keys, "__salt")
-        .agg(F.count("*").alias("__partial"))
-    )
-    return partial.groupBy(*keys).agg(
-        F.sum("__partial").cast("long").alias("n")
-    )

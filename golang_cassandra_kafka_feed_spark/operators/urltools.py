@@ -174,67 +174,6 @@ def canonicalize_url(url: str | Column) -> Column:
     )
 
 
-def url_host(url: str | Column) -> Column:
-    """The lowercased host of ``url`` (userinfo and port stripped),
-    empty string when the URL has no authority — the input
-    ``domain_block_matches`` / ``blocklist_filter_urls`` expect."""
-    u = F.col(url) if isinstance(url, str) else url
-    auth = F.regexp_extract(u, URL_AUTHORITY_RE, 1)
-    hostport = F.regexp_extract(auth, AUTH_HOSTPORT_RE, 1)
-    return F.lower(F.regexp_extract(hostport, AUTH_HOST_RE, 1))
-
-
-def blocklist_filter_urls(df, rules, url_col: str = "url"):
-    """Drop rows whose URL's host matches any of ``rules`` (a bounded
-    Python sequence of domain entries — blocklists are curated config)
-    on a dot-label boundary.  The rules fold into ONE literal array
-    bound once in the plan and the verdict is a per-row
-    ``exists(host_suffixes(host), contains)`` — pure stateless
-    projection, so it composes into STREAMING plans (no stream-static
-    join, no state) as well as batch.  For rule sets past ~10^4
-    entries use the DataFrame forms above.
-
-    Only a PROVABLE match drops a row: a NULL url (e.g. an upstream
-    canonicalizer's garbage quarantine) or a host-less string is KEPT
-    — blocking is this operator's only mandate; garbage policy belongs
-    to the caller (coalesce pins the three-valued ``exists`` so NULL
-    cannot silently leak into the filter).
-
-    Scheme-less spellings (review-found): ``site7.example.com/x`` has
-    no authority per URL_AUTHORITY_RE, so ``url_host`` yields '' and a
-    banned host would slip through the host-less KEEP rule.  When the
-    string has no scheme, the pre-``/?#`` prefix is treated as the
-    host candidate (userinfo and port stripped the same way as a real
-    authority) — a blocklist must err toward matching every plausible
-    spelling of a banned host, including ones a later canonicalizer
-    would quarantine."""
-    u = F.col(url_col) if isinstance(url_col, str) else url_col
-    # '(?://)?'' admits protocol-relative spellings ('//banned.com/x'):
-    # with a bare '^([^/?#]+)' the leading '//' matches nothing and the
-    # banned host would be KEPT under the host-less rule (review-found).
-    # A SINGLE leading '/' stays unmatched — '/about/x' is a rooted
-    # path, not a host spelling.
-    schemeless_prefix = F.regexp_extract(u, "^(?://)?([^/?#]+)", 1)
-    fallback_host = F.lower(
-        F.regexp_extract(
-            F.regexp_extract(schemeless_prefix, AUTH_HOSTPORT_RE, 1),
-            AUTH_HOST_RE,
-            1,
-        )
-    )
-    has_scheme = F.regexp_extract(u, URL_SCHEME_RE, 1) != ""
-    primary = url_host(u)
-    host = F.when(
-        has_scheme | (primary != ""), primary
-    ).otherwise(fallback_host)
-    rules_arr = F.array(*(F.lit(r) for r in rules))
-    blocked = F.exists(
-        host_suffixes(host),
-        lambda s: F.array_contains(rules_arr, s),
-    )
-    return df.filter(~F.coalesce(blocked, F.lit(False)))
-
-
 def host_suffixes(host: str | Column) -> Column:
     """Every dot-boundary suffix of ``host``, most-specific first:
     ``cdn.media.site7.example.com`` →
@@ -306,48 +245,6 @@ def domain_block_matches(
         )
     )["r"].alias(rule_col)
     return hit.groupBy(id_col, host_col).agg(best)
-
-
-def domain_blocklist_filter(
-    df,
-    rules_df,
-    host_col: str = "host",
-    rule_col: str = "rule",
-):
-    """The keep-side twin of ``domain_block_matches``: rows of ``df``
-    whose host matches NO blocklist entry — the corpus side never
-    shuffles.  The rules collapse to a one-row array DataFrame
-    (``collect_list`` — a blocklist is bounded by curation, not by
-    data scale; its SinglePartition gather is the only exchange in
-    the plan) broadcast-cross-joined onto the corpus (the q118
-    broadcast-codebook idiom), and the verdict is a per-row
-    ``exists(suffixes, s -> array_contains(rules, s))`` — pure
-    projection, embarrassingly parallel.
-
-    Cost note: ``array_contains`` scans the rule array per suffix, so
-    a row costs O(L * |rules|) comparisons.  That is the right trade
-    up to ~10^4 rules (the common case); beyond that, switch to the
-    explode + broadcast-hash-join mechanism of
-    ``domain_block_matches`` and anti-join the ids — same semantics,
-    hash-probe cost, one regroup shuffle.
-    """
-    rules_arr = F.broadcast(
-        rules_df.agg(F.collect_list(rule_col).alias("__rules"))
-    )
-    blocked = F.exists(
-        host_suffixes(host_col),
-        lambda s: F.array_contains(F.col("__rules"), s),
-    )
-    # coalesce pins three-valued logic: a NULL host makes `exists`
-    # NULL and a bare `~NULL` filter would silently DROP the row —
-    # but only a PROVABLE match may drop (domain_block_matches never
-    # matches a NULL host, and the complement invariant the fuzzer
-    # asserts requires the filter to agree; review-found)
-    return (
-        df.crossJoin(rules_arr)
-        .filter(~F.coalesce(blocked, F.lit(False)))
-        .drop("__rules")
-    )
 
 
 def duckdb_canonicalize_sql(url_expr: str) -> str:

@@ -85,25 +85,6 @@ def read_csv(
     )
 
 
-def write_parquet(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str] | None = None,
-    sort_within: list[str] | None = None,
-) -> None:
-    """Columnar dataset writer.  ``partition_by`` lays the dataset out
-    hive-style so reads with a partition-key predicate scan only the
-    matching directories (PartitionFilters — asserted in test_sinks.py);
-    ``sort_within`` sorts rows inside each file so min/max row-group
-    stats make point/range predicates on those columns skip row groups
-    (the same layout FeedStore uses for its per-user feed buckets)."""
-    out = df.sortWithinPartitions(*sort_within) if sort_within else df
-    w = out.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
-
-
 def write_json_lines(df: DataFrame, path: str) -> None:
     df.write.mode("overwrite").json(path)
 

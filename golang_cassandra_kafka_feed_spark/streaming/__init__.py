@@ -1,21 +1,12 @@
-from golang_cassandra_kafka_feed_spark.streaming.ingest import (
-    dedup_documents_stream,
-    dedup_urls_stream,
-)
 from golang_cassandra_kafka_feed_spark.streaming.fanout import (
     decode_post_events,
     deduped_post_stream,
-    fanout_stream,
-    fanout_stream_stream,
     run_fanout_pipeline,
 )
 from golang_cassandra_kafka_feed_spark.streaming.rollup import (
     read_rollup,
     rollup_foreach_batch,
     rollup_partials,
-)
-from golang_cassandra_kafka_feed_spark.streaming.stateful import (
-    sessionize_with_state,
 )
 from golang_cassandra_kafka_feed_spark.streaming.windows import (
     session_counts_stream,
@@ -24,16 +15,11 @@ from golang_cassandra_kafka_feed_spark.streaming.windows import (
 
 __all__ = [
     "decode_post_events",
-    "dedup_documents_stream",
-    "dedup_urls_stream",
     "deduped_post_stream",
-    "fanout_stream",
-    "fanout_stream_stream",
     "read_rollup",
     "rollup_foreach_batch",
     "rollup_partials",
     "run_fanout_pipeline",
     "tumbling_counts_stream",
     "session_counts_stream",
-    "sessionize_with_state",
 ]

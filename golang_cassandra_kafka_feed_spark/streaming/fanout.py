@@ -13,8 +13,8 @@ Operator-by-operator parity:
 - route on key 'post_created' (httphandlers.go:155-158) -> key filter
 - JSON decode, malformed dropped (worker.go:122-126)    -> from_json
   (PERMISSIVE null struct) + isNotNull filter
-- fan-out join (worker.go:128,138-154)          -> stream-static equi-join
-  against follows, broadcast when small (``feed_api.feed_rows``)
+- fan-out join (worker.go:128,138-154)          -> per-epoch equi-join
+  against follows, broadcast when small (``feed.api.feed_rows``)
 - AddPost + per-follower inserts (feed.go:115-127, worker.go:112-160)
                                                 -> one ``FeedStore.add_posts``
   per epoch from foreachBatch: the sink has the store's one write path
@@ -30,7 +30,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from golang_cassandra_kafka_feed_spark.feed import api as feed_api
 from golang_cassandra_kafka_feed_spark.sources.kafka import POST_EVENT_SCHEMA
 
 
@@ -87,85 +86,6 @@ def deduped_post_stream(
         .withWatermark("created_at", watermark)
         .dropDuplicatesWithinWatermark(["post_id"])
     )
-
-
-def fanout_stream(
-    post_events: DataFrame,
-    follows: DataFrame,
-    broadcast: bool | None = None,
-) -> DataFrame:
-    """Stream-static equi-join: one feed row per (post, follower), the
-    same projection ``FeedStore.fan_out`` writes (``feed_api.feed_rows``).
-
-    ``follows`` is static per micro-batch and Spark re-plans the join
-    every batch, so the planner's size-based strategy choice (or the
-    ``broadcast=True`` hint) is made afresh each batch.
-    """
-    return feed_api.feed_rows(post_events, follows, broadcast)
-
-
-def fanout_stream_stream(
-    post_events: DataFrame,
-    follow_events: DataFrame,
-    post_watermark: str = "10 minutes",
-    follow_watermark: str = "1 hour",
-    lookback: str = "1 hour",
-) -> DataFrame:
-    """Stream-STREAM fan-out: posts join follow edges that arrived in
-    ``[created_at - lookback, created_at]`` — fan-out against a LIVE
-    follow graph instead of ``fanout_stream``'s static-per-batch table.
-
-    The reference has no streaming follow source (follows land via the
-    HTTP path, httphandlers.go:60-99; only posts flow through Kafka,
-    worker.go:55-66) — this is extension surface for the case where the
-    edge feed itself is a stream.
-
-    State-boundedness is the design constraint Spark imposes on
-    stream-stream inner joins: the equi key (followee_id = author_id)
-    plus the two-sided event-time range lets the state store evict —
-    follow edges age out once the post watermark passes
-    ``followed_at + lookback``, post rows once the follow watermark
-    passes ``created_at``.  An UNBOUNDED "all past followers" join
-    cannot evict the follow side; production composes this operator
-    (recent edges, live) with the batch/static fan-out over the stored
-    graph (fanout_stream) — the classic lambda split, and at 100 TB the
-    only shape whose state does not grow with the graph.
-
-    ``follow_events``: (user_id, followee_id, followed_at).
-    """
-    p = post_events.withWatermark("created_at", post_watermark)
-    f = follow_events.withWatermark("followed_at", follow_watermark)
-    return p.join(
-        f,
-        (p.author_id == f.followee_id)
-        & (f.followed_at <= p.created_at)
-        & (
-            f.followed_at
-            >= p.created_at - F.expr(f"INTERVAL {_as_interval(lookback)}")
-        ),
-        "inner",
-    ).select(
-        f.user_id.alias("user_id"),
-        "post_id",
-        "author_id",
-        "body",
-        "created_at",
-        "followed_at",
-    )
-
-
-def _as_interval(spec: str) -> str:
-    """Validate a '<n> <unit>' duration for safe INTERVAL interpolation."""
-    parts = spec.strip().split()
-    units = {
-        "second", "seconds", "minute", "minutes", "hour", "hours",
-        "day", "days",
-    }
-    if len(parts) != 2 or not parts[0].isdigit() or parts[1] not in units:
-        raise ValueError(
-            f"lookback must look like '30 minutes', got {spec!r}"
-        )
-    return f"{parts[0]} {parts[1]}"
 
 
 def run_fanout_pipeline(

@@ -174,6 +174,35 @@ def test_compact_shrinks_files_preserves_data(spark, store):
     assert store.table("posts").count() == 5
 
 
+def test_compact_on_a_file_uri_base(spark, tmp_path):
+    """A ``file://`` base (which the table lease accepts) compacts the
+    same table a bare path does: the swap runs on the local path."""
+    import os
+
+    local = tmp_path / "feedstore"
+    store = FeedStore(spark, f"file://{local}", feed_buckets=4)
+    store.create_follows(
+        spark.createDataFrame([("u1", "a")], "user_id string, followee_id string")
+    )
+    for i in range(3):
+        store.add_posts(
+            _posts(spark, [(f"p{i}", "a", "b", TS + dt.timedelta(minutes=i))])
+        )
+
+    def feed_files():
+        return sum(
+            1 for _, _, fs in os.walk(local / "feed_by_user")
+            for f in fs if f.endswith(".parquet")
+        )
+
+    files_before = feed_files()
+    files_after = store.compact("feed_by_user")
+    assert 1 <= files_after == feed_files() < files_before
+    assert [r.post_id for r in store.get_feed("u1").collect()] == [
+        "p2", "p1", "p0"
+    ]
+
+
 def test_user_id_by_username(spark, store):
     store.create_users(_users(spark, ["alice"]))
     assert store.user_id_by_username("alice").count() == 1

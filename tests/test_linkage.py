@@ -102,54 +102,6 @@ def test_multi_pass_blocking_recovers_suffix_corruption(spark):
     assert got == {(100, 1, 1), (101, 1, 1)}
 
 
-def test_url_blocklist_filter_keeps_null_and_hostless(spark):
-    from golang_cassandra_kafka_feed_spark.operators.urltools import (
-        blocklist_filter_urls,
-    )
-
-    df = spark.createDataFrame(
-        [(1, "https://a.example.org/x"), (2, "https://keep.com/y"),
-         (3, None), (4, "no-scheme-here")],
-        "id bigint, url string",
-    )
-    kept = blocklist_filter_urls(df, ("example.org",))
-    assert sorted(r.id for r in kept.collect()) == [2, 3, 4]
-
-
-def test_url_blocklist_filter_blocks_schemeless_spellings(spark):
-    """A banned host spelled WITHOUT a scheme must not bypass the
-    blocklist through the no-authority branch (review-found): the
-    pre-'/?#' prefix is the host candidate, with userinfo and port
-    stripped like a real authority.  Non-matching scheme-less text is
-    still kept — only provable matches drop."""
-    from golang_cassandra_kafka_feed_spark.operators.urltools import (
-        blocklist_filter_urls,
-    )
-
-    df = spark.createDataFrame(
-        [
-            (1, "site7.example.com/x"),
-            (2, "user@sub.example.org:8080/p?q=1"),
-            (3, "EXAMPLE.ORG"),
-            (4, "notexample.org/x"),
-            (5, "keep.com/y"),
-            (6, "https://example.org/still-blocked"),
-            # protocol-relative spelling (review-found r9): '//' strips
-            # before host extraction, so the banned host is BLOCKED
-            (7, "//example.org/x"),
-            (8, "//keep.com/z"),
-            # a SINGLE leading '/' is a rooted path, not a host — kept
-            # even when the first segment spells a banned name
-            (9, "/example.org/rooted-path"),
-        ],
-        "id bigint, url string",
-    )
-    kept = blocklist_filter_urls(
-        df, ("example.org", "site7.example.com")
-    )
-    assert sorted(r.id for r in kept.collect()) == [4, 5, 8, 9]
-
-
 def test_suffix_block_key_short_names_use_whole_string(spark):
     """Names shorter than k block on the whole string (review-found:
     the unguarded substring's pos<=0 edge semantics gave inconsistent

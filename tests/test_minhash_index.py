@@ -12,7 +12,6 @@ from golang_cassandra_kafka_feed_spark.operators.dedup import (
 from golang_cassandra_kafka_feed_spark.operators.minhash_index import (
     append_to_minhash_index,
     build_minhash_index,
-    compact_minhash_index,
     delete_from_minhash_index,
     ensure_minhash_index,
     minhash_near_duplicates_incremental,
@@ -210,30 +209,6 @@ def test_build_write_shape_is_mod_aligned(spark, tmp_path):
     assert all(d.startswith("bucket_mod=") for d in dirs)
 
 
-def test_compact_heals_append_buildup_identically(spark, tmp_path):
-    """After several appends the index answers identically but from
-    far fewer files; compaction shrinks the file count and changes
-    NOTHING about the emitted pairs."""
-    full = _corpus(spark, n=80)
-    idx = str(tmp_path / "idx")
-    build_minhash_index(full.filter("doc_id % 4 = 1"), idx)
-    for r in (2, 3):
-        append_to_minhash_index(full.filter(f"doc_id % 4 = {r}"), idx)
-    delta = full.filter("doc_id % 4 = 0")
-    before_pairs = _pairs(
-        minhash_near_duplicates_incremental(delta, idx, threshold=0.5)
-    )
-
-    stats = compact_minhash_index(spark, idx)
-    assert stats["files_after"] < stats["files_before"]
-    assert _pairs(
-        minhash_near_duplicates_incremental(delta, idx, threshold=0.5)
-    ) == before_pairs
-    assert before_pairs, "planted families must collide"
-    # meta (the commit marker) is untouched by maintenance
-    assert read_index_meta(spark, idx)["num_hashes"] == 64
-
-
 def test_delete_equals_rebuild_without_the_ids(spark, tmp_path):
     """Deletion is the retention path: after deleting a family's
     corpus ids, incremental answers match a FRESH index built from
@@ -266,8 +241,9 @@ def test_delete_equals_rebuild_without_the_ids(spark, tmp_path):
 
 def test_maintenance_heals_a_crashed_swap(spark, tmp_path):
     """A swap that died between its two renames leaves live missing +
-    .old present; the next maintenance call restores the committed
-    copy before operating (the FeedStore.compact recovery contract)."""
+    .old present; the next maintenance call (a delete of an id the
+    index does not hold) restores the committed copy before operating
+    (the FeedStore.compact recovery contract)."""
     import os
 
     idx = str(tmp_path / "idx")
@@ -280,7 +256,9 @@ def test_maintenance_heals_a_crashed_swap(spark, tmp_path):
 
     bands = str(tmp_path / "idx" / "bands")
     os.rename(bands, bands + ".old")
-    compact_minhash_index(spark, idx)
+    delete_from_minhash_index(
+        spark, idx, spark.createDataFrame([(-1,)], "doc_id long")
+    )
     assert os.path.exists(bands) and not os.path.exists(bands + ".old")
     assert _pairs(
         minhash_near_duplicates_incremental(delta, idx, threshold=0.5)

@@ -7,14 +7,12 @@ from __future__ import annotations
 import hashlib
 
 import pytest
-from pyspark.sql import functions as F
 
 from golang_cassandra_kafka_feed_spark.operators.multimodal import (
     FEATURE_SCHEMA,
     attach_binary_payload,
     decode_media,
     fake_feature_extract,
-    frame_sample,
 )
 from golang_cassandra_kafka_feed_spark.sources.testdata import load_table
 
@@ -180,14 +178,6 @@ def test_resize_media_real_bmp_nearest_neighbor(spark):
     )
     thumb = bytes(resize_media(media, width=2, height=2).first().thumbnail)
     assert thumb == bytes([0, 255, 0, 255])
-
-
-def test_frame_sample_shape(media):
-    frames = frame_sample(media, every_n_bytes=64, max_frames=4)
-    agg = frames.groupBy("doc_id").agg(F.count("*").alias("n")).collect()
-    assert all(1 <= r.n <= 4 for r in agg)
-    first = frames.filter(F.col("frame_idx") == 0).count()
-    assert first == media.count()  # every payload yields frame 0
 
 
 def test_resize_media_shape_and_determinism(media):

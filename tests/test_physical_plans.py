@@ -226,14 +226,10 @@ def test_get_feed_is_one_spark_job(spark, tmp_path):
     assert jobs == [1, 1], jobs
 
 
-def test_fanout_join_broadcasts_follows(spark, tmp_path):
-    from golang_cassandra_kafka_feed_spark.feed import FeedStore
-    from golang_cassandra_kafka_feed_spark.streaming.fanout import (
-        fanout_stream,
-    )
+def test_fanout_join_broadcasts_follows(spark):
+    from golang_cassandra_kafka_feed_spark.feed.api import feed_rows
     import datetime as dt
 
-    store = FeedStore(spark, str(tmp_path / "s"))
     posts = spark.createDataFrame(
         [("p1", "a", "b", dt.datetime(2026, 1, 1))],
         "post_id string, author_id string, body string, created_at timestamp",
@@ -241,18 +237,10 @@ def test_fanout_join_broadcasts_follows(spark, tmp_path):
     follows = spark.createDataFrame(
         [("u1", "a")], "user_id string, followee_id string"
     )
-    # explicit small-dim pinning -> broadcast hash join
-    plan = (
-        fanout_stream(posts, follows, broadcast=True)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "BroadcastHashJoin" in plan
-    # default: planner's choice from stats (no forced hint that would OOM
-    # on a 100 TB follower graph) — must still be a proper equi join
+    # planner's choice from stats (no forced hint that would OOM on a
+    # 100 TB follower graph) — must still be a proper equi join
     default_plan = (
-        fanout_stream(posts, follows)
+        feed_rows(posts, follows)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

@@ -146,36 +146,6 @@ def test_bottomk_salt_draws_independent_sample(weighted):
     assert a != b
 
 
-def test_dsir_resample_draws_target_like_docs(spark):
-    """End-to-end DSIR: raw pool = 50 target-language + 50 off-domain
-    docs; resampling k=30 against the target must overwhelmingly pick
-    target-language docs."""
-    from golang_cassandra_kafka_feed_spark.operators.selection import (
-        dsir_resample,
-    )
-
-    rows = []
-    for i in range(25):
-        rows.append((i, "spark shuffle partition executor broadcast", True))
-    for i in range(25, 75):
-        flavor = "spark shuffle partition executor stage" if i < 50 else \
-            "goat cheese wheel dairy farm pasture"
-        rows.append((i, flavor, False))
-    df = spark.createDataFrame(
-        rows, "doc_id long, text string, is_target boolean"
-    )
-    sample = dsir_resample(
-        df.filter(~F.col("is_target")).unionByName(
-            df.filter(F.col("is_target"))
-        ),
-        F.col("is_target"),
-        30,
-    ).collect()
-    assert len(sample) == 30
-    target_like = sum(1 for r in sample if r["doc_id"] < 50)
-    assert target_like >= 25
-
-
 def test_dsir_xxhash_fast_path_preserves_ordering(corpus):
     """hasher='xxhash' (JVM fast path, not oracle-declared) must agree
     with the md5 path on the doc ordering contract."""

@@ -6,7 +6,6 @@ from golang_cassandra_kafka_feed_spark.functions import exact_percentiles
 from golang_cassandra_kafka_feed_spark.sources.sinks import (
     write_csv,
     write_json_lines,
-    write_parquet,
 )
 from golang_cassandra_kafka_feed_spark.sources.testdata import load_table
 
@@ -95,42 +94,12 @@ def test_orc_roundtrip_value_exact(spark, tmp_path):
     assert back == sorted(rows)
 
 
-def test_parquet_partitioned_roundtrip(spark, sf_dir, tmp_path):
-    ev = load_table(spark, sf_dir, "events")
-    out = str(tmp_path / "ev")
-    write_parquet(ev.withColumn("et", ev.event_type), out, ["et"])
-    back = spark.read.parquet(out)
-    assert back.count() == ev.count()
-    # partition dirs exist -> partition pruning applies downstream
-    assert any(p.name.startswith("et=") for p in (tmp_path / "ev").iterdir())
-
-
 def test_json_lines_roundtrip(spark, sf_dir, tmp_path):
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
     out = str(tmp_path / "docs")
     write_json_lines(docs, out)
     back = spark.read.json(out)
     assert back.count() == docs.count()
-
-
-def test_partitioned_dataset_prunes_on_read(spark, sf_dir, tmp_path):
-    """write_parquet(partition_by) must produce a layout where a
-    partition-key filter reaches the scan as a PartitionFilter (directory
-    pruning), not a post-scan filter — the property that makes a 100 TB
-    date/source-partitioned dataset readable."""
-    from golang_cassandra_kafka_feed_spark.sources.sinks import write_parquet
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    path = str(tmp_path / "docs_by_source")
-    write_parquet(docs, path, partition_by=["source"], sort_within=["doc_id"])
-
-    back = spark.read.parquet(path).filter("source = 'src0'")
-    plan = back._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "src0" in plan
-    # the data predicate is gone from the post-scan Filter (pruned at
-    # the directory level), and results round-trip
-    want = docs.filter("source = 'src0'").count()
-    assert back.count() == want and want > 0
 
 
 def test_ensure_bucketed_table_memoizes_within_session(spark, tmp_path):

@@ -4,10 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from golang_cassandra_kafka_feed_spark.operators.skew import (
-    salted_count,
-    salted_join,
-)
+from golang_cassandra_kafka_feed_spark.operators.skew import salted_join
 from golang_cassandra_kafka_feed_spark.sources.testdata import load_table
 
 
@@ -53,18 +50,3 @@ def test_salted_join_rejects_outer_modes(spark):
     for how in ("right", "full", "outer", "right_outer"):
         with pytest.raises(ValueError, match="salted_join supports"):
             salted_join(df, df, ["k"], how=how)
-
-
-def test_salted_count_equals_plain_count(spark, sf_dir):
-    ev = load_table(spark, sf_dir, "events")
-    plain = {
-        (r.event_type, r["count"])
-        for r in ev.groupBy("event_type").count().collect()
-    }
-    salted = {
-        (r.event_type, r.n)
-        for r in salted_count(
-            ev, ["event_type"], salt=8, deterministic_by="event_id"
-        ).collect()
-    }
-    assert salted == plain

@@ -201,54 +201,3 @@ def test_blocklist_most_specific_rule_wins(spark):
         "cdn.media.site21.example.com": "cdn.media.site21.example.com",
         "www.site21.example.com": "site21.example.com",
     }
-
-
-def test_blocklist_filter_agrees_with_matches_and_never_shuffles(spark):
-    from golang_cassandra_kafka_feed_spark.operators.urltools import (
-        domain_block_matches,
-        domain_blocklist_filter,
-    )
-
-    hosts = _hosts(
-        spark,
-        ["example.org", "keep.example.com", "x.site7.example.com",
-         "com", "deep.a.example.org"],
-    )
-    rules = _rules(spark, ["example.org", "site7.example.com"])
-    kept = domain_blocklist_filter(hosts, rules)
-    blocked_ids = {
-        r.doc_id for r in domain_block_matches(hosts, rules).collect()
-    }
-    assert {r.doc_id for r in kept.collect()} == (
-        {r.doc_id for r in hosts.collect()} - blocked_ids
-    )
-    # the corpus must never shuffle: the only exchanges allowed are
-    # the rules side collapsing to its one-row broadcast array
-    # (SinglePartition over the bounded blocklist)
-    plan = kept._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange hashpartitioning" not in plan, (
-        f"filter path shuffles the corpus:\n{plan}"
-    )
-    assert "Exchange rangepartitioning" not in plan, plan
-
-
-def test_blocklist_filter_keeps_null_hosts(spark):
-    """Only a PROVABLE match drops: a NULL host must survive the
-    filter (three-valued `exists` coalesced; review-found — a bare
-    ~NULL filter silently dropped the row), keeping the complement
-    invariant with domain_block_matches."""
-    from golang_cassandra_kafka_feed_spark.operators.urltools import (
-        domain_block_matches,
-        domain_blocklist_filter,
-    )
-
-    hosts = spark.createDataFrame(
-        [(1, "example.org"), (2, "keep.com"), (3, None)],
-        "doc_id bigint, host string",
-    )
-    rules = _rules(spark, ["example.org"])
-    kept = {r.doc_id for r in domain_blocklist_filter(hosts, rules).collect()}
-    matched = {
-        r.doc_id for r in domain_block_matches(hosts, rules).collect()
-    }
-    assert kept == {2, 3} and matched == {1}
