@@ -6,9 +6,10 @@ AddToFeed, GetFeed.  Here each is a DataFrame transform over Parquet-backed
 tables, batch-native where the reference is row-at-a-time:
 
 - CAS username uniqueness (feed.go:41-74, ``INSERT ... IF NOT EXISTS``)
-  becomes batch dedup + left-anti against the existing table.  Cross-job
-  races need a transactional table format (Delta/Iceberg MERGE) — out of
-  scope for the filesystem-backed correctness build (SURVEY.md §7.3.1).
+  becomes batch dedup + left-anti against the existing table, run under
+  the table lease (feed/lock.py) so it also holds across concurrent jobs
+  and store instances on one base.  On object stores, where an exclusive
+  create is not atomic, ``merge_create_users`` is the cross-job CAS.
 - The dual follow tables (cql:11-21, written atomically in a LoggedBatch,
   feed.go:78-90) collapse into ONE edge table: Spark joins either
   direction, so the reverse "table" is just the same DataFrame.
@@ -26,13 +27,25 @@ TakeOrderedAndProject, which is cheap on pruned input.
 from __future__ import annotations
 
 import collections
+import contextvars
 import os
 import threading
 from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from golang_cassandra_kafka_feed_spark.feed.lock import table_lock
+
+# The (base, table) leases the current call context holds: a leased write
+# run inside another's lease on the same table (``add_posts`` runs
+# ``fan_out`` under the feed lease) does not wait on its own lease.
+_HELD_LEASES: contextvars.ContextVar[frozenset] = contextvars.ContextVar(
+    "feed_held_leases", default=frozenset()
+)
+
 
 def valid_length(col: str, lo: int, hi: int) -> F.Column:
     """Byte-length bounds check matching the reference's Go ``len()``
@@ -136,6 +149,15 @@ class FeedStore:
     (reference: one Cassandra partition per user, cql:30-37; at 100 TB a
     bucket count ~ O(cluster cores) keeps files large and reads pruned).
 
+    Writes: the read-modify-write mutators (``create_users``,
+    ``fan_out`` and ``compact``) always run under their table's lease
+    (feed/lock.py, the LWT twin), held in the base dir, so two stores or
+    jobs on one base serialize their anti-join + append and leave one row
+    per key.  ``add_posts`` takes the feed lease before either of its
+    appends starts.  The ``posts`` table and ``create_follows`` have no
+    lease of their own: their anti-joins are exact within one writer
+    only.
+
     Table handles: every read goes through one schema-pinned DataFrame per
     table, resolved lazily on first use and then reused, so a point read
     (``get_feed``, ``get_followers``, ``user_id_by_username``) pays neither
@@ -145,10 +167,9 @@ class FeedStore:
     - every write through this store drops the written table's handle
       right after the write (inside any lease it holds), and the next
       read re-lists — read-your-writes holds on one instance;
-    - exclusive mutators (``create_users``/``fan_out`` with
-      ``exclusive=True``, ``compact``) also drop the handle right after
-      acquiring the lease, so they see what other instances or
-      processes committed under it;
+    - the leased mutators also drop the handle right after acquiring the
+      lease, so they see what other instances or processes committed
+      under it;
     - any other outside writer (another instance, a copy into the
       table directory) becomes visible after ``refresh(table)``.
 
@@ -211,27 +232,31 @@ class FeedStore:
         finally:
             self.refresh(name)
 
+    @contextmanager
     def _table_lease(self, table: str):
         """Cross-job mutual exclusion on a table's read-modify-write
-        (feed/lock.py — the LWT twin), held in the store's base dir; a
-        ``file:`` base locks on the local filesystem.  Other URI schemes
-        are refused: ``compact`` swaps directories with ``os.rename``,
-        which cannot reach a remote store."""
-        from golang_cassandra_kafka_feed_spark.feed.lock import table_lock
-
-        if "://" in self.base and not self.base.startswith("file:"):
-            raise NotImplementedError(
-                f"exclusive {table} mutation needs a local base dir "
-                "(compact swaps directories with os.rename), got "
-                f"{self.base!r}"
-            )
-        return table_lock(self.base, table)
+        (feed/lock.py — the LWT twin), held in the store's base dir on
+        the base's own filesystem (local, ``file:``, or Hadoop for
+        remote schemes).  The table's handle is dropped on entry: other
+        instances or processes may have committed under the lease, so
+        the body re-lists.  Inside a lease this call context already
+        holds on the same table it is a no-op."""
+        key = (self.base, table)
+        held = _HELD_LEASES.get()
+        if key in held:
+            yield
+            return
+        with table_lock(self.base, table):
+            reset = _HELD_LEASES.set(held | {key})
+            try:
+                self.refresh(table)
+                yield
+            finally:
+                _HELD_LEASES.reset(reset)
 
     # -- CreateUser (feed.go:41-74): CAS -> batch dedup + anti-join --------
 
-    def create_users(
-        self, usernames: DataFrame, exclusive: bool = False
-    ) -> DataFrame:
+    def create_users(self, usernames: DataFrame) -> DataFrame:
         """Create users for a one-column ``username`` DataFrame.
 
         Semantics of the reference CAS loop, batch-native:
@@ -242,34 +267,28 @@ class FeedStore:
            is a lookup the caller does via ``user_id_by_username``).
         Returns the newly created rows (with generated UUIDs).
 
-        ``exclusive=True`` holds the filesystem table lease (feed/
-        lock.py, the LWT twin) around the anti-join + append, so
-        username uniqueness also holds across CONCURRENT jobs — the race
-        the reference closes with ``INSERT ... IF NOT EXISTS``
-        (feed.go:41-74) and that ``merge_create_users`` closes with
-        Delta MERGE where delta-spark exists.  Default off: single-job
-        batch ingest needs no lock.
+        The anti-join + append run under the ``users`` table lease
+        (feed/lock.py, the LWT twin), so username uniqueness also holds
+        across CONCURRENT jobs and store instances — the race the
+        reference closes with ``INSERT ... IF NOT EXISTS``
+        (feed.go:41-74).
         """
-        if exclusive:
-            with self._table_lease("users"):
-                # other instances/processes may have committed under the
-                # lease: re-list before the anti-join
-                self.refresh("users")
-                return self.create_users(usernames, exclusive=False)
-        valid = usernames.filter(valid_length("username", 1, 50))
-        fresh = (
-            valid.dropDuplicates(["username"])
-            .join(self.table("users"), "username", "left_anti")
-            .withColumn("user_id", F.expr("uuid()"))
-            .select("user_id", "username")
-        )
-        # Checkpoint BEFORE the append (as add_posts does): the plan
-        # reads the users table the append is about to grow, and uuid()
-        # is nondeterministic — any later action re-executing this plan
-        # would anti-join against the just-written names (returning
-        # empty) or mint different uuids than the ones written.
-        fresh = fresh.localCheckpoint(eager=True)
-        self._append(fresh, "users")
+        with self._table_lease("users"):
+            valid = usernames.filter(valid_length("username", 1, 50))
+            fresh = (
+                valid.dropDuplicates(["username"])
+                .join(self.table("users"), "username", "left_anti")
+                .withColumn("user_id", F.expr("uuid()"))
+                .select("user_id", "username")
+            )
+            # Checkpoint BEFORE the append (as add_posts does): the plan
+            # reads the users table the append is about to grow, and
+            # uuid() is nondeterministic — any later action re-executing
+            # this plan would anti-join against the just-written names
+            # (returning empty) or mint different uuids than the ones
+            # written.
+            fresh = fresh.localCheckpoint(eager=True)
+            self._append(fresh, "users")
         return self.table("users").join(
             fresh.select("username"), "username", "left_semi"
         )
@@ -286,9 +305,10 @@ class FeedStore:
 
     def create_follows(self, edges: DataFrame) -> DataFrame:
         """Append follow edges (user_id, followee_id); idempotent on the
-        pair, self-follows rejected.  The reference's LoggedBatch atomicity
-        across two orientations (feed.go:79-84) is moot: one table serves
-        both scans."""
+        pair within one writer, self-follows rejected.  The reference's
+        LoggedBatch atomicity across two orientations (feed.go:79-84) is
+        moot: one table serves both scans.  Takes no table lease: two
+        concurrent writers of the same edge can both append it."""
         fresh = (
             edges.filter(F.col("user_id") != F.col("followee_id"))
             .dropDuplicates(["user_id", "followee_id"])
@@ -322,11 +342,17 @@ class FeedStore:
         Each ``post_id`` is written once, the ``posts`` primary-key upsert
         (cql:23-28) made explicit: in-batch duplicates are dropped and
         posts already stored are anti-joined away, so a redelivered post
-        (kafka.go:92) writes nothing.
+        (kafka.go:92) writes nothing.  The ``posts`` table has no lease
+        of its own (one writer per store is assumed there).
 
-        The fresh rows are materialized once (``localCheckpoint``), then
-        the feed fan-out and the ``posts`` append run side by side on two
-        driver threads.  The checkpoint makes the batch safe whatever its
+        The fresh rows are materialized once (``localCheckpoint``).  Then,
+        under the feed lease, the feed fan-out (``fan_out``, which runs
+        inside that lease) and the ``posts`` append run side by side on
+        two driver threads.  Taking the lease first means a lease that
+        cannot be had (``LockTimeout``) fails the call before anything is
+        written: were the ``posts`` append already committed, a retry's
+        posts anti-join would drop the batch and its feed rows would
+        never be written.  The checkpoint makes the batch safe whatever its
         lineage: a plan that reads this store's ``posts`` table (the
         gate's own anti-join does) is not re-evaluated against the grown
         table, not even a persisted one that Spark re-caches after the
@@ -343,53 +369,47 @@ class FeedStore:
             .join(self.table("posts").select("post_id"), "post_id", "left_anti")
             .localCheckpoint(eager=True)
         )
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fanned = pool.submit(self.fan_out, fresh)
-            try:
-                self._append(fresh, "posts")
-            finally:
-                fanned.result()
+        with self._table_lease("feed_by_user"):
+            leased = contextvars.copy_context()
+            with ThreadPoolExecutor(max_workers=2) as pool:
+                fanned = pool.submit(leased.run, self.fan_out, fresh)
+                try:
+                    self._append(fresh, "posts")
+                finally:
+                    fanned.result()
         return fresh
 
-    def fan_out(self, posts: DataFrame, exclusive: bool = False) -> None:
+    def fan_out(self, posts: DataFrame) -> None:
         """posts ⋈ follows -> feed rows (``feed_rows``).
 
         Idempotent on (user_id, post_id) — replays of at-least-once
         delivery (kafka.go:92) are dropped by the anti-join, emulating the
-        Cassandra primary-key upsert (cql:36).
-
-        The anti-join dedups against the feed state read at plan time, so
-        idempotency is within-job by default: two CONCURRENT batch jobs
-        fanning out overlapping posts can both pass the anti-join and
-        double-write (the Cassandra upsert has no such race — the PK
-        write is the dedup).  ``exclusive=True`` serializes the
-        anti-join + append under the feed table lease (feed/lock.py) for
-        multi-writer batch deployments; the streaming pipeline does not
-        need it (one writer per checkpoint, epoch-replay covered by the
-        same anti-join re-read).
+        Cassandra primary-key upsert (cql:36).  The anti-join + append
+        run under the feed table lease, so two CONCURRENT jobs or store
+        instances fanning out overlapping posts cannot both pass the
+        anti-join and double-write.
         """
-        if exclusive:
-            with self._table_lease("feed_by_user"):
-                self.refresh("feed_by_user")  # see create_users
-                return self.fan_out(posts, exclusive=False)
-        fresh = feed_rows(posts, self.table("follows")).join(
-            self.table("feed_by_user").select("user_id", "post_id"),
-            ["user_id", "post_id"],
-            "left_anti",
-        )
-        bucketed = fresh.withColumn(
-            "user_bucket",
-            F.pmod(F.xxhash64("user_id"), F.lit(self.feed_buckets)).cast("int"),
-        )
-        try:
-            (
-                bucketed.repartition(self.feed_buckets, "user_bucket")
-                .write.mode("append")
-                .partitionBy("user_bucket")
-                .parquet(self._path("feed_by_user"))
+        with self._table_lease("feed_by_user"):
+            fresh = feed_rows(posts, self.table("follows")).join(
+                self.table("feed_by_user").select("user_id", "post_id"),
+                ["user_id", "post_id"],
+                "left_anti",
             )
-        finally:
-            self.refresh("feed_by_user")
+            bucketed = fresh.withColumn(
+                "user_bucket",
+                F.pmod(F.xxhash64("user_id"), F.lit(self.feed_buckets)).cast(
+                    "int"
+                ),
+            )
+            try:
+                (
+                    bucketed.repartition(self.feed_buckets, "user_bucket")
+                    .write.mode("append")
+                    .partitionBy("user_bucket")
+                    .parquet(self._path("feed_by_user"))
+                )
+            finally:
+                self.refresh("feed_by_user")
 
     def record_pipeline_metrics(
         self, epoch_id: int, n_envelopes: int, n_decoded: int, n_fresh: int
@@ -448,27 +468,23 @@ class FeedStore:
         partitioning, other tables coalesce by size.  Returns the file
         count after.
 
-        Staged write + rename-aside swap (write to .compact, move the
-        live dir to .old, move staging in, drop .old): committed data
-        is never the subject of an in-progress delete, and a crash in
-        the swap window is self-healing — the next compact() (or any
-        call that finds the live path missing with a .old present)
-        restores the renamed-aside copy.  Readers racing the two
-        renames can still see a brief missing-path window: compact() is
-        LOCAL-MODE maintenance tooling (shutil/os.rename); on a
-        cluster, rewrite through a distributed-FS commit instead.
+        The rewrite goes through the staged swap
+        (``sources/fsutil.py::swap_in``: staged write, then a
+        rename-aside swap whose crash window the next compact heals).
+        It moves directories with ``os.rename``, so it needs a local or
+        ``file:`` base and refuses other schemes; it is local-mode
+        maintenance, since readers racing the renames can see a brief
+        missing-path window.
 
         Holds the table lease (feed/lock.py) for the whole
-        read-rewrite-swap: a concurrent EXCLUSIVE writer (create_users /
-        fan_out(exclusive=True)) serializes against the swap instead of
-        appending into a directory that is about to be renamed away —
-        an append that lands between the staging read and the swap
-        would otherwise be silently dropped with the .old copy.
-        Non-exclusive writers give no such guarantee; in multi-writer
-        deployments run every mutator exclusive.
+        read-rewrite-swap, so a concurrent ``create_users``/``fan_out``
+        serializes against the swap instead of appending into a
+        directory about to be renamed away, where the append would be
+        dropped with the ``.old`` copy.  The unleased ``posts`` append
+        of ``add_posts`` and ``create_follows`` give no such guarantee:
+        do not compact ``posts`` or ``follows`` while they write.
         """
         with self._table_lease(table):
-            self.refresh(table)  # see create_users
             try:
                 return self._compact_locked(table)
             finally:
@@ -476,53 +492,28 @@ class FeedStore:
                 self.refresh(table)
 
     def _compact_locked(self, table: str) -> int:
-        import shutil
+        from golang_cassandra_kafka_feed_spark.sources.fsutil import (
+            heal_swap,
+            swap_in,
+        )
 
-        from golang_cassandra_kafka_feed_spark.feed.lock import _filesystem
-
-        # the swap runs on the local path (a ``file:`` base stripped)
-        path = os.path.join(_filesystem(self.base)[1], table)
-        old = path + ".old"
-        # crash recovery: a previous compact died between the two
-        # renames — the .old copy is the committed table; restore it.
-        if not os.path.exists(path) and os.path.exists(old):
-            os.rename(old, path)
-        if not os.path.exists(path):
+        if not heal_swap(self._path(table)):
             return 0
-        staging = path + ".compact"
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(old, ignore_errors=True)
         df = self._handle(table)
         if table == "feed_by_user":
-            (
+            writer = (
                 df.repartition(self.feed_buckets, "user_bucket")
                 .write.partitionBy("user_bucket")
-                .parquet(staging)
             )
         else:
             n = max(1, df.count() // 1_000_000 + 1)
-            df.coalesce(n).write.parquet(staging)
-        os.rename(path, old)
-        os.rename(staging, path)
-        shutil.rmtree(old, ignore_errors=True)
+            writer = df.coalesce(n).write
+        path = swap_in(self._path(table), writer.parquet)
         return sum(
             1
             for root, _, files in os.walk(path)
             for f in files
             if f.endswith(".parquet")
-        )
-
-    def get_feed_all(self, limit_per_user: int = 50) -> DataFrame:
-        """All-users form of GetFeed: top-k per key via window row_number
-        (SURVEY.md §2.1 #7)."""
-        w = Window.partitionBy("user_id").orderBy(
-            F.desc("created_at"), F.desc("post_id")
-        )
-        return (
-            self.table("feed_by_user")
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= limit_per_user)
-            .drop("rn")
         )
 
 
@@ -549,10 +540,11 @@ def merge_create_users(
 ) -> None:
     """Concurrency-safe CreateUser CAS via Delta MERGE.
 
-    The filesystem-backed FeedStore.create_users is exact within one job
-    (batch dedup + anti-join) but two *concurrent* jobs can both insert
-    the same username — the reference closes that race with Cassandra's
-    ``INSERT ... IF NOT EXISTS`` LWT (feed.go:41-74).  With a
+    FeedStore.create_users closes the cross-job race the reference
+    closes with Cassandra's ``INSERT ... IF NOT EXISTS`` LWT
+    (feed.go:41-74) by a table lease whose acquire is an exclusive
+    file create — atomic on a local disk or HDFS, not on an object
+    store without conditional writes.  With a
     transactional table format present, MERGE WHEN NOT MATCHED under
     Delta's optimistic concurrency control is the distributed twin:
     conflicting commits retry serialized, so exactly one writer wins per
@@ -564,8 +556,8 @@ def merge_create_users(
     """
     if not delta_available(spark):
         raise NotImplementedError(
-            "delta-spark not available; FeedStore.create_users covers the "
-            "single-job CAS semantics, cross-job uniqueness needs Delta"
+            "delta-spark not available; FeedStore.create_users serializes "
+            "writers with a lease that needs an atomic exclusive create"
         )
     from delta.tables import DeltaTable
 

@@ -15,28 +15,40 @@ writers are a handful of concurrent jobs appending thousands of rows
 each, a table-level commit lock is the honest translation (the critical
 section is two Spark jobs: one anti-join read, one append).
 
-One protocol, written once against seven filesystem primitives
-(``mkdirs``, ``create_excl``, ``read``, ``mtime``, ``rename``,
-``restore``, ``delete``) with two implementations: ``_LocalFS`` (``os.*``)
-for bare paths and ``file:`` URIs, ``_HFS`` (the Hadoop FileSystem API)
-for remote schemes such as ``hdfs://`` and ``s3a://``, so the lock lives
-on the same filesystem as the data it protects.
+One protocol, written once against five filesystem primitives
+(``mkdirs``, ``create_excl``, ``read``, ``mtime``, ``delete``) with two
+implementations: ``_LocalFS`` (``os.*``) for bare paths and ``file:``
+URIs, ``_HFS`` (the Hadoop FileSystem API) for remote schemes such as
+``hdfs://`` and ``s3a://``, so the lock lives on the same filesystem as
+the data it protects.
 
 Mechanics:
 - acquire = ``create_excl`` of ``<base>/.<table>.lock`` — ``os.open(
   O_CREAT | O_EXCL)`` locally, ``create`` with overwrite=false on HDFS.
 - the lock file carries owner metadata ``{token, pid, host,
   acquired_at, lease_seconds}``.
+- one lock file is one GENERATION, named by its holder's token.  It is
+  only ever removed under that generation's CLAIM: the remover first
+  wins the exclusive create of ``<lock>.claim.<token>.<n>``, then
+  re-reads the lock and deletes it only if it still carries that
+  token.  Only one party holds a generation's claim at a time, and a
+  lock file cannot change generation while it exists, so no remover can
+  delete a successor's lock.
 - crash recovery = LEASE TAKEOVER: a waiter that finds the lock older
-  than its lease (``lease_state``) renames it aside (only ONE concurrent
-  renamer of the same source succeeds, so two waiters cannot both
-  "break" the lock and then both acquire) and retries the atomic
-  create.
-- release renames the lock to a holder-private name, verifies the
-  stored token on that pinned file, and only then deletes it: if this
-  holder's lease was taken over mid-run, the successor's lock is
-  restored and ``LockLost`` is raised so the caller knows its critical
-  section was not exclusive to the end.
+  than its lease (``lease_state``) removes that generation under its
+  claim and retries the atomic create.  Many waiters racing to break
+  one expired lease remove it once, and a slow waiter that read the old
+  token re-reads the new holder's under the claim and leaves it alone.
+- release removes the holder's own generation the same way.  If a
+  waiter holds the claim (it is breaking the expired lease) or the lock
+  carries another token or is gone, the lease was taken over and
+  ``LockLost`` is raised so the caller knows its critical section was
+  not exclusive to the end.
+- a claimant that crashes inside its claim (a read and a delete) leaves
+  a claim file; once that claim's own lease has expired the next
+  claimant takes slot ``n + 1`` instead of deleting it, and the stale
+  slots go only after the generation they guard is gone or known not
+  current.
 - a holder that crashes BETWEEN the atomic create and the metadata
   write leaves an empty lock file; waiters treat an unparseable lock
   older than their grace period (the lease) as abandoned, via mtime.
@@ -44,13 +56,21 @@ Mechanics:
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
-import re
 import socket
 import time
 import uuid
 from contextlib import contextmanager
+
+from golang_cassandra_kafka_feed_spark.sources.fsutil import (
+    local_path,
+    read_stream,
+)
+
+# How long a waiter sleeps between acquire attempts.
+_POLL_SECONDS = 0.05
 
 
 class LockTimeout(TimeoutError):
@@ -67,15 +87,13 @@ def _lock_path(base_dir: str, table: str) -> str:
 
 
 def _filesystem(base_dir: str):
-    """``(primitives, base)`` for ``base_dir``: a ``file:`` URI
-    (``file:///x`` or Hadoop's ``file:/x``) is the local path ``/x``,
-    a bare path is local as is, any other scheme goes through Hadoop."""
-    for prefix in ("file://", "file:"):
-        if base_dir.startswith(prefix):
-            return _LocalFS(), base_dir[len(prefix):]
-    if re.match(r"[A-Za-z][A-Za-z0-9+.-]*://", base_dir):
+    """``(primitives, base)`` for ``base_dir``: a bare path or a ``file:``
+    URI locks on its local path (``fsutil.local_path``), any other scheme
+    goes through Hadoop."""
+    local = local_path(base_dir)
+    if local is None:
         return _HFS(base_dir), base_dir
-    return _LocalFS(), base_dir
+    return _LocalFS(), local
 
 
 @contextmanager
@@ -84,7 +102,6 @@ def table_lock(
     table: str,
     lease_seconds: float = 300.0,
     timeout_seconds: float = 120.0,
-    poll_seconds: float = 0.05,
 ):
     """Exclusive lease on ``<base_dir>/<table>`` mutation.
 
@@ -116,10 +133,10 @@ def table_lock(
         meta["acquired_at"] = time.time()
         if fs.create_excl(path, json.dumps(meta)):
             break
-        _maybe_take_over(fs, path, token, grace_seconds=lease_seconds)
+        _maybe_take_over(fs, path, meta, lease_seconds)
         if time.monotonic() >= deadline:
             raise LockTimeout(f"{path}: held for > {timeout_seconds}s")
-        time.sleep(poll_seconds)
+        time.sleep(_POLL_SECONDS)
     try:
         yield
     except BaseException as primary:
@@ -129,21 +146,13 @@ def table_lock(
         # advice widened the round-5 LockLost-only shield).  Any release
         # failure is attached as a note instead.
         try:
-            _release(fs, path, token)
+            _release(fs, path, meta, lease_seconds)
         except BaseException as lost:  # noqa: BLE001 — see above
             if hasattr(primary, "add_note"):
                 primary.add_note(f"also, releasing the lock: {lost!r}")
         raise
     else:
-        _release(fs, path, token)
-
-
-def _token(raw: str | None) -> str | None:
-    """The holder token in lock metadata ``raw``, None if unparseable."""
-    try:
-        return json.loads(raw).get("token") if raw else None
-    except ValueError:
-        return None
+        _release(fs, path, meta, lease_seconds)
 
 
 def lease_state(
@@ -184,63 +193,73 @@ def lease_state(
     return ("live" if live else "expired"), meta.get("token")
 
 
+def _remove_generation(
+    fs, path: str, token: str | None, meta: dict, grace_seconds: float,
+    expired_only: bool,
+) -> str:
+    """Delete the lock at ``path`` if it is still the generation whose
+    holder token is ``token`` (None: an unparseable lock), under that
+    generation's claim, which carries the claimant's ``meta`` stamped
+    now; ``expired_only`` spares a generation whose lease is still
+    live.
+
+    Returns ``"removed"``, ``"busy"`` when another party holds a live
+    claim on the generation, or ``"changed"`` when the lock is gone or
+    another generation.  The claim is the first free slot
+    ``<path>.claim.<token>.<n>`` whose predecessors' leases have all
+    expired (crashed claimants); every slot up to it is deleted after
+    the re-read, when the generation is gone or known not current, so a
+    later claimant of a freed slot re-reads a lock that is no longer
+    this generation."""
+    key = token or "unparsed"
+    claim = json.dumps({**meta, "acquired_at": time.time()})
+    for n in itertools.count():
+        slot = f"{path}.claim.{key}.{n}"
+        if fs.create_excl(slot, claim):
+            break
+        if lease_state(slot, grace_seconds, fs)[0] != "expired":
+            return "busy"
+    try:
+        state, current = lease_state(path, grace_seconds, fs)
+        if state == "gone" or current != token:
+            return "changed"
+        if expired_only and state != "expired":
+            return "changed"
+        fs.delete(path)
+        return "removed"
+    finally:
+        for i in range(n, -1, -1):
+            fs.delete(f"{path}.claim.{key}.{i}")
+
+
 def _maybe_take_over(
-    fs, path: str, token: str, grace_seconds: float = 300.0
+    fs, path: str, meta: dict, grace_seconds: float = 300.0
 ) -> None:
-    """If the current lock's lease has expired (``lease_state``), rename
-    it aside (the single-winner break primitive) so the acquire loop can
-    retry.
-
-    TOCTOU guard: between reading the expired metadata and winning the
-    rename, the lock can change hands (expired holder releases, a fresh
-    holder acquires) — the rename would then break a LIVE lease.  After
-    the rename the renamed file's token is re-checked against the one
-    read; on mismatch the live lock is put back with ``fs.restore``,
-    which fails if yet another waiter already created a new lock at the
-    path (in that residual double-race the displaced holder's release
-    raises ``LockLost`` — detected, never silent)."""
+    """If the current lock's lease has expired (``lease_state``), remove
+    that generation under its claim so the acquire loop can retry."""
     state, expired_token = lease_state(path, grace_seconds, fs)
-    if state != "expired":
+    if state == "expired":
+        _remove_generation(
+            fs, path, expired_token, meta, grace_seconds, expired_only=True
+        )
+
+
+def _release(fs, path: str, meta: dict, grace_seconds: float) -> None:
+    """Remove the holder's own generation under its claim; ``LockLost``
+    if a waiter is breaking it or it is already gone or replaced."""
+    outcome = _remove_generation(
+        fs, path, meta["token"], meta, grace_seconds, expired_only=False
+    )
+    if outcome == "removed":
         return
-    stale = f"{path}.stale.{token}"
-    if not fs.rename(path, stale):  # one concurrent renamer wins
-        return
-    renamed_token = _token(fs.read(stale))
-    if renamed_token is not None and renamed_token != expired_token:
-        fs.restore(stale, path)
-    fs.delete(stale)
-
-
-def _release(fs, path: str, token: str) -> None:
-    """Token-verified release via rename-then-verify.
-
-    A plain read-check-delete has a race: if the lease expires between
-    the token read and the delete, a waiter can take over and acquire,
-    and the delete then silently removes the NEW holder's lock (round-5
-    advice).  Renaming the lock to a holder-private name FIRST pins the
-    exact file being verified: the token check and the delete now
-    operate on the same file, so a live successor's lock can never be
-    deleted by a stale holder — at worst it is renamed aside for one
-    beat and restored via the same ``fs.restore`` the takeover path
-    uses (and if yet another waiter slipped in meanwhile, the restore
-    fails and BOTH displaced holders see LockLost at their own release
-    — detected, never silent)."""
-    mine = f"{path}.rel.{token}"
-    if not fs.rename(path, mine):
-        # lock gone entirely: taken over AND released/re-broken
+    if fs.read(path) is None:
         raise LockLost(
             f"{path}: lock file vanished while held; critical section "
             "was not exclusive to the end"
         )
-    holder = _token(fs.read(mine))
-    if holder == token:
-        fs.delete(mine)
-        return
-    fs.restore(mine, path)  # we renamed a SUCCESSOR's live lock aside
-    fs.delete(mine)
     raise LockLost(
-        f"{path}: lease was taken over while held (holder token "
-        f"{holder!r}); critical section was not exclusive to the end"
+        f"{path}: lease was taken over while held; critical section "
+        "was not exclusive to the end"
     )
 
 
@@ -276,32 +295,6 @@ class _LocalFS:
             return os.stat(p).st_mtime
         except OSError:
             return None
-
-    def rename(self, src: str, dst: str) -> bool:
-        try:
-            os.rename(src, dst)
-            return True
-        except OSError:
-            return False
-
-    def restore(self, src: str, path: str) -> None:
-        """Put a mistakenly-renamed LIVE lock back at ``path``.
-
-        ``os.link`` is the preferred primitive: atomic, and fails with
-        EEXIST if yet another waiter already created a fresh lock (that
-        residual race is left to detect-at-release).  A NON-EEXIST link
-        failure means the primitive itself is unavailable (some network
-        filesystems have no hard links) — there, falling through would
-        delete the displaced holder's live lock outright; instead
-        restore by rename, which clobbers a just-created waiter lock in
-        the worst case (that waiter then detects the loss at its own
-        release — round-6 advice: strictly narrower than the delete)."""
-        try:
-            os.link(src, path)
-        except FileExistsError:
-            pass
-        except OSError:
-            self.rename(src, path)
 
     def delete(self, p: str) -> None:
         try:
@@ -344,11 +337,9 @@ class _HFS:
     getFileSystem resolution per lock acquisition).
 
     Primitive contracts are the store's own: HDFS create
-    (overwrite=false) is atomic at the NameNode and rename is atomic;
-    S3A needs fs.s3a.create.conditional.enabled (conditional PUT) for a
-    hard exclusion guarantee.  The restore primitive is rename (no hard
-    links in the FS API) — the local protocol's no-hardlink fallback.
-    Hadoop's LocalFileSystem create is check-then-create, which is why
+    (overwrite=false) is atomic at the NameNode; S3A needs
+    fs.s3a.create.conditional.enabled (conditional PUT) for a hard
+    exclusion guarantee.  Hadoop's LocalFileSystem create is check-then-create, which is why
     ``file:`` paths lock through ``_LocalFS`` instead."""
 
     def __init__(self, path: str):
@@ -395,10 +386,6 @@ class _HFS:
         return True
 
     def read(self, p: str) -> str | None:
-        from golang_cassandra_kafka_feed_spark.sources.fsutil import (
-            read_stream,
-        )
-
         try:
             stream = self._fs.open(self._path(p))
         except Exception:
@@ -417,15 +404,6 @@ class _HFS:
             )
         except Exception:
             return None
-
-    def rename(self, src: str, dst: str) -> bool:
-        try:
-            return bool(self._fs.rename(self._path(src), self._path(dst)))
-        except Exception:
-            return False
-
-    def restore(self, src: str, path: str) -> None:
-        self.rename(src, path)
 
     def delete(self, p: str) -> None:
         try:

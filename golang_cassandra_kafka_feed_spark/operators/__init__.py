@@ -9,7 +9,6 @@ from golang_cassandra_kafka_feed_spark.operators.profile import (
 )
 from golang_cassandra_kafka_feed_spark.operators.range_join import (
     interval_join,
-    range_join,
 )
 from golang_cassandra_kafka_feed_spark.operators.sessionize import sessionize
 from golang_cassandra_kafka_feed_spark.operators.dedup import (
@@ -22,7 +21,6 @@ from golang_cassandra_kafka_feed_spark.operators.dedup import (
 )
 from golang_cassandra_kafka_feed_spark.operators.similarity import (
     brute_force_topk,
-    embedding_near_duplicates,
     lsh_bucketed_topk,
 )
 from golang_cassandra_kafka_feed_spark.operators.textstats import (
@@ -35,10 +33,7 @@ from golang_cassandra_kafka_feed_spark.operators.textstats import (
 from golang_cassandra_kafka_feed_spark.operators.skew import salted_join
 from golang_cassandra_kafka_feed_spark.operators.similarity import ivf_topk
 from golang_cassandra_kafka_feed_spark.operators.sketches import (
-    approx_distinct,
     bloom_fp_audit,
-    approx_percentiles,
-    bloom_semi_filter,
 )
 from golang_cassandra_kafka_feed_spark.operators.dedup import line_dedup
 from golang_cassandra_kafka_feed_spark.operators.selection import (
@@ -76,7 +71,6 @@ __all__ = [
     "top_k_global",
     "top_k_per_key",
     "asof_join",
-    "range_join",
     "sessionize",
     "exact_dedup",
     "minhash_lsh_candidates",
@@ -86,7 +80,6 @@ __all__ = [
     "simhash_near_duplicates",
     "brute_force_topk",
     "lsh_bucketed_topk",
-    "embedding_near_duplicates",
     "tokens",
     "fingerprint",
     "lang_id",
@@ -94,9 +87,6 @@ __all__ = [
     "winnowing_fingerprints",
     "salted_join",
     "ivf_topk",
-    "approx_distinct",
-    "approx_percentiles",
-    "bloom_semi_filter",
     "line_dedup",
     "dsir_importance",
     "weighted_bottomk",

@@ -9,8 +9,8 @@ intermediates; see plans/queries.q10 for that form, kept because it is the
 SQL-oracle-checkable shape).
 
 At 100 TB: both inputs shuffle-partition on the key; AQE handles skewed
-keys.  For a time-bucketed variant that also prunes history, compose with
-range_join.
+keys.  For interval overlap (a time-bucketed equi join) see
+range_join.interval_join.
 """
 
 from __future__ import annotations

@@ -372,33 +372,6 @@ def append_to_minhash_index(
     shingle_rows.write.mode("append").parquet(_p(path, "shingles"))
 
 
-def _swap_in(live: str, staging: str) -> None:
-    """Staged-write swap with crash recovery (the FeedStore.compact
-    idiom, feed/api.py:373): move live aside, move staging in, drop
-    the aside copy.  ``_heal`` restores a renamed-aside copy if a
-    previous swap died between the two renames.  LOCAL-MODE
-    maintenance tooling (os.rename); on a cluster rewrite through a
-    distributed-FS commit instead — same caveat as FeedStore."""
-    import os
-    import shutil
-
-    old = live + ".old"
-    # a leftover .old alongside a LIVE dir is garbage from a crash
-    # after a completed swap (the live dir is the committed one)
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(live, old)
-    os.rename(staging, live)
-    shutil.rmtree(old, ignore_errors=True)
-
-
-def _heal(live: str) -> None:
-    import os
-
-    old = live + ".old"
-    if not os.path.exists(live) and os.path.exists(old):
-        os.rename(old, live)
-
-
 def _rewrite_index_sides(spark: SparkSession, path: str, transform) -> None:
     """Shared maintenance pass: heal any crashed prior swap on BOTH
     sides first, then staged-rewrite bands (bucket_mod layout
@@ -409,27 +382,28 @@ def _rewrite_index_sides(spark: SparkSession, path: str, transform) -> None:
     resolves doomed ids from the live shingles) — healing lazily
     per-iteration left that cross-read pointing at a missing dir after
     a crash between the shingles swap's two renames (review-found,
-    round 8; regression-tested)."""
-    import shutil
+    round 8; regression-tested).  The swap is
+    ``sources/fsutil.py::swap_in``, shared with ``FeedStore.compact``."""
+    from golang_cassandra_kafka_feed_spark.sources.fsutil import (
+        heal_swap,
+        swap_in,
+    )
 
     meta = read_index_meta(spark, path)
     sides = (("bands", _BANDS_SCHEMA), ("shingles", _SHINGLES_SCHEMA))
     for side, _schema in sides:
-        _heal(_p(path, side))
+        heal_swap(_p(path, side))
     for side, schema in sides:
         live = _p(path, side)
-        staging = live + ".compact"
-        shutil.rmtree(staging, ignore_errors=True)
         df = transform(spark.read.schema(schema).parquet(live), side)
         if side == "bands":
-            (
+            writer = (
                 df.repartition(meta["bucket_mods"], "bucket_mod")
                 .write.partitionBy("bucket_mod")
-                .parquet(staging)
             )
         else:
-            df.write.parquet(staging)
-        _swap_in(live, staging)
+            writer = df.write
+        swap_in(live, writer.parquet)
 
 
 def delete_from_minhash_index(

@@ -1,11 +1,11 @@
-"""Range (interval) join via bucketing — the scalable non-equi join.
+"""Interval-overlap join via bucketing — the scalable non-equi join.
 
-A naive theta join on ``r.ts BETWEEN l.ts AND l.ts + W`` with only a key
-equi-condition degrades when keys are hot.  Bucketing by time quantizes the
-range into an extra equi column: the left side joins each of the
-ceil(W/bucket)+1 buckets its window covers, so the join is fully equi
-(key, bucket) with a residual range filter — hash-joinable, AQE-skew-
-splittable, and prunable at 100 TB.
+A naive theta join on ``l.start <= r.end AND r.start <= l.end`` with only
+a key equi-condition degrades when keys are hot.  Bucketing by time
+quantizes the intervals into an extra equi column: each side joins the
+buckets its interval covers, so the join is fully equi (key, bucket) with
+a residual overlap filter — hash-joinable, AQE-skew-splittable, and
+prunable at 100 TB.  q92 runs it; q09's point-in-window join is inline.
 """
 
 from __future__ import annotations
@@ -14,74 +14,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def range_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: Sequence[str],
-    left_ts: str,
-    right_ts: str,
-    window_seconds: int,
-    bucket_seconds: int | None = None,
-) -> DataFrame:
-    """Pairs where ``right_ts`` in ``[left_ts, left_ts + window_seconds]``
-    and the ``on`` keys match.  Columns of both inputs survive (prefix-free;
-    callers select/alias before the join when names collide).
-    """
-    # `is not None`, not `or`: an EXPLICIT bucket_seconds=0 must reach
-    # the validation below (and raise), not silently become
-    # window_seconds.  A zero-width window with the default bucket gets
-    # a defined 1s bucket (point-in-time join) instead of an
-    # unsatisfiable bucket<=0 error for a documented-valid window.
-    if bucket_seconds is None:
-        bucket_seconds = window_seconds if window_seconds > 0 else 1
-    window_seconds = int(window_seconds)
-    bucket_seconds = int(bucket_seconds)
-    if bucket_seconds <= 0 or window_seconds < 0:
-        raise ValueError(
-            f"need bucket_seconds > 0 and window_seconds >= 0, got "
-            f"bucket={bucket_seconds} window={window_seconds}"
-        )
-
-    # floor division, NOT float-divide + cast: cast truncates toward zero,
-    # which mis-buckets pre-1970 (negative epoch) timestamps.
-    l_b = left.withColumn(
-        "__bucket",
-        F.explode(
-            F.sequence(
-                F.floor(F.unix_timestamp(left_ts) / bucket_seconds).cast("long"),
-                F.floor(
-                    (F.unix_timestamp(left_ts) + window_seconds)
-                    / bucket_seconds
-                ).cast("long"),
-            )
-        ),
-    )
-    r_b = right.withColumn(
-        "__bucket",
-        F.floor(F.unix_timestamp(right_ts) / bucket_seconds).cast("long"),
-    )
-    # FULL-precision residual bound: unix_timestamp truncates to whole
-    # seconds, which would admit rows up to ~1s past the window for
-    # sub-second timestamps (the bucket explode may over-cover — the
-    # residual filter is the contract).  window_seconds is validated as
-    # an int above, so the INTERVAL interpolation is injection-safe.
-    cond = (
-        (F.col(f"r.{right_ts}") >= F.col(f"l.{left_ts}"))
-        & (
-            F.col(f"r.{right_ts}")
-            <= F.col(f"l.{left_ts}")
-            + F.expr(f"INTERVAL {window_seconds} SECONDS")
-        )
-    )
-    joined = l_b.alias("l").join(
-        r_b.alias("r"),
-        [*(F.col(f"l.{k}") == F.col(f"r.{k}") for k in on),
-         F.col("l.__bucket") == F.col("r.__bucket")],
-        "inner",
-    )
-    return joined.filter(cond).drop("__bucket")
 
 
 def interval_join(
@@ -97,7 +29,7 @@ def interval_join(
 ) -> DataFrame:
     """Overlap join of two INTERVAL tables (closed intervals:
     ``l_start <= r_end AND r_start <= l_end``), keys equi-matched —
-    the general temporal join that `range_join` (point-in-window) and
+    the general temporal join that point-in-window joins and
     `asof_join` (latest-at-or-before) are special cases of; joins
     session tables, SCD2 histories, maintenance windows.
 

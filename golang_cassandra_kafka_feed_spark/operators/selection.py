@@ -25,8 +25,6 @@ plans/queries.py docstring).
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -121,91 +119,6 @@ def dsir_bucket_ratios(
     )
 
 
-def _dsir_importance_arrow(
-    df: DataFrame,
-    ratios: DataFrame,
-    text_col: str,
-    id_col: str,
-    n_buckets: int,
-    salt: str,
-) -> DataFrame:
-    """Arrow scoring stage for dsir_importance (engine='arrow').
-
-    The ratio table is n_buckets rows by construction — collected
-    driver-side (bounded-collect precedent) into a plain dict shipped
-    in the UDF closure.  The gram->ratio memo (capped) lives in the
-    closure OUTSIDE ``_score``, so its lifetime is the Python worker
-    process that unpickled the UDF — shared across every Arrow batch
-    and task that worker runs — turning the per-INSTANCE md5 of the HOF
-    path into a per-distinct-gram-per-worker md5, the Zipf win.  (It is
-    pickled empty at definition time; each worker fills its own copy.)
-    Fold order and arithmetic are bit-identical to the HOF path (see
-    dsir_importance docstring)."""
-    ratio_by_bucket = {
-        int(r["bucket"]): float(r["ratio"]) for r in ratios.collect()
-    }
-    suffix = (":" + salt).encode("utf-8")
-    memo: dict[str, float] = {}
-
-    @F.pandas_udf("n_grams int, n_boost int, s double")
-    def _score(grams: pd.Series) -> pd.DataFrame:
-        import hashlib
-
-        def gram_ratio(g: str) -> float:
-            r = memo.get(g)
-            if r is None:
-                b = (
-                    int(
-                        hashlib.md5(g.encode("utf-8") + suffix)
-                        .hexdigest()[:8],
-                        16,
-                    )
-                    % n_buckets
-                )
-                r = ratio_by_bucket.get(b, 0.0)
-                if len(memo) < 1_000_000:  # bound task memory
-                    memo[g] = r
-            return r
-
-        n_out, boost, sums = [], [], []
-        for arr in grams:
-            if arr is None or len(arr) == 0:
-                n_out.append(0)
-                boost.append(0)
-                sums.append(0.0)
-                continue
-            vals = np.fromiter(
-                (gram_ratio(g) for g in arr), np.float64, count=len(arr)
-            )
-            vals.sort()
-            n_out.append(len(arr))
-            boost.append(int((vals > 1.0).sum()))
-            # sequential IEEE left fold == the HOF/DuckDB list_reduce
-            sums.append(float(np.add.accumulate(vals)[-1]))
-        return pd.DataFrame(
-            {"n_grams": n_out, "n_boost": boost, "s": sums}
-        )
-
-    folded = df.select(
-        F.col(id_col),
-        _score(bigram_array(text_col)).alias("__st"),
-    )
-    n = F.col("__st.n_grams")
-    return folded.select(
-        id_col,
-        n.alias("n_grams"),
-        F.col("__st.n_boost").alias("n_boost"),
-        (
-            F.round(
-                F.col("__st.s")
-                / F.greatest(n, F.lit(1)).cast("double")
-                * 10000
-            )
-            / 10000
-        ).alias("dsir_score"),
-    )
-
-
 def dsir_importance(
     df: DataFrame,
     target: Column,
@@ -215,7 +128,6 @@ def dsir_importance(
     salt: str = DSIR_SALT,
     score: str = "mean_ratio",
     hasher: str = "md5",
-    engine: str = "hof",
     widen_partitions: int | None = None,
 ) -> DataFrame:
     """DSIR importance score per document: (id, n_grams, n_boost, score).
@@ -234,32 +146,9 @@ def dsir_importance(
     through libm log, so it stays outside the declared surface, same
     split as HLL vs the declared KMV sketch (operators/sketches.py).
 
-    ``engine`` picks the scoring tier; BOTH are bit-identical (asserted
-    over the full corpus in test_selection.py), so the choice is purely
-    a cost model:
-
-    - ``'hof'`` (default): pure-JVM expression fold — nothing crosses
-      the process boundary, so it wins whenever partitions actually
-      parallelize.  Measured sf0.1 local[32]: 0.8-1.7 s widened vs
-      1.9-3.2 s on one split.
-    - ``'arrow'``: Arrow-batched pandas_udf; the n_buckets-row ratio
-      table is collected driver-side (the bounded-collect precedent —
-      IVF codebooks, k-means centroids) and shipped in the UDF closure;
-      each Python worker process memoizes gram->ratio across batches
-      and tasks, so the Zipf head of the vocabulary is md5-hashed ONCE
-      per worker instead of once per instance.  It beats the interpreted HOF md5 when scoring is
-      SERIAL (one split / few cores: 1.6-2.4 s vs 1.9-3.2 s), but pays
-      Arrow string shipping of every gram, so widened JVM wins —
-      measured, not assumed (PERFORMANCE.md round 10).
-
-    Bit-identity argument for 'arrow': hashlib.md5 over UTF-8 equals
-    Spark's md5, the collected ratio doubles cross the driver
-    losslessly, np.sort's ascending order equals array_sort for
-    positive finite doubles, and np.add.accumulate is the same
-    sequential IEEE-754 left fold as the HOF aggregate (0.0 + r == r
-    for r > 0).  ``hasher='xxhash'`` and ``score='log_sum'`` always
-    take the HOF path (no Python xxhash64 twin; libm log is not
-    cross-runtime-pinned).
+    Scoring is a pure-JVM expression fold — nothing crosses the process
+    boundary, so it scales with the partitions it runs on (measured
+    sf0.1 local[32]: 0.8-1.7 s widened vs 1.9-3.2 s on one split).
 
     ``widen_partitions``: repartition width on ``id_col`` before the
     two scans — a SMALL-SOURCE defense (one local file split would
@@ -272,8 +161,7 @@ def dsir_importance(
 
     100 TB posture: the corpus is scanned twice (once for bucket counts,
     once for scoring) and NEVER shuffled on the doc side: the ratio
-    table stays bucket-count-bounded (broadcast map row on the HOF
-    path, task closure on the Arrow path), and per-doc scoring happens
+    table stays bucket-count-bounded (one broadcast map row), and per-doc scoring happens
     inside the doc's own partition — no explode-regroup of bigram
     instances.  At 10% target fraction the paper keeps top-k by score;
     compose with weighted_bottomk or top_k_global for the resample
@@ -283,8 +171,6 @@ def dsir_importance(
         raise ValueError(
             f"score must be 'mean_ratio' or 'log_sum', got {score!r}"
         )
-    if engine not in ("arrow", "hof"):
-        raise ValueError(f"engine must be 'arrow' or 'hof', got {engine!r}")
     if widen_partitions is None:
         df = auto_widen(df, id_col)
     elif widen_partitions:
@@ -293,10 +179,6 @@ def dsir_importance(
         df, target, text_col=text_col, id_col=id_col,
         n_buckets=n_buckets, salt=salt, hasher=hasher,
     )
-    if engine == "arrow" and hasher == "md5" and score == "mean_ratio":
-        return _dsir_importance_arrow(
-            df, ratios, text_col, id_col, n_buckets, salt
-        )
     ratio_map = ratios.select(
         F.map_from_entries(
             F.array_sort(

@@ -1,15 +1,16 @@
 """Similarity search over an embedding column (``array<float>``).
 
-Three tiers, all UDF-free (higher-order-function dot products, codegen'd):
+Two top-k tiers, both UDF-free (higher-order-function dot products,
+codegen'd):
 
 1. ``brute_force_topk`` — exact scoring of every (query, corpus) pair.
    The correctness baseline; cost O(|Q| x |C| x d) but fully parallel.
 2. ``lsh_bucketed_topk`` — random-hyperplane LSH: only same-bucket pairs
    are scored (multi-band OR for recall).  The 100 TB path: bucket key is
    the shuffle key, each bucket joins locally.
-3. ``embedding_near_duplicates`` — all near-dup pairs above a cosine
-   threshold via the same LSH bucketing (dedup-by-embedding for training
-   corpora).
+
+Embedding near-duplicate pairs (q35) are the exact inline all-pairs
+filter in plans/queries.py.
 
 Hyperplanes are deterministic (seeded NumPy), shipped as literal arrays —
 no fit/state, reproducible across runs (no Date/random at plan time).
@@ -860,82 +861,6 @@ def rrf_fuse(
         *[F.col(f"rank_{label}") for label, _ in rankings],
         (F.round(F.col("rrf") * 1000000) / 1000000).alias("rrf_score"),
         F.col("rank").cast("long").alias("rank"),
-    )
-
-
-def embedding_near_duplicates(
-    corpus: DataFrame,
-    threshold: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = DEFAULT_DIM,
-    n_planes: int = DEFAULT_N_PLANES,
-    bands: int = DEFAULT_BANDS,
-    max_bucket_width: int | None = None,
-) -> DataFrame:
-    """All pairs with cosine >= threshold, candidate-pruned by LSH bucket
-    collision (embedding-space near-dedup).
-
-    Pairs come from grouping (id, e) structs per bucket and exploding
-    in-bucket pairs — NOT a bucketed self-join: the self-join form
-    dealiased the plane-scoring pipeline (crossJoin with the plane
-    table + per-vector aggregate) into two branches Catalyst cannot
-    ReuseExchange, running the full corpus scoring pass TWICE (the same
-    measured ~2x stage cost that drove the minhash/simhash/SemDeDup
-    rewrites, dedup.py::minhash_lsh_candidates docstring).
-
-    Because one grouped row carries a whole bucket's vectors and its
-    O(width^2) pair explosion runs in a single task, bucket width is
-    hard-capped like the MinHash/SimHash family (round-4 advice): the
-    ``max_bucket_width`` (default ``dedup.MAX_BUCKET_WIDTH``) smallest
-    ids per bucket survive, truncated as a WindowGroupLimit BEFORE the
-    shuffle, so a hot bucket (near-identical template embeddings) is a
-    bounded task, not an executor-memory straggler.
-    """
-    from golang_cassandra_kafka_feed_spark.operators.dedup import (
-        MAX_BUCKET_WIDTH,
-        _cap_bucket_width,
-    )
-
-    if max_bucket_width is None:
-        max_bucket_width = MAX_BUCKET_WIDTH
-    planes = _hyperplanes(dim, n_planes)
-    c = _with_buckets(
-        corpus.select(
-            F.col(id_col).alias("id"), _as_double(vec_col).alias("e")
-        ),
-        "id",
-        "e",
-        planes,
-        bands,
-    )
-    c = _cap_bucket_width(c, ["bucket"], "id", max_bucket_width, None)
-    buckets = (
-        c.groupBy("bucket")
-        .agg(F.collect_list(F.struct("id", "e")).alias("xs"))
-        .filter(F.size("xs") > 1)
-    )
-    pairs = (
-        buckets.select(F.explode("xs").alias("a"), "xs")
-        .select("a", F.explode("xs").alias("b"))
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.e").alias("ea"),
-            F.col("b.e").alias("eb"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    return (
-        pairs.select(
-            "id_a",
-            "id_b",
-            (F.round(cosine(F.col("ea"), F.col("eb")) * 10000) / 10000).alias(
-                "sim"
-            ),
-        )
-        .filter(F.col("sim") >= threshold)
     )
 
 

@@ -1,28 +1,21 @@
-"""Sketch-based approximate operators — the scale path where exact
-answers are unnecessary or unaffordable.
+"""Deterministic, engine-portable sketches — each with an accuracy
+audit the DuckDB oracles re-derive bit for bit.
 
-The oracle-declared surface (plans/queries Q01-Q47) is exact by contract
-(SURVEY.md §2.6d); these are the approximate twins for interactive /
-100 TB use, each tested against its exact counterpart with the sketch's
-own error bound:
+- ``kmv_distinct`` — K-minimum-values cardinality estimate (q48/q59).
+- ``bloom_fp_audit`` — Bloom-filter membership with its false-positive
+  labels (md5-prefix positions, q90).
+- ``cms_topk_audit`` — count-min frequency estimates of the exact top-k
+  tokens (q127).
 
-- ``approx_distinct`` — HyperLogLog++ (``approx_count_distinct``),
-  relative standard deviation configurable; one pass, O(1) state.
-- ``approx_percentiles`` — quantile sketch (``percentile_approx``) with an
-  accuracy knob; contrast with functions/stats.exact_percentiles.
-- ``bloom_semi_filter`` — Bloom-filter semi join: build a bloom over the
-  small side's keys, filter the big side by membership.  No shuffle of
-  the big table, no join at all — false positives only (never drops a
-  matching row), which downstream exact joins tolerate.  This is the
-  runtime-filter trick Spark applies internally for some joins, exposed
-  as a composable operator.
+The engine-internal sketches (HyperLogLog++ ``approx_count_distinct``,
+``percentile_approx``) are Spark builtins; call them directly.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -81,104 +74,6 @@ def kmv_distinct(
     )
 
 
-def approx_distinct(
-    df: DataFrame, cols: Sequence[str], by: Sequence[str] = (), rsd: float = 0.02
-) -> DataFrame:
-    aggs = [
-        F.approx_count_distinct(c, rsd=rsd).alias(f"approx_n_{c}")
-        for c in cols
-    ]
-    return df.groupBy(*by).agg(*aggs) if by else df.agg(*aggs)
-
-
-def approx_percentiles(
-    df: DataFrame,
-    value_col: str,
-    by: Sequence[str] = (),
-    ps: Sequence[float] = (0.5, 0.9, 0.99),
-    accuracy: int = 10_000,
-) -> DataFrame:
-    aggs = [
-        F.percentile_approx(value_col, p, accuracy).alias(f"ap{int(p * 100)}")
-        for p in ps
-    ]
-    return df.groupBy(*by).agg(*aggs) if by else df.agg(*aggs)
-
-
-import math
-
-
-def bloom_semi_filter(
-    big: DataFrame,
-    small: DataFrame,
-    big_key: str,
-    small_key: str | None = None,
-    expected_items: int = 100_000,
-    fpp: float = 0.01,
-) -> DataFrame:
-    """Rows of ``big`` whose key is (probably) in ``small``'s key set.
-
-    Guarantee: a superset of the exact left-semi join (no false
-    negatives, asserted in tests); |extra rows| ~ fpp * |big|.
-
-    Spark's ``bloom_filter_agg`` expression is internal-only (not a
-    registered SQL routine), so the filter is built here: the small side
-    emits its k seeded-hash bit positions (a distributed aggregate whose
-    driver transfer is bounded by m bits, NOT by |small|), the packed
-    words ship as ONE array<long> literal to every task, and membership
-    is k shiftright/bit-test predicates on the big side's scan — no
-    shuffle of the big table, no join in the plan (asserted).
-    """
-    small_key = small_key or big_key
-    # standard bloom sizing: m = -n ln p / ln^2 2,  k = m/n ln 2
-    m_bits = max(64, int(-expected_items * math.log(fpp) / (math.log(2) ** 2)))
-    k = max(1, round(m_bits / expected_items * math.log(2)))
-
-    # Pack bit positions into 64-bit words DISTRIBUTED-side (bit_or per
-    # word index), so the driver receives <= m/64 word rows (~15k at the
-    # default sizing) instead of up to m distinct positions (~1M).  bit_or
-    # absorbs duplicates, so no separate distinct() pass is needed.
-    pos = small.select(
-        F.explode(
-            F.array(
-                *[
-                    F.pmod(
-                        F.xxhash64(F.col(small_key), F.lit(s)), F.lit(m_bits)
-                    )
-                    for s in range(k)
-                ]
-            )
-        ).alias("p")
-    )
-    word_rows = (
-        pos.groupBy((F.col("p") / 64).cast("int").alias("w"))
-        .agg(
-            F.bit_or(
-                F.call_function(
-                    "shiftleft",
-                    F.lit(1).cast("long"),
-                    F.pmod(F.col("p"), F.lit(64)).cast("int"),
-                )
-            ).alias("bits")
-        )
-    )
-    words = [0] * ((m_bits + 63) // 64)
-    for r in word_rows.collect():
-        words[r.w] = r.bits  # already a signed JVM long — no 2's-comp fixup
-    bits: Column = F.lit(words)
-
-    cond = None
-    for s in range(k):
-        p = F.pmod(F.xxhash64(F.col(big_key), F.lit(s)), F.lit(m_bits))
-        word = F.element_at(bits, (p / 64).cast("int") + 1)
-        bit = F.call_function(
-            "shiftright", word, F.pmod(p, F.lit(64)).cast("int")
-        ).bitwiseAND(F.lit(1))
-        c = bit == 1
-        cond = c if cond is None else (cond & c)
-    return big.filter(cond)
-
-
 # Portable bloom-audit sizing: deliberately tight (load factor ~0.73 at
 # ~1k build keys) so the false-positive mechanism is actually exercised.
 # Exported for the DuckDB oracle.
@@ -197,12 +92,12 @@ def bloom_fp_audit(
     """Bloom-filter accuracy audit: every probe key labeled with its
     exact membership in the build key set, the bloom verdict, and the
     false-positive flag — the audit a deployment runs before trusting
-    `bloom_semi_filter`'s fpp sizing on real key distributions.  The
+    a Bloom filter's fpp sizing on real key distributions.  The
     sketch-accuracy family's fourth member (KMV q48, minhash q78,
     PQ-ADC q84).
 
-    Unlike `bloom_semi_filter` (xxhash, engine-internal), positions
-    here are the md5-prefix hash (`_md5_32(key || ':' || seed) %
+    Unlike an engine-internal bloom (xxhash), positions here are the
+    md5-prefix hash (`_md5_32(key || ':' || seed) %
     m_bits`), so a DuckDB oracle reproduces the EXACT bit set and every
     verdict.  Membership is an anti-join against the (<= m_bits)-row
     distinct-position table rather than a per-row scan of a position

@@ -717,8 +717,8 @@ def q34(spark, sf_dir):
 def q35(spark, sf_dir):
     """Embedding near-dup pairs (exact cosine over a bounded slice).
 
-    The oracle-checkable exact form; the LSH-pruned scale path is
-    q39/operators.similarity.embedding_near_duplicates (rows-only).
+    The oracle-checkable exact form; q39 is the LSH-bucketed top-k
+    over the same embeddings.
     """
     from golang_cassandra_kafka_feed_spark.operators.similarity import (
         _as_double,
@@ -1516,8 +1516,7 @@ def q73(spark, sf_dir):
     both scans were serializing on one task) is compensated by
     dsir_importance's default auto_widen derivation (r11 verdict #2:
     width from defaultParallelism vs actual splits, not a constant);
-    engine='hof' is the measured winner once widened (r10 cost-model
-    note in dsir_importance)."""
+    the JVM expression fold scales with that width (dsir_importance)."""
     from golang_cassandra_kafka_feed_spark.operators.selection import (
         dsir_importance,
     )

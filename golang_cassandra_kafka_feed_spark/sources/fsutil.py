@@ -12,6 +12,8 @@ falling back to ``os.path`` only if the JVM gateway is unavailable.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import SparkSession
 
 
@@ -138,3 +140,70 @@ def read_marker(spark: SparkSession, path: str) -> str | None:
         return read_stream(jvm, stream).decode("utf-8")
     finally:
         stream.close()
+
+
+def local_path(path: str) -> str | None:
+    """The local filesystem path behind ``path``: a bare path as is, a
+    ``file:`` URI (``file:///x`` or Hadoop's ``file:/x``) as ``/x``, and
+    None for any other scheme (``hdfs://``, ``s3a://``, ...), which only
+    the Hadoop FileSystem API reaches."""
+    for prefix in ("file://", "file:"):
+        if path.startswith(prefix):
+            return path[len(prefix):]
+    if re.match(r"[A-Za-z][A-Za-z0-9+.-]*://", path):
+        return None
+    return path
+
+
+def _swap_dir(path: str) -> str:
+    """The local directory behind ``path`` for a staged swap
+    (``local_path``).  Other schemes are refused: the swap moves
+    directories with ``os.rename``, which cannot reach a remote store."""
+    local = local_path(path)
+    if local is None:
+        raise NotImplementedError(
+            f"staged swap of {path!r} needs a local path (it moves "
+            "directories with os.rename)"
+        )
+    return local
+
+
+def heal_swap(path: str) -> bool:
+    """Finish the crash window of ``swap_in``: if the directory at
+    ``path`` is missing and its ``.old`` copy is present, a previous swap
+    died between its two renames, and ``.old`` is the committed copy, so
+    it moves back.  True if the directory exists afterwards."""
+    import os
+
+    live = _swap_dir(path)
+    old = live + ".old"
+    if not os.path.exists(live) and os.path.exists(old):
+        os.rename(old, live)
+    return os.path.exists(live)
+
+
+def swap_in(path: str, write) -> str:
+    """Replace the directory at ``path`` with what ``write(staging)``
+    writes to a sibling staging directory, and return the local path.
+
+    Staged write, then a rename-aside swap: the live directory moves to
+    ``.old``, the staging one moves in, and ``.old`` is dropped.  The
+    committed data is never the subject of an in-progress delete, and
+    ``heal_swap`` repairs a crash between the two renames.  Readers
+    racing the renames can see a brief missing-path window, so this is
+    local-mode maintenance; on a cluster rewrite through a
+    distributed-FS commit instead.  Call ``heal_swap`` first."""
+    import os
+    import shutil
+
+    live = _swap_dir(path)
+    staging, old = live + ".compact", live + ".old"
+    shutil.rmtree(staging, ignore_errors=True)
+    # a leftover .old next to a live directory is debris of a crash
+    # after a completed swap
+    shutil.rmtree(old, ignore_errors=True)
+    write(staging)
+    os.rename(live, old)
+    os.rename(staging, live)
+    shutil.rmtree(old, ignore_errors=True)
+    return live

@@ -1,6 +1,5 @@
 from golang_cassandra_kafka_feed_spark.streaming.fanout import (
     decode_post_events,
-    deduped_post_stream,
     run_fanout_pipeline,
 )
 from golang_cassandra_kafka_feed_spark.streaming.rollup import (
@@ -15,7 +14,6 @@ from golang_cassandra_kafka_feed_spark.streaming.windows import (
 
 __all__ = [
     "decode_post_events",
-    "deduped_post_stream",
     "read_rollup",
     "rollup_foreach_batch",
     "rollup_partials",

@@ -19,8 +19,8 @@ Operator-by-operator parity:
                                                 -> one ``FeedStore.add_posts``
   per epoch from foreachBatch: the sink has the store's one write path
 - at-least-once dedup (kafka.go:92, cql:36 PK)  -> that write's post_id
-  gate and feed anti-join (and dropDuplicatesWithinWatermark when a
-  watermark column is available)
+  gate and feed anti-join: the one idempotent sink, with no watermark
+  horizon (redeliveries may lag by any amount of event time)
 - graceful shutdown/drain (worker.go:66-70)     -> query.stop() +
   checkpoint resume
 """
@@ -51,9 +51,8 @@ def decode_post_events(envelopes: DataFrame) -> DataFrame:
             F.col("post.id").isNotNull()
             & F.col("post.author_id").isNotNull()
             # `created` is required too: a NULL event time would violate
-            # the non-nullable POST/FEED schemas, poison newest-first
-            # feed ordering, and leave dropDuplicatesWithinWatermark
-            # state with no expiry time
+            # the non-nullable POST/FEED schemas and poison newest-first
+            # feed ordering
             & F.col("post.created").isNotNull()
         )
         .select(
@@ -62,29 +61,6 @@ def decode_post_events(envelopes: DataFrame) -> DataFrame:
             F.col("post.body").alias("body"),
             F.col("post.created").alias("created_at"),
         )
-    )
-
-
-def deduped_post_stream(
-    envelopes: DataFrame, watermark: str = "1 hour"
-) -> DataFrame:
-    """Decode + stateful in-stream dedup on post_id within the watermark
-    horizon — the streaming-native form of the at-least-once guard
-    (ref op #20: kafka.go:92 redelivery vs cql:36 PK idempotency).
-
-    Use this when the sink cannot anti-join (e.g. writing straight to
-    Kafka or Cassandra without a readable view); the state store holds
-    one entry per post_id until event time passes the watermark, so state
-    is bounded by the redelivery horizon, not the stream length.  The
-    foreachBatch pipeline (run_fanout_pipeline) instead dedups at the sink
-    through ``FeedStore.add_posts``'s post_id gate (in-batch dropDuplicates
-    + anti-join against ``posts``), which also survives restarts with
-    fresh checkpoints.
-    """
-    return (
-        decode_post_events(envelopes)
-        .withWatermark("created_at", watermark)
-        .dropDuplicatesWithinWatermark(["post_id"])
     )
 
 

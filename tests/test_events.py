@@ -256,34 +256,6 @@ def test_interval_join_open_x_open_ignores_midrange_sentinel(spark):
     assert [(r.lid, r.rid) for r in rows] == [(10, 30)]
 
 
-def test_range_join_zero_edges(spark):
-    """Explicit bucket_seconds=0 raises; window_seconds=0 with the
-    default bucket is a valid point-in-time join (round-4 advice)."""
-    import datetime as dt
-
-    import pytest
-
-    from golang_cassandra_kafka_feed_spark.operators.range_join import (
-        range_join,
-    )
-
-    base = dt.datetime(2026, 1, 1)
-    left = spark.createDataFrame(
-        [(1, base), (2, base)], "k long, lts timestamp"
-    )
-    right = spark.createDataFrame(
-        [(1, base), (1, base + dt.timedelta(seconds=1)), (2, base)],
-        "k long, rts timestamp",
-    )
-    with pytest.raises(ValueError, match="bucket_seconds > 0"):
-        range_join(left, right, ["k"], "lts", "rts", 60, bucket_seconds=0)
-    got = sorted(
-        (r.k, r.rts)
-        for r in range_join(left, right, ["k"], "lts", "rts", 0).collect()
-    )
-    assert got == [(1, base), (2, base)], "window=0 keeps exact-ts matches only"
-
-
 def test_profile_and_quality_checks(spark):
     from pyspark.sql import functions as F
 

@@ -7,7 +7,6 @@ from __future__ import annotations
 import datetime as dt
 
 import pytest
-from pyspark.sql import functions as F
 
 from golang_cassandra_kafka_feed_spark.feed import FeedStore
 
@@ -121,28 +120,6 @@ def test_get_feed_order_and_limit(spark, store):
     assert store.get_feed("u1").count() == 11
     # unknown user -> empty, not error
     assert store.get_feed("ghost").count() == 0
-
-
-def test_get_feed_all_matches_single(spark, store):
-    store.create_follows(
-        spark.createDataFrame(
-            [("u1", "a"), ("u2", "a")], "user_id string, followee_id string"
-        )
-    )
-    store.add_posts(
-        _posts(
-            spark,
-            [(f"p{i}", "a", "b", TS + dt.timedelta(seconds=i)) for i in range(5)],
-        )
-    )
-    all_feeds = store.get_feed_all(limit_per_user=2)
-    assert all_feeds.count() == 4
-    single = {r.post_id for r in store.get_feed("u1", 2).collect()}
-    via_all = {
-        r.post_id
-        for r in all_feeds.filter(F.col("user_id") == "u1").collect()
-    }
-    assert single == via_all == {"p4", "p3"}
 
 
 def test_compact_shrinks_files_preserves_data(spark, store):
@@ -265,8 +242,8 @@ def test_reads_see_writes_at_once_on_cached_handles(spark, store):
 
 def test_exclusive_fan_out_across_instances_no_duplicates(spark, tmp_path):
     """Two FeedStore instances on one base dir, each holding a warm
-    handle: an exclusive fan_out re-lists the feed under the lease, so
-    the second instance's anti-join sees the first one's rows."""
+    handle: fan_out re-lists the feed under its lease, so the second
+    instance's anti-join sees the first one's rows."""
     base = str(tmp_path / "shared")
     a = FeedStore(spark, base, feed_buckets=4)
     b = FeedStore(spark, base, feed_buckets=4)
@@ -276,18 +253,35 @@ def test_exclusive_fan_out_across_instances_no_duplicates(spark, tmp_path):
             "user_id string, followee_id string",
         )
     )
-    a.fan_out(_posts(spark, [("p0", "author", "b", TS)]), exclusive=True)
+    a.fan_out(_posts(spark, [("p0", "author", "b", TS)]))
     for s in (a, b):
         assert s.get_feed("u0").count() == 1  # warm both handles
 
     def batch(ids):
         return _posts(spark, [(f"p{i}", "author", "b", TS) for i in ids])
 
-    a.fan_out(batch(range(0, 6)), exclusive=True)
-    b.fan_out(batch(range(3, 9)), exclusive=True)  # posts 3-5 overlap
+    a.fan_out(batch(range(0, 6)))
+    b.fan_out(batch(range(3, 9)))  # posts 3-5 overlap
     feed = b.table("feed_by_user")
     assert feed.count() == feed.select("user_id", "post_id").distinct().count()
     assert feed.count() == 3 * 9
+
+
+def test_create_users_across_instances_one_row_per_username(spark, tmp_path):
+    """Two FeedStores on one base, each with a warm ``users`` handle:
+    plain create_users calls with overlapping names leave one row per
+    username — the reference's LWT (feed.go:41-74) across writers."""
+    base = str(tmp_path / "shared")
+    a = FeedStore(spark, base)
+    b = FeedStore(spark, base)
+    a.create_users(_users(spark, ["alice"]))
+    for s in (a, b):  # warm both instances' users handles
+        assert s.user_id_by_username("alice").count() == 1
+
+    a.create_users(_users(spark, ["alice", "bob"]))
+    b.create_users(_users(spark, ["bob", "carol"]))
+    users = [r.username for r in b.table("users").collect()]
+    assert sorted(users) == ["alice", "bob", "carol"], users
 
 
 def test_refresh_makes_external_append_visible(spark, tmp_path):

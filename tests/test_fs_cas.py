@@ -1,11 +1,12 @@
-"""Cross-job CAS: the filesystem table lease (feed/lock.py) and
-FeedStore.create_users(exclusive=True) — the LWT twin (reference
+"""Cross-job CAS: the filesystem table lease (feed/lock.py) and the
+FeedStore writes that always take it — the LWT twin (reference
 internal/store/feed.go:41-74) without delta-spark."""
 
 from __future__ import annotations
 
 import json
 import os
+import sys
 import threading
 import time
 
@@ -15,7 +16,10 @@ from golang_cassandra_kafka_feed_spark.feed import FeedStore
 from golang_cassandra_kafka_feed_spark.feed.lock import (
     LockLost,
     LockTimeout,
+    _LocalFS,
     _lock_path,
+    _remove_generation,
+    lease_state,
     table_lock,
 )
 
@@ -73,28 +77,95 @@ def test_stale_lease_takeover(tmp_path):
 
 def test_takeover_single_winner(tmp_path):
     """Many waiters racing to break one expired lease: exactly one
-    acquires at a time (the rename-aside break cannot double-fire)."""
+    holds the lock at a time, and none of them sees LockLost (the
+    generation claim lets the expired lock be removed once, and never
+    lets a slow breaker remove its successor)."""
     base = str(tmp_path)
     cm = table_lock(base, "users", lease_seconds=0.05)
     cm.__enter__()
     time.sleep(0.1)
-    holders = []
-    lock = threading.Lock()
+    holders, overlaps, errs = [], [], []
 
     def waiter():
-        with table_lock(base, "users", timeout_seconds=10):
-            with lock:
+        try:
+            with table_lock(base, "users", timeout_seconds=20):
                 holders.append(threading.get_ident())
-                assert len(holders) == 1
+                overlaps.append(len(holders))
                 time.sleep(0.01)
-                holders.pop()
+                holders.remove(threading.get_ident())
+        except BaseException as ex:  # re-raised below, after the join
+            errs.append(ex)
 
-    ts = [threading.Thread(target=waiter) for _ in range(6)]
-    for t in ts:
-        t.start()
-    for t in ts:
-        t.join()
-    assert not os.path.exists(_lock_path(base, "users"))
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        ts = [threading.Thread(target=waiter) for _ in range(6)]
+        for t in ts:
+            t.start()
+        for t in ts:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in ts)
+    if errs:
+        raise errs[0]
+    assert overlaps == [1] * 6
+    assert os.listdir(base) == []  # no lock and no claim left behind
+
+
+def test_slow_breaker_leaves_the_new_holder_alone(tmp_path):
+    """A waiter that read an expired generation's token and only now
+    tries to remove it finds the lock re-acquired: it re-reads under the
+    generation's claim and the new holder's lock stays."""
+    base = str(tmp_path)
+    path = _lock_path(base, "users")
+    crashed = table_lock(base, "users", lease_seconds=0.05)
+    crashed.__enter__()
+    old_token = lease_state(path)[1]
+    time.sleep(0.1)
+    with table_lock(base, "users", timeout_seconds=5):
+        state = lease_state(path)
+        slow = {"token": "slow", "lease_seconds": 300.0}
+        outcome = _remove_generation(
+            _LocalFS(), path, old_token, slow, 300.0, expired_only=True
+        )
+        assert outcome == "changed"
+        assert lease_state(path) == state and state[0] == "live"
+    assert os.listdir(base) == []
+
+
+def test_crashed_claimant_does_not_block_takeover(tmp_path):
+    """A claimant that crashed inside its claim leaves a claim file;
+    once that claim's lease has expired the next waiter claims the next
+    slot, breaks the expired lock and cleans every slot up."""
+    base = str(tmp_path)
+    path = _lock_path(base, "users")
+    long_ago = time.time() - 3600
+    with open(path, "w") as f:
+        json.dump({"token": "x", "acquired_at": long_ago, "lease_seconds": 1}, f)
+    with open(f"{path}.claim.x.0", "w") as f:
+        json.dump({"token": "c", "acquired_at": long_ago, "lease_seconds": 1}, f)
+    with table_lock(base, "users", timeout_seconds=5):
+        assert lease_state(path)[0] == "live"
+    assert os.listdir(base) == []
+
+
+def test_release_while_a_waiter_breaks_the_lease_raises_lock_lost(tmp_path):
+    """A holder past its lease whose generation a waiter has claimed
+    learns at release that its section was not exclusive, and leaves the
+    lock to the claimant."""
+    base = str(tmp_path)
+    path = _lock_path(base, "users")
+    cm = table_lock(base, "users", lease_seconds=0.05)
+    cm.__enter__()
+    token = lease_state(path)[1]
+    time.sleep(0.1)
+    claim = f"{path}.claim.{token}.0"
+    with open(claim, "w") as f:
+        json.dump({"token": "w", "acquired_at": time.time(), "lease_seconds": 300}, f)
+    with pytest.raises(LockLost, match="taken over"):
+        cm.__exit__(None, None, None)
+    assert lease_state(path)[1] == token and os.path.exists(claim)
 
 
 def test_unparseable_stale_lock_is_taken_over(tmp_path):
@@ -174,7 +245,7 @@ def test_concurrent_create_users_one_winner_per_username(spark, tmp_path):
     def job(names):
         try:
             df = spark.createDataFrame([(n,) for n in names], "username string")
-            store.create_users(df, exclusive=True)
+            store.create_users(df)
         except Exception as ex:  # pragma: no cover
             errs.append(ex)
 
@@ -191,8 +262,8 @@ def test_concurrent_create_users_one_winner_per_username(spark, tmp_path):
 
 
 def test_concurrent_fanout_no_duplicate_feed_rows(spark, tmp_path):
-    """Two concurrent batch jobs fanning out OVERLAPPING posts under
-    exclusive=True never double-write a (user_id, post_id) feed row —
+    """Two concurrent batch jobs fanning out OVERLAPPING posts never
+    double-write a (user_id, post_id) feed row —
     the Cassandra-PK-upsert property (cql:36) across jobs."""
     import datetime as dt
 
@@ -213,7 +284,7 @@ def test_concurrent_fanout_no_duplicate_feed_rows(spark, tmp_path):
 
     def job(posts):
         try:
-            store.fan_out(posts, exclusive=True)
+            store.fan_out(posts)
         except Exception as ex:  # pragma: no cover
             errs.append(ex)
 
@@ -231,7 +302,7 @@ def test_concurrent_fanout_no_duplicate_feed_rows(spark, tmp_path):
 
 def test_compact_serializes_against_exclusive_writers(spark, tmp_path):
     """compact() holds the table lease, so a concurrent
-    fan_out(exclusive=True) append cannot land between compact's staging
+    fan_out append cannot land between compact's staging
     read and its directory swap (where the .old drop would silently
     discard it) — every appended row survives the rewrite."""
     import datetime as dt
@@ -252,13 +323,13 @@ def test_compact_serializes_against_exclusive_writers(spark, tmp_path):
             "created_at timestamp",
         )
 
-    store.fan_out(posts(range(4)), exclusive=True)
+    store.fan_out(posts(range(4)))
     errs = []
 
     def writer():
         try:
             for lo in range(4, 20, 4):
-                store.fan_out(posts(range(lo, lo + 4)), exclusive=True)
+                store.fan_out(posts(range(lo, lo + 4)))
         except Exception as ex:  # pragma: no cover
             errs.append(ex)
 
@@ -278,3 +349,35 @@ def test_compact_serializes_against_exclusive_writers(spark, tmp_path):
     feed = store.table("feed_by_user")
     assert feed.count() == 3 * 20
     assert feed.select("user_id", "post_id").distinct().count() == 3 * 20
+
+
+def test_add_posts_lease_timeout_writes_nothing(spark, tmp_path, monkeypatch):
+    """``add_posts`` takes the feed lease before either append starts:
+    with another job holding a live ``feed_by_user`` lease it times out
+    and leaves ``posts`` (and the feed) unchanged, so a retry still
+    writes the batch's feed rows."""
+    import datetime as dt
+    import functools
+
+    from golang_cassandra_kafka_feed_spark.feed import api
+
+    base = str(tmp_path / "store4")
+    store = FeedStore(spark, base, feed_buckets=4)
+    store.create_follows(
+        spark.createDataFrame([("u0", "author")], "user_id string, followee_id string")
+    )
+    posts = spark.createDataFrame(
+        [("p0", "author", "body", dt.datetime(2026, 1, 1))],
+        "post_id string, author_id string, body string, created_at timestamp",
+    )
+    monkeypatch.setattr(
+        api, "table_lock", functools.partial(table_lock, timeout_seconds=0.3)
+    )
+    with table_lock(base, "feed_by_user"):
+        with pytest.raises(LockTimeout):
+            store.add_posts(posts)
+    assert store.table("posts").count() == 0
+    assert store.table("feed_by_user").count() == 0
+    store.add_posts(posts)  # the retry writes both
+    assert store.table("posts").count() == 1
+    assert store.table("feed_by_user").count() == 1

@@ -56,17 +56,12 @@ def test_hadoop_primitives_on_a_file_uri(spark, tmp_path):
 
     base = _uri(tmp_path)
     fs = _HFS(base)
-    p, q = base + "/.t.lock", base + "/.t.lock.aside"
+    p = base + "/.t.lock"
     assert fs.read(p) is None and fs.mtime(p) is None
     assert fs.create_excl(p, '{"token": "a"}') is True
     assert fs.create_excl(p, '{"token": "b"}') is False
     assert fs.read(p) == '{"token": "a"}'
     assert abs(fs.mtime(p) - time.time()) < 60
-    assert fs.rename(p, q) is True
-    assert fs.rename(p, q) is False  # the source is gone
-    assert fs.read(p) is None and fs.read(q) == '{"token": "a"}'
-    fs.restore(q, p)
-    assert fs.read(p) == '{"token": "a"}' and fs.read(q) is None
     fs.delete(p)
     assert fs.read(p) is None and fs.mtime(p) is None
     fs.delete(p)  # deleting an absent file is a no-op

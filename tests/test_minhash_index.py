@@ -265,6 +265,32 @@ def test_maintenance_heals_a_crashed_swap(spark, tmp_path):
     ) == want
 
 
+def test_delete_on_a_file_uri_index_matches_bare_path(spark, tmp_path):
+    """Maintenance on a ``file://`` index swaps the local directories the
+    URI names, and answers exactly as the same delete on a bare path."""
+    import os
+
+    full = _corpus(spark, n=40)
+    corpus = full.filter("doc_id % 4 != 0")
+    delta = full.filter("doc_id % 4 = 0")
+    doomed = corpus.filter("doc_id % 5 = 1").select("doc_id")
+    bare = str(tmp_path / "bare")
+    uri = "file://" + str(tmp_path / "uri")
+    for idx in (bare, uri):
+        build_minhash_index(corpus, idx)
+        delete_from_minhash_index(spark, idx, doomed)
+    got = _pairs(
+        minhash_near_duplicates_incremental(delta, uri, threshold=0.5)
+    )
+    assert got == _pairs(
+        minhash_near_duplicates_incremental(delta, bare, threshold=0.5)
+    )
+    assert got, "surviving families must still collide"
+    assert sorted(os.listdir(tmp_path / "uri")) == sorted(
+        os.listdir(tmp_path / "bare")
+    )
+
+
 def test_incremental_never_rescans_the_corpus_source(spark, tmp_path):
     """The 100 TB property, asserted on the plan: the incremental
     query's scans touch the INDEX parquet and the delta source only —

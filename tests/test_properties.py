@@ -294,82 +294,3 @@ def test_interval_join_matches_bruteforce(
         if k1 == k2 and s1 <= (e2 or far) and s2 <= (e1 or far)
     )
     assert got == want
-
-
-@given(
-    ls=st.lists(_iv_start, min_size=1, max_size=10),
-    lk=st.lists(st.integers(0, 2), min_size=10, max_size=10),
-    rs=st.lists(_iv_start, min_size=1, max_size=10),
-    rk=st.lists(st.integers(0, 2), min_size=10, max_size=10),
-    window_hours=st.sampled_from([1, 6, 30]),
-    bucket_hours=st.sampled_from([1, 4, 48]),
-)
-@_SETTINGS
-def test_range_join_matches_bruteforce(
-    spark, ls, lk, rs, rk, window_hours, bucket_hours
-):
-    """range_join (bucketed point-in-window) == the naive cross-join
-    filter r.ts in [l.ts, l.ts + W], across bucket widths below/near/
-    above the window."""
-    from golang_cassandra_kafka_feed_spark.operators.range_join import (
-        range_join,
-    )
-
-    lrows = [
-        (k, i, _IV_T0 + dt.timedelta(hours=s))
-        for i, (s, k) in enumerate(zip(ls, lk))
-    ]
-    rrows = [
-        (k, i, _IV_T0 + dt.timedelta(hours=s))
-        for i, (s, k) in enumerate(zip(rs, rk))
-    ]
-    left = spark.createDataFrame(lrows, "k long, lid long, lts timestamp")
-    right = spark.createDataFrame(rrows, "k long, rid long, rts timestamp")
-    got = sorted(
-        (r.lid, r.rid)
-        for r in range_join(
-            left,
-            right,
-            ["k"],
-            "lts",
-            "rts",
-            window_seconds=window_hours * 3600,
-            bucket_seconds=bucket_hours * 3600,
-        ).collect()
-    )
-    w = dt.timedelta(hours=window_hours)
-    want = sorted(
-        (lid, rid)
-        for (k1, lid, t1) in lrows
-        for (k2, rid, t2) in rrows
-        if k1 == k2 and t1 <= t2 <= t1 + w
-    )
-    assert got == want
-
-
-def test_range_join_subsecond_boundary(spark):
-    """Sub-second precision: right at window-end + 300ms must NOT match
-    (the truncating unix_timestamp bound admitted up to ~1s extra)."""
-    from golang_cassandra_kafka_feed_spark.operators.range_join import (
-        range_join,
-    )
-
-    t0 = dt.datetime(2026, 1, 1, 10, 0, 0, 600000)
-    left = spark.createDataFrame(
-        [(1, 1, t0)], "k long, lid long, lts timestamp"
-    )
-    right = spark.createDataFrame(
-        [
-            (1, 10, t0 + dt.timedelta(seconds=5)),              # in
-            (1, 11, t0 + dt.timedelta(seconds=5, microseconds=1)),  # out
-            (1, 12, t0 + dt.timedelta(seconds=5, milliseconds=300)),  # out
-        ],
-        "k long, rid long, rts timestamp",
-    )
-    got = sorted(
-        r.rid
-        for r in range_join(
-            left, right, ["k"], "lts", "rts", window_seconds=5
-        ).collect()
-    )
-    assert got == [10]

@@ -253,36 +253,6 @@ def test_classifier_score_semantics(spark):
         assert got_w[i].n_features == got[i].n_features
 
 
-def test_dsir_arrow_and_hof_paths_bit_identical(spark, sf_dir):
-    """engine='arrow' (pandas_udf, task-memoized gram hashing) and
-    engine='hof' (pure-JVM expression fold) must agree EXACTLY — same
-    md5 over UTF-8, lossless ratio-double transfer, same ascending
-    sort, same sequential IEEE-754 left fold — over the full corpus
-    (the clustering_vec identity contract; equality is ==)."""
-    from golang_cassandra_kafka_feed_spark.sources.testdata import (
-        load_table,
-    )
-
-    d = load_table(spark, sf_dir, "documents")
-    tgt = F.col("lang") == "en"
-    hof = dsir_importance(d, tgt, engine="hof").orderBy("doc_id").collect()
-    arrow = (
-        dsir_importance(d, tgt, engine="arrow", widen_partitions=8)
-        .orderBy("doc_id")
-        .collect()
-    )
-    assert len(hof) == len(arrow) > 0
-    assert [tuple(r) for r in hof] == [tuple(r) for r in arrow]
-
-
-def test_dsir_engine_param_validated(spark):
-    import pytest as _pt
-
-    df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
-    with _pt.raises(ValueError, match="engine"):
-        dsir_importance(df, F.lit(True), engine="numpy")
-
-
 # --- auto_widen derivation (verdict r11 #2) ---------------------------
 #
 # widen_partitions=None now DERIVES the width (defaultParallelism vs

@@ -1,5 +1,5 @@
 """Similarity search + composite operator tests: LSH recall vs brute
-force, as-of/range-join/sessionize equivalence with their oracle-checked
+force, as-of/sessionize equivalence with their oracle-checked
 query forms."""
 
 from __future__ import annotations
@@ -9,11 +9,9 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from golang_cassandra_kafka_feed_spark.operators.asof import asof_join
-from golang_cassandra_kafka_feed_spark.operators.range_join import range_join
 from golang_cassandra_kafka_feed_spark.operators.sessionize import sessionize
 from golang_cassandra_kafka_feed_spark.operators.similarity import (
     brute_force_topk,
-    embedding_near_duplicates,
     lsh_bucketed_topk,
 )
 from golang_cassandra_kafka_feed_spark.plans.queries import QUERIES
@@ -50,63 +48,6 @@ def test_lsh_scores_are_exact_for_returned(emb):
     for r in lsh_bucketed_topk(emb, _queries_df(emb, 3), k=10).collect():
         if (r.query_id, r.vec_id) in exact:
             assert exact[(r.query_id, r.vec_id)] == r.sim
-
-
-def test_embedding_near_duplicates_subset_of_exact(emb):
-    """LSH near-dup pairs ⊆ exact near-dup pairs at the same threshold
-    (no false positives; sims computed exactly)."""
-    sub = emb.filter(F.col("vec_id") < 200)
-    lsh_pairs = {
-        (r.id_a, r.id_b)
-        for r in embedding_near_duplicates(sub, threshold=0.3).collect()
-    }
-    from golang_cassandra_kafka_feed_spark.operators.similarity import (
-        _as_double,
-        cosine,
-    )
-
-    e = sub.select("vec_id", _as_double("embedding").alias("e"))
-    a, b = e.alias("a"), e.alias("b")
-    exact_pairs = {
-        (r.id_a, r.id_b)
-        for r in a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
-        .select(
-            F.col("a.vec_id").alias("id_a"),
-            F.col("b.vec_id").alias("id_b"),
-            (F.round(cosine(F.col("a.e"), F.col("b.e")) * 10000) / 10000).alias(
-                "sim"
-            ),
-        )
-        .filter(F.col("sim") >= 0.3)
-        .collect()
-    }
-    assert lsh_pairs <= exact_pairs
-    if exact_pairs:
-        assert len(lsh_pairs) / len(exact_pairs) >= 0.3  # loose recall floor
-
-
-def test_embedding_near_duplicates_caps_hot_bucket(spark):
-    """A degenerate corpus (every vector identical -> one mega-bucket)
-    must be width-capped: only the `max_bucket_width` smallest ids pair
-    up (round-4 advice — the uncapped double-explode put the full
-    O(n^2) pair generation in one task)."""
-    from golang_cassandra_kafka_feed_spark.operators.similarity import (
-        DEFAULT_DIM,
-    )
-
-    vec = [1.0] + [0.0] * (DEFAULT_DIM - 1)
-    corpus = spark.createDataFrame(
-        [(i, vec) for i in range(20)], "vec_id long, embedding array<double>"
-    )
-    pairs = {
-        (r.id_a, r.id_b)
-        for r in embedding_near_duplicates(
-            corpus, threshold=0.9, max_bucket_width=4
-        ).collect()
-    }
-    assert pairs == {
-        (a, b) for a in range(4) for b in range(4) if a < b
-    }, f"cap must keep the 4 smallest ids only, got {sorted(pairs)}"
 
 
 def test_ivf_recall_vs_brute_force(emb):
@@ -188,52 +129,6 @@ def test_asof_join_null_fields_stay_atomic(spark):
     # latest right row (ts=50) has price=NULL, note='new_note'
     assert row.price_asof is None
     assert row.note_asof == "new_note"
-
-
-def test_range_join_negative_epoch_buckets(spark):
-    """Pre-1970 timestamps: floor-division bucketing must still pair rows
-    whose interval condition holds (cast-truncation toward zero would
-    mis-bucket negative epochs)."""
-    left = spark.createDataFrame(
-        [("k", "1969-12-31 23:59:30")], "k string, lts string"
-    ).select("k", F.col("lts").cast("timestamp").alias("lts"))
-    right = spark.createDataFrame(
-        [("k", "1969-12-31 23:59:50"), ("k", "1970-01-01 00:00:20")],
-        "k string, rts string",
-    ).select("k", F.col("rts").cast("timestamp").alias("rts"))
-    got = range_join(
-        left, right, on=["k"], left_ts="lts", right_ts="rts",
-        window_seconds=60, bucket_seconds=25,
-    )
-    assert got.count() == 2
-
-
-def test_range_join_matches_theta_form(spark, sf_dir):
-    """Bucketed range join == the equi+residual theta join (Q09)."""
-    ev = load_table(spark, sf_dir, "events").filter(F.col("user_id") < 10)
-    left = ev.select(
-        F.col("event_id").alias("event_id_a"), "user_id", "ts"
-    )
-    right = ev.select(
-        F.col("event_id").alias("event_id_b"),
-        "user_id",
-        F.col("ts").alias("ts_b"),
-    )
-    joined = range_join(
-        left,
-        right,
-        on=["user_id"],
-        left_ts="ts",
-        right_ts="ts_b",
-        window_seconds=3600,
-        bucket_seconds=600,
-    ).filter(F.col("event_id_a") < F.col("event_id_b"))
-    got = {(r.event_id_a, r.event_id_b) for r in joined.collect()}
-    want = {
-        (r.event_id_a, r.event_id_b)
-        for r in QUERIES["q09_range_theta_join"](spark, sf_dir).collect()
-    }
-    assert got == want
 
 
 def test_sessionize_matches_q27_counts(spark, sf_dir):

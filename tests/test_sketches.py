@@ -5,60 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from golang_cassandra_kafka_feed_spark.functions import exact_percentiles
-from golang_cassandra_kafka_feed_spark.operators.sketches import (
-    approx_distinct,
-    approx_percentiles,
-    bloom_semi_filter,
-)
 from golang_cassandra_kafka_feed_spark.sources.testdata import load_table
-
-
-def test_approx_distinct_within_rsd(spark, sf_dir):
-    orders = load_table(spark, sf_dir, "orders")
-    exact = orders.select("o_custkey").distinct().count()
-    approx = approx_distinct(orders, ["o_custkey"], rsd=0.02).first()[0]
-    assert abs(approx - exact) / exact < 0.06  # 3x rsd
-
-
-def test_approx_percentiles_close_to_exact(spark, sf_dir):
-    ev = load_table(spark, sf_dir, "events")
-    exact = exact_percentiles(ev, "value", ps=[0.5, 0.99]).first()
-    approx = approx_percentiles(ev, "value", ps=[0.5, 0.99]).first()
-    assert abs(approx.ap50 - exact.p50) <= max(1.0, 0.02 * exact.p50)
-    assert abs(approx.ap99 - exact.p99) <= max(2.0, 0.02 * exact.p99)
-
-
-def test_bloom_semi_filter_superset_and_bounded(spark, sf_dir):
-    orders = load_table(spark, sf_dir, "orders")
-    # small side: customers from one nation
-    cust = load_table(spark, sf_dir, "customer").filter(
-        F.col("c_nationkey") == 3
-    )
-    exact = orders.join(
-        cust, orders.o_custkey == cust.c_custkey, "left_semi"
-    )
-    approx = bloom_semi_filter(
-        orders, cust, big_key="o_custkey", small_key="c_custkey",
-        expected_items=10_000, fpp=0.01,
-    )
-    exact_keys = {r.o_orderkey for r in exact.collect()}
-    approx_keys = {r.o_orderkey for r in approx.collect()}
-    assert exact_keys <= approx_keys  # no false negatives, ever
-    n_big = orders.count()
-    assert len(approx_keys - exact_keys) <= max(50, 0.05 * n_big)
-
-
-def test_bloom_semi_filter_plan_has_no_join(spark, sf_dir):
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer").limit(100)
-    plan = (
-        bloom_semi_filter(orders, cust, "o_custkey", "c_custkey")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Join" not in plan  # membership predicate only — no shuffle
 
 
 def test_kmv_distinct_error_bound(spark, sf_dir):

@@ -111,41 +111,6 @@ def test_fanout_pipeline_idempotent_replay(spark, tmp_path):
     assert store.table("posts").count() == 1
 
 
-def test_deduped_post_stream_drops_redelivery(spark, tmp_path):
-    """Stateful within-watermark dedup: the same post_id delivered in two
-    micro-batches is emitted once (op #20, streaming-native form)."""
-    from golang_cassandra_kafka_feed_spark.streaming import (
-        deduped_post_stream,
-    )
-
-    in_dir = tmp_path / "env"
-    in_dir.mkdir()
-    for i, pids in enumerate([["p1", "p2"], ["p1", "p3"]]):  # p1 redelivered
-        _envelopes(
-            spark,
-            [(b"post_created", _valid_value(p, "a", "hi"), TS) for p in pids],
-        ).write.parquet(str(in_dir / f"b{i}"))
-
-    stream = (
-        spark.readStream.schema(ENVELOPE_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(in_dir / "b*"))
-    )
-    q = (
-        deduped_post_stream(stream, watermark="1 hour")
-        .writeStream.format("memory")
-        .queryName("dedup_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = sorted(
-        r.post_id for r in spark.sql("SELECT post_id FROM dedup_out").collect()
-    )
-    assert got == ["p1", "p2", "p3"]
-
-
 def test_producer_roundtrip(spark):
     """Serialize (httphandlers.go:147-158) then decode: lossless at ms
     precision (SURVEY.md §7.3 timestamp convention)."""
