@@ -65,6 +65,7 @@ import uuid
 from contextlib import contextmanager
 
 from golang_cassandra_kafka_feed_spark.sources.fsutil import (
+    hadoop_fs,
     local_path,
     read_stream,
 )
@@ -358,8 +359,7 @@ class _HFS:
                 "filesystem, resolved via the session's Hadoop conf)"
             )
         self._jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        self._fs = self._path(path).getFileSystem(conf)
+        self._fs, _ = hadoop_fs(spark, path)
 
     def _path(self, p: str):
         return self._jvm.org.apache.hadoop.fs.Path(p)

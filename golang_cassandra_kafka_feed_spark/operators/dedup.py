@@ -1021,7 +1021,7 @@ def ngram_pairs_store(
     threshold: float = 0.5,
 ) -> DataFrame:
     """``ngram_jaccard_pairs`` served from a create-if-absent parquet
-    materialization (the q110/q124 idiom) — the shared-stage fix for
+    materialization (``fsutil.materialize_once``) — the shared-stage fix for
     the q47/q71/q103/q111/q115 family, which all consume the same pair
     graph and used to re-derive the shingle pipeline per key (verdict
     r8 ask #2: q111 re-ran the full pair derivation + component
@@ -1040,21 +1040,19 @@ def ngram_pairs_store(
     downstream stage (grouping, canonical selection, leakage audit,
     triangle cohesion) reads the materialization instead of re-paying
     the shingle shuffle."""
-    import hashlib
-
     from golang_cassandra_kafka_feed_spark.sources.fsutil import (
         materialize_once,
+        store_path,
     )
 
-    files = "|".join(sorted(df.inputFiles()))
+    files = df.inputFiles()
     if not files:
         return ngram_jaccard_pairs(df, text_col, id_col, n, threshold)
-    key = hashlib.md5(
-        f"{files}|{text_col}|{id_col}|{n}|{threshold}|pairs-v1".encode()
-    ).hexdigest()[:12]
     return materialize_once(
         df.sparkSession,
-        f"/tmp/gckfs_pairs_{key}",
+        store_path(
+            "pairs", files, text_col, id_col, n, threshold, "pairs-v1"
+        ),
         lambda: ngram_jaccard_pairs(df, text_col, id_col, n, threshold),
     )
 

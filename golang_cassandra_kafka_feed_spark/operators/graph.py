@@ -97,12 +97,12 @@ class _Checkpointer:
         return out
 
     def _delete(self, path: str) -> None:
+        from golang_cassandra_kafka_feed_spark.sources.fsutil import (
+            hadoop_fs,
+        )
+
         try:
-            jvm = self.spark._jvm
-            p = jvm.org.apache.hadoop.fs.Path(path)
-            fs = p.getFileSystem(
-                self.spark._jsc.hadoopConfiguration()  # type: ignore[union-attr]
-            )
+            fs, p = hadoop_fs(self.spark, path)
             fs.delete(p, True)
         except Exception:
             pass
@@ -216,25 +216,23 @@ def dup_groups_store(
     fallback for non-file-backed inputs follow ``ngram_pairs_store``
     (which this builds on, so pairs and groups share one pair-graph
     materialization)."""
-    import hashlib
-
     from golang_cassandra_kafka_feed_spark.operators.dedup import (
         ngram_pairs_store,
     )
     from golang_cassandra_kafka_feed_spark.sources.fsutil import (
         materialize_once,
+        store_path,
     )
 
     pairs = ngram_pairs_store(docs, text_col, id_col, n, threshold)
-    files = "|".join(sorted(docs.inputFiles()))
+    files = docs.inputFiles()
     if not files:
         return duplicate_groups(pairs)
-    key = hashlib.md5(
-        f"{files}|{text_col}|{id_col}|{n}|{threshold}|groups-v1".encode()
-    ).hexdigest()[:12]
     return materialize_once(
         docs.sparkSession,
-        f"/tmp/gckfs_dupgroups_{key}",
+        store_path(
+            "dupgroups", files, text_col, id_col, n, threshold, "groups-v1"
+        ),
         lambda: duplicate_groups(pairs),
     )
 

@@ -57,8 +57,10 @@ from golang_cassandra_kafka_feed_spark.operators.dedup import (
     banded_rows,
 )
 from golang_cassandra_kafka_feed_spark.sources.fsutil import (
-    path_exists,
+    build_once,
+    hadoop_fs,
     read_stream,
+    write_marker,
 )
 
 _BANDS_SCHEMA = T.StructType(
@@ -159,17 +161,6 @@ def _index_rows(
     return bands, shingles
 
 
-def _meta_fs_path(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    meta_dir = jvm.org.apache.hadoop.fs.Path(  # type: ignore[union-attr]
-        _p(path, "meta")
-    )
-    fs = meta_dir.getFileSystem(
-        spark._jsc.hadoopConfiguration()  # type: ignore[union-attr]
-    )
-    return fs, meta_dir
-
-
 def _delete_meta(spark: SparkSession, path: str) -> None:
     """Invalidate the commit marker.  Every rebuild-in-place path must
     call this BEFORE touching bands/shingles: meta-presence means "the
@@ -178,7 +169,7 @@ def _delete_meta(spark: SparkSession, path: str) -> None:
     (round-7 advice: crash mid-overwrite used to leave the OLD meta
     next to half-rewritten bands, which ensure_minhash_index would
     then reuse as committed)."""
-    fs, meta_dir = _meta_fs_path(spark, path)
+    fs, meta_dir = hadoop_fs(spark, _p(path, "meta"))
     fs.delete(meta_dir, True)
 
 
@@ -190,19 +181,7 @@ def _write_meta(spark: SparkSession, path: str, meta: dict) -> None:
     meta and ``ensure_minhash_index`` rebuilds from scratch.  A Spark
     1-row-dataset writer would be FS-portable too, but it pays a full
     job submission (~4 s measured) for a 100-byte record."""
-    jvm = spark._jvm
-    fs, meta_dir = _meta_fs_path(spark, path)
-    fs.delete(meta_dir, True)
-    out = fs.create(
-        jvm.org.apache.hadoop.fs.Path(  # type: ignore[union-attr]
-            _p(path, "meta/part-00000.json")
-        ),
-        True,
-    )
-    try:
-        out.write(bytearray(json.dumps(meta).encode("utf-8")))
-    finally:
-        out.close()
+    write_marker(spark, _p(path, "meta/part-00000.json"), json.dumps(meta))
 
 
 def build_minhash_index(
@@ -279,14 +258,15 @@ def ensure_minhash_index(
 ) -> dict:
     """Create-if-absent twin of ``build_minhash_index`` — the CAS
     shape of reference internal/store/feed.go:46-59 applied to the
-    index itself.  If a committed index (meta present — meta is
-    written last, so it marks a COMPLETE build) already exists at
-    ``path`` it is reused without touching the corpus; parameter
+    index itself.  The build runs through ``fsutil.build_once`` with
+    ``meta`` as its marker (meta is written last, so it marks a
+    COMPLETE build): concurrent callers build the index once, and a
+    committed index is reused without touching the corpus; parameter
     drift raises instead of silently mixing incompatible signatures.
 
     The caller owns staleness: ``path`` must change when the corpus
-    does (q110 keys it on a hash of the corpus plan's input files +
-    the signature parameters)."""
+    does (q110 keys it on the corpus plan's input files + the
+    signature parameters, ``fsutil.store_path``)."""
     spark = df.sparkSession
     requested = {
         "num_hashes": num_hashes,
@@ -296,28 +276,31 @@ def ensure_minhash_index(
         "bucket_mods": bucket_mods,
         "ts_col": ts_col,
     }
-    if path_exists(spark, _p(path, "meta")):
-        stored = read_index_meta(spark, path)
-        if stored != requested:
-            raise ValueError(
-                f"index at {path} was built with {stored}, "
-                f"requested {requested}; pick a new path or rebuild "
-                "explicitly with build_minhash_index"
-            )
-        return stored
-    return build_minhash_index(
-        df,
-        path,
-        text_col,
-        id_col,
-        num_hashes,
-        bands,
-        shingle_size,
-        hasher,
-        bucket_mods,
-        signature_partitions,
-        ts_col,
+    build_once(
+        spark,
+        _p(path, "meta"),
+        lambda: build_minhash_index(
+            df,
+            path,
+            text_col,
+            id_col,
+            num_hashes,
+            bands,
+            shingle_size,
+            hasher,
+            bucket_mods,
+            signature_partitions,
+            ts_col,
+        ),
     )
+    stored = read_index_meta(spark, path)
+    if stored != requested:
+        raise ValueError(
+            f"index at {path} was built with {stored}, "
+            f"requested {requested}; pick a new path or rebuild "
+            "explicitly with build_minhash_index"
+        )
+    return stored
 
 
 def read_index_meta(spark: SparkSession, path: str) -> dict:
@@ -329,7 +312,7 @@ def read_index_meta(spark: SparkSession, path: str) -> dict:
     (r12, verdict-r11 ask #3).  Schema-on-read semantics are kept:
     only ``_META_SCHEMA`` fields are returned, missing nullable fields
     (indexes built before ``ts_col`` existed) read as None."""
-    fs, meta_dir = _meta_fs_path(spark, path)
+    fs, meta_dir = hadoop_fs(spark, _p(path, "meta"))
     if not fs.exists(meta_dir):
         raise FileNotFoundError(f"no index meta under {path}")
     blobs = [

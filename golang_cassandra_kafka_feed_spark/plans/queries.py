@@ -1475,10 +1475,9 @@ def q71(spark, sf_dir):
     (operators/graph.py).  The fixpoint — not the iteration schedule —
     is the contract, so the Spark label-propagation loop and the DuckDB
     recursive-CTE closure hash-match.  Served from the shared
-    materialized component labeling (graph.dup_groups_store, the
-    q110/q124 create-if-absent idiom): the pair graph + fixpoint run
-    once per corpus snapshot and q71/q111 both read the artifact
-    (verdict r8 ask #2)."""
+    materialized component labeling (graph.dup_groups_store, a
+    fsutil.materialize_once store): the pair graph + fixpoint run
+    once per corpus snapshot and q71/q111 both read the artifact."""
     from golang_cassandra_kafka_feed_spark.operators.graph import (
         dup_groups_store,
     )
@@ -2685,26 +2684,25 @@ def q110(spark, sf_dir):
     build once, query every batch) with the path keyed on the corpus
     plan's input files + the signature parameters, so a regenerated
     documents table gets a fresh index while repeat runs over the same
-    files reuse the committed one; a non-file-backed corpus would key
-    on sf_dir alone and rebuild-or-reuse at the caller's risk (same
-    caveat as the IVF centroid memo).  The incremental-vs-full
+    files reuse the committed one (fsutil.store_path); a
+    non-file-backed corpus would key on sf_dir alone and
+    rebuild-or-reuse at the caller's risk (same caveat as the IVF
+    centroid memo).  The incremental-vs-full
     equivalence on a SPLIT corpus (index A, delta B) is asserted in
     tests/test_minhash_index.py.  Reference tie: CAS create-if-absent
     (internal/store/feed.go:46-59) at content level."""
-    import hashlib
-
     from golang_cassandra_kafka_feed_spark.operators.minhash_index import (
         ensure_minhash_index,
         minhash_near_duplicates_incremental,
     )
+    from golang_cassandra_kafka_feed_spark.sources.fsutil import store_path
 
     d = _t(spark, sf_dir, "documents")
     corpus = d.filter(F.col("doc_id") % 5 != 0)
     delta = d.filter(F.col("doc_id") % 5 == 0)
-    staleness_key = "|".join(sorted(d.inputFiles())) or sf_dir
-    idx = "/tmp/gckfs_q110_index_" + hashlib.md5(
-        (staleness_key + "|md5/64/16/3/32").encode()
-    ).hexdigest()[:12]
+    idx = store_path(
+        "q110_index", d.inputFiles() or [sf_dir], "md5/64/16/3/32"
+    )
     ensure_minhash_index(
         corpus,
         idx,
@@ -2917,7 +2915,7 @@ def q113(spark, sf_dir):
 
 
 def q114(spark, sf_dir):
-    """Index retention: build the q110-style band index INCLUDING a
+    """Index retention: build q110's band index INCLUDING a
     doomed slice (doc_id % 10 == 1), delete that slice
     (minhash_index.delete_from_minhash_index — the right-to-erasure
     path), then answer the delta near-dup query against the surviving
@@ -2925,36 +2923,35 @@ def q114(spark, sf_dir):
     doomed docs (q110's first-principles twin + the exclusion filter),
     so hash-equality proves delete == rebuild-without-the-ids — exact
     here because no bucket approaches the 256 width cap at these
-    scales (the documented at-cap caveat).  Build+delete are
-    create-if-absent like q110 (post-delete content is deterministic;
-    the path key carries a retention tag) — but gated on a RETENTION
-    marker written AFTER the delete, not on build's own meta: meta
-    commits the build alone, and a crash between build and delete
-    would otherwise skip the erasure forever while looking complete
-    (review-found, round 7).  Reference tie: the serve-from-
-    materialized-index contract (internal/store/feed.go:143-171);
-    erasure itself is an extension — the reference never deletes."""
-    import hashlib
-
+    scales (the documented at-cap caveat).  Build+delete run once per
+    input set (fsutil.build_once; post-delete content is
+    deterministic and the path key carries a retention tag), gated on
+    a RETENTION marker written after the delete, not on the build's
+    own meta: meta commits the build alone, so a crash between build
+    and delete must not look complete.  Reference tie: the
+    serve-from-materialized-index contract
+    (internal/store/feed.go:143-171); erasure itself is an extension —
+    the reference never deletes."""
     from golang_cassandra_kafka_feed_spark.operators.minhash_index import (
         build_minhash_index,
         delete_from_minhash_index,
         minhash_near_duplicates_incremental,
     )
     from golang_cassandra_kafka_feed_spark.sources.fsutil import (
-        path_exists,
-        write_marker,
+        build_once,
+        store_path,
     )
 
     d = _t(spark, sf_dir, "documents")
     corpus = d.filter(F.col("doc_id") % 5 != 0)
     doomed = d.filter(F.col("doc_id") % 10 == 1).select("doc_id")
     delta = d.filter(F.col("doc_id") % 5 == 0)
-    staleness_key = "|".join(sorted(d.inputFiles())) or sf_dir
-    idx = "/tmp/gckfs_q114_index_" + hashlib.md5(
-        (staleness_key + "|md5/64/16/3/32|retention-v1").encode()
-    ).hexdigest()[:12]
-    if not path_exists(spark, idx + "/RETENTION_APPLIED"):
+    idx = store_path(
+        "q114_index", d.inputFiles() or [sf_dir], "md5/64/16/3/32",
+        "retention-v1",
+    )
+
+    def build() -> None:
         build_minhash_index(
             corpus,
             idx,
@@ -2962,7 +2959,8 @@ def q114(spark, sf_dir):
             signature_partitions=spark.sparkContext.defaultParallelism,
         )
         delete_from_minhash_index(spark, idx, doomed)
-        write_marker(spark, idx + "/RETENTION_APPLIED", "doc_id%10==1")
+
+    build_once(spark, idx + "/RETENTION_APPLIED", build)
     return minhash_near_duplicates_incremental(
         delta, idx, threshold=0.5
     ).orderBy("id_a", "id_b")
@@ -3030,7 +3028,7 @@ def q116(spark, sf_dir):
 
 
 def q117(spark, sf_dir):
-    """Index TTL expiry: build the q110-style band index with a
+    """Index TTL expiry: build q110's band index with a
     per-doc crawl timestamp pinned closed-form in doc_id
     (2026-01-01 + doc_id % 30 days), expire everything older than
     2026-01-10 (minhash_index.expire_minhash_index — age-based
@@ -3040,21 +3038,19 @@ def q117(spark, sf_dir):
     never contained the expired docs (q110's twin + the closed-form
     age exclusion), so hash-equality proves expire ==
     rebuild-without-expired — exact below the width cap, like q114.
-    Create-if-absent gated on an EXPIRY marker written after the
-    expire, not on build's meta (the q114 composite-op lesson).
-    Reference tie: an age-driven erasure extension of the recency
-    serve (internal/store/feed.go:143-171); the reference itself
-    never deletes."""
-    import hashlib
-
+    Build+expire run once per input set (fsutil.build_once), gated on
+    an EXPIRY marker written after the expire, not on the build's
+    meta.  Reference tie: an age-driven erasure extension of the
+    recency serve (internal/store/feed.go:143-171); the reference
+    itself never deletes."""
     from golang_cassandra_kafka_feed_spark.operators.minhash_index import (
         build_minhash_index,
         expire_minhash_index,
         minhash_near_duplicates_incremental,
     )
     from golang_cassandra_kafka_feed_spark.sources.fsutil import (
-        path_exists,
-        write_marker,
+        build_once,
+        store_path,
     )
 
     d = _t(spark, sf_dir, "documents")
@@ -3064,11 +3060,12 @@ def q117(spark, sf_dir):
         + F.make_interval(days=(F.col("doc_id") % 30).cast("int")),
     )
     delta = d.filter(F.col("doc_id") % 5 == 0)
-    staleness_key = "|".join(sorted(d.inputFiles())) or sf_dir
-    idx = "/tmp/gckfs_q117_index_" + hashlib.md5(
-        (staleness_key + "|md5/64/16/3/32|expiry-v1").encode()
-    ).hexdigest()[:12]
-    if not path_exists(spark, idx + "/EXPIRY_APPLIED"):
+    idx = store_path(
+        "q117_index", d.inputFiles() or [sf_dir], "md5/64/16/3/32",
+        "expiry-v1",
+    )
+
+    def build() -> None:
         build_minhash_index(
             corpus,
             idx,
@@ -3077,7 +3074,8 @@ def q117(spark, sf_dir):
             ts_col="crawl_ts",
         )
         expire_minhash_index(spark, idx, "2026-01-10")
-        write_marker(spark, idx + "/EXPIRY_APPLIED", "ts<2026-01-10")
+
+    build_once(spark, idx + "/EXPIRY_APPLIED", build)
     return minhash_near_duplicates_incremental(
         delta, idx, threshold=0.5
     ).orderBy("id_a", "id_b")
@@ -3241,8 +3239,9 @@ def q122(spark, sf_dir):
     the bucketed layout changed the PLAN, not the ANSWER.  Reference
     tie: the Cassandra partition-key-shaped tables (cql:1-37) — layout
     chosen at design time so reads never reshuffle."""
-    import hashlib
+    import posixpath
 
+    from golang_cassandra_kafka_feed_spark.sources.fsutil import store_path
     from golang_cassandra_kafka_feed_spark.sources.sinks import (
         ensure_bucketed_table,
     )
@@ -3251,16 +3250,15 @@ def q122(spark, sf_dir):
     c = _t(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )
-    staleness = "|".join(sorted(o.inputFiles() + c.inputFiles())) or sf_dir
-    key = hashlib.md5(staleness.encode()).hexdigest()[:12]
+    files = o.inputFiles() + c.inputFiles() or [sf_dir]
+    opath = store_path("q122_orders", files, "data-v2")
+    cpath = store_path("q122_cust", files, "data-v2")
     ot = ensure_bucketed_table(
-        spark, o, f"gckfs_q122_orders_{key}",
-        f"/tmp/gckfs_q122_orders_{key}", ["o_custkey"], 16,
+        spark, o, posixpath.basename(opath), opath, ["o_custkey"], 16,
         ["o_custkey"],
     )
     ct = ensure_bucketed_table(
-        spark, c, f"gckfs_q122_cust_{key}",
-        f"/tmp/gckfs_q122_cust_{key}", ["c_custkey"], 16,
+        spark, c, posixpath.basename(cpath), cpath, ["c_custkey"], 16,
         ["c_custkey"],
     )
     j = ot.join(ct, ot.o_custkey == ct.c_custkey)
@@ -3308,57 +3306,36 @@ def q124(spark, sf_dir):
     """Incremental rollup maintenance (the continuous-aggregate /
     hypertable pattern): the per-(day, event_type) aggregate for the
     immutable history (ts < 2024-01-21) is computed ONCE and stored as
-    mergeable partials; the live query aggregates only the tail
-    (ts >= cutoff, parquet row-group stats prune the history bytes)
-    and MERGES stored + fresh partials — count by sum, amount by
-    exact DECIMAL(18,2) sums (associative, so partial/final merge
-    order can never move a bit; the TPC-H decimal idiom) — proving
-    reference op #36's partial/final-merge contract over a stored
-    boundary.  The oracle aggregates all events in one pass, so
+    mergeable partials (streaming/rollup.py::rollup_partials, in a
+    fsutil.materialize_once store); the live query aggregates only the
+    tail (ts >= cutoff, parquet row-group stats prune the history
+    bytes) with the same partials and MERGES stored + fresh — count by
+    sum, amount by exact DECIMAL sums (associative, so partial/final
+    merge order can never move a bit; the TPC-H decimal idiom) —
+    proving reference op #36's partial/final-merge contract over a
+    stored boundary.  The oracle aggregates all events in one pass, so
     hash-equality proves merge == recompute.  At 100 TB this is the
     difference between scanning 30 days and scanning one: history
     partitions are never rescanned.  Reference tie: the feed
     fan-out's write-once-read-many materialization
     (internal/store/feed.go:129-141, AddToFeed) applied to
     aggregates."""
-    import hashlib
-
     from golang_cassandra_kafka_feed_spark.sources.fsutil import (
-        path_exists,
-        write_marker,
+        materialize_once,
+        store_path,
+    )
+    from golang_cassandra_kafka_feed_spark.streaming.rollup import (
+        rollup_partials,
     )
 
     ev = _t(spark, sf_dir, "events")
     cutoff = F.lit("2024-01-21").cast("timestamp")
-    day = F.date_trunc("day", "ts").cast("date").alias("day")
-    partials = lambda df: df.groupBy(day, "event_type").agg(  # noqa: E731
-        F.count(F.lit(1)).alias("n_part"),
-        F.sum(F.col("value").cast("decimal(18,2)")).alias("sum_part"),
+    stored = materialize_once(
+        spark,
+        store_path("q124_rollup", ev.inputFiles() or [sf_dir], "day-type-v2"),
+        lambda: rollup_partials(ev.filter(F.col("ts") < cutoff)),
     )
-    staleness_key = "|".join(sorted(ev.inputFiles())) or sf_dir
-    path = "/tmp/gckfs_q124_rollup_" + hashlib.md5(
-        (staleness_key + "|day-type-v1").encode()
-    ).hexdigest()[:12]
-    if not path_exists(spark, path + "/_ROLLUP_COMMITTED"):
-        # build under the table lock + marker recheck: a concurrent
-        # session must wait, then find the marker and read — never
-        # overwrite files another session is reading (review-found;
-        # the ensure_bucketed_table pattern).  Lock at the path root
-        # survives the overwrite, which only clears path/data.
-        from golang_cassandra_kafka_feed_spark.feed.lock import (
-            table_lock,
-        )
-
-        with table_lock(path, "rollup_build"):
-            if not path_exists(spark, path + "/_ROLLUP_COMMITTED"):
-                partials(ev.filter(F.col("ts") < cutoff)).write.mode(
-                    "overwrite"
-                ).parquet(path + "/data")
-                write_marker(
-                    spark, path + "/_ROLLUP_COMMITTED", "ts<2024-01-21"
-                )
-    stored = spark.read.parquet(path + "/data")
-    fresh = partials(ev.filter(F.col("ts") >= cutoff))
+    fresh = rollup_partials(ev.filter(F.col("ts") >= cutoff))
     return (
         stored.unionByName(fresh)
         .groupBy("day", "event_type")
@@ -3472,32 +3449,34 @@ def q127(spark, sf_dir):
 
 
 def q128(spark, sf_dir):
-    """Streaming rollup maintenance, driver-checkable (verdict-r8 ask
-    #6): the events table arrives as FOUR file drops consumed by a
-    REAL Structured Streaming run (file source, maxFilesPerTrigger=1,
-    availableNow → four checkpointed micro-batches) whose foreachBatch
-    maintains the per-(day, type) rollup through the exactly-once
-    pointer protocol (streaming/rollup.py — version dirs + atomic
-    _CURRENT move, run guard, writer lease).  The returned frame is
-    the MAINTAINED STATE read back via the committed pointer; the
-    oracle recomputes the same aggregate from the raw table in one
-    pass, so hash-equality externally proves merge-over-micro-batches
-    == recompute (the q124 boundary argument, now through the actual
-    streaming machinery instead of a batch-simulated boundary; crash
-    windows and replay are pinned by test_streaming_rollup.py).
+    """Streaming rollup maintenance, driver-checkable: the events
+    table arrives as FOUR file drops consumed by a REAL Structured
+    Streaming run (file source, maxFilesPerTrigger=1, availableNow →
+    four checkpointed micro-batches) whose foreachBatch maintains the
+    per-(day, type) rollup through the exactly-once pointer protocol
+    (streaming/rollup.py — version dirs + atomic _CURRENT move, run
+    guard, writer lease).  The returned frame is the MAINTAINED STATE
+    read back via the committed pointer; the oracle recomputes the
+    same aggregate from the raw table in one pass, so hash-equality
+    externally proves merge-over-micro-batches == recompute (the q124
+    boundary argument, through the actual streaming machinery instead
+    of a batch-simulated boundary; crash windows and replay are pinned
+    by test_streaming_rollup.py).
 
-    Build is create-if-absent (the q110/q124 idiom): the arrival
-    files, checkpoint, and rollup live under a path keyed on the
-    events table's input files, so steady runs read the committed
-    rollup only — exactly how a production continuous aggregate is
-    consumed.  Decimal partials make merge order bit-irrelevant."""
+    The arrival files, checkpoint and rollup live in one store keyed
+    on the events table's input files (fsutil.store_path), streamed
+    once (fsutil.build_once, marker ``_STREAMED``), so steady runs read
+    the committed rollup only — exactly how a production continuous
+    aggregate is consumed.  Decimal partials make merge order
+    bit-irrelevant."""
     import glob as _glob
-    import hashlib
+    import os as _os
     import shutil
+    from concurrent.futures import ThreadPoolExecutor
 
     from golang_cassandra_kafka_feed_spark.sources.fsutil import (
-        path_exists,
-        write_marker,
+        build_once,
+        store_path,
     )
     from golang_cassandra_kafka_feed_spark.streaming.rollup import (
         drain_or_raise,
@@ -3506,60 +3485,47 @@ def q128(spark, sf_dir):
     )
 
     ev = _t(spark, sf_dir, "events")
-    staleness_key = "|".join(sorted(ev.inputFiles())) or sf_dir
-    root = "/tmp/gckfs_q128_" + hashlib.md5(
-        (staleness_key + "|stream-rollup-v1").encode()
-    ).hexdigest()[:12]
+    root = store_path(
+        "q128", ev.inputFiles() or [sf_dir], "stream-rollup-v1"
+    )
     roll = root + "/rollup"
-    if not path_exists(spark, root + "/_STREAMED"):
-        from golang_cassandra_kafka_feed_spark.feed.lock import (
-            table_lock,
+
+    def _stage_group(g: int) -> None:
+        stage = f"{root}/stage{g}"
+        ev.filter(
+            F.pmod(F.col("event_id"), F.lit(4)) == g
+        ).coalesce(1).write.mode("overwrite").parquet(stage)
+        part = _glob.glob(stage + "/part-*.parquet")[0]
+        shutil.move(part, f"{root}/src/g{g}.parquet")
+        shutil.rmtree(stage, ignore_errors=True)
+
+    def build() -> None:
+        # four deterministic arrival groups -> four source files
+        # (hidden _SUCCESS/.crc files are ignored by the file streaming
+        # source).  The four writes are independent single-file jobs
+        # into disjoint dirs, so they overlap.  Arrival ORDER of the
+        # four files may then vary by mtime, but maxFilesPerTrigger=1
+        # makes each file its own epoch regardless, and the rollup's
+        # decimal partials are merge-order-insensitive by design — the
+        # committed rollup is identical (oracle-checked).
+        _os.makedirs(root + "/src", exist_ok=True)
+        with ThreadPoolExecutor(max_workers=4) as pool:
+            for _f in [pool.submit(_stage_group, g) for g in range(4)]:
+                _f.result()
+        q = (
+            spark.readStream.schema(ev.schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(root + "/src")
+            .writeStream.foreachBatch(
+                rollup_foreach_batch(roll, run_id="q128")
+            )
+            .option("checkpointLocation", root + "/ck")
+            .trigger(availableNow=True)
+            .start()
         )
+        drain_or_raise(q, 300, "q128 rollup stream")
 
-        with table_lock(root, "q128_build"):
-            if not path_exists(spark, root + "/_STREAMED"):
-                # four deterministic arrival groups -> four source
-                # files (hidden _SUCCESS/.crc files are ignored by the
-                # file streaming source).  The four writes are
-                # independent single-file jobs into disjoint dirs —
-                # overlap them (guide §2.6; r12, build-side only).
-                # Arrival ORDER of the four files may now vary by
-                # mtime, but maxFilesPerTrigger=1 makes each file its
-                # own epoch regardless, and the rollup's decimal
-                # partials are merge-order-insensitive by design — the
-                # committed rollup is identical (oracle-checked).
-                import os as _os
-                from concurrent.futures import ThreadPoolExecutor
-
-                _os.makedirs(root + "/src", exist_ok=True)
-
-                def _stage_group(g: int) -> None:
-                    stage = f"{root}/stage{g}"
-                    ev.filter(
-                        F.pmod(F.col("event_id"), F.lit(4)) == g
-                    ).coalesce(1).write.mode("overwrite").parquet(stage)
-                    part = _glob.glob(stage + "/part-*.parquet")[0]
-                    shutil.move(part, f"{root}/src/g{g}.parquet")
-                    shutil.rmtree(stage, ignore_errors=True)
-
-                with ThreadPoolExecutor(max_workers=4) as pool:
-                    for _f in [
-                        pool.submit(_stage_group, g) for g in range(4)
-                    ]:
-                        _f.result()
-                q = (
-                    spark.readStream.schema(ev.schema)
-                    .option("maxFilesPerTrigger", "1")
-                    .parquet(root + "/src")
-                    .writeStream.foreachBatch(
-                        rollup_foreach_batch(roll, run_id="q128")
-                    )
-                    .option("checkpointLocation", root + "/ck")
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                drain_or_raise(q, 300, "q128 rollup stream")
-                write_marker(spark, root + "/_STREAMED", "4 batches")
+    build_once(spark, root + "/_STREAMED", build)
     return (
         read_rollup(spark, roll)
         .select(

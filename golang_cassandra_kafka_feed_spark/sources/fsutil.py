@@ -12,16 +12,23 @@ falling back to ``os.path`` only if the JVM gateway is unavailable.
 
 from __future__ import annotations
 
+import hashlib
+import posixpath
 import re
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+
+def hadoop_fs(spark: SparkSession, path: str):
+    """``(fs, hpath)``: the Hadoop FileSystem serving ``path`` under the
+    session's configuration, and ``path`` as a Hadoop ``Path``."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)  # type: ignore[union-attr]
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p  # type: ignore[union-attr]
 
 
 def path_exists(spark: SparkSession, path: str) -> bool:
     try:
-        jvm = spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(path)  # type: ignore[union-attr]
-        fs = p.getFileSystem(spark._jsc.hadoopConfiguration())  # type: ignore[union-attr]
+        fs, p = hadoop_fs(spark, path)
     except Exception:
         # JVM gateway genuinely unavailable — local-path fallback only
         import os
@@ -45,16 +52,9 @@ def read_stream(jvm, stream) -> bytes:
 
 
 def write_marker(spark: SparkSession, path: str, content: str = "") -> None:
-    """Write a tiny commit-marker file through the Hadoop FS API
-    (file://, hdfs://, s3a://, ...).  Write the marker LAST, after
-    every step it vouches for: ``path_exists(marker)`` then means the
-    whole multi-step operation completed, and a crash anywhere before
-    leaves no marker so the caller redoes the operation from scratch
-    (the minhash-index meta pattern, reusable for composite steps like
-    build-then-delete)."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)  # type: ignore[union-attr]
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())  # type: ignore[union-attr]
+    """Write a tiny marker file through the Hadoop FS API (file://,
+    hdfs://, s3a://, ...), truncating any previous content."""
+    fs, p = hadoop_fs(spark, path)
     out = fs.create(p, True)
     try:
         out.write(bytearray(content.encode("utf-8")))
@@ -62,33 +62,54 @@ def write_marker(spark: SparkSession, path: str, content: str = "") -> None:
         out.close()
 
 
-def materialize_once(spark: SparkSession, path: str, build) -> "object":
-    """Create-if-absent parquet materialization of a DETERMINISTIC
-    stage: build once under the table lock + commit marker (the
-    q110/q124 idiom — concurrent sessions wait, then find the marker
-    and read; never overwrite files another session is reading), then
-    every caller answers from the parquet.
+def store_path(name: str, files: list[str], *params) -> str:
+    """``/tmp/gckfs_<name>_<key>``, the home of a cross-run store: the
+    key is the md5 of the sorted input files and the build parameters,
+    so a different corpus, scale factor or parameter never serves a
+    stale store."""
+    key = "|".join(sorted(files) + [str(p) for p in params])
+    return f"/tmp/gckfs_{name}_{hashlib.md5(key.encode()).hexdigest()[:12]}"
 
-    The caller owns staleness: embed the input-file list and stage
-    parameters in ``path`` (the md5-key idiom) so different inputs can
-    never serve a stale artifact.  ``build`` is a zero-arg callable
-    returning the DataFrame to persist.  This is the production shape
-    for shared derived artifacts at 100 TB — a pair graph or component
-    labeling consumed by several curation stages is computed once and
-    amortized, not re-derived per consumer."""
-    marker = path.rstrip("/") + "/_STAGE_COMMITTED"
-    if not path_exists(spark, marker):
-        from golang_cassandra_kafka_feed_spark.feed.lock import (
-            table_lock,
-        )
 
-        with table_lock(path, "stage_build"):
+def build_once(spark: SparkSession, marker: str, build) -> None:
+    """Create-if-absent build of the store in ``marker``'s directory.
+
+    The one protocol of every cross-run store: when ``marker`` is
+    absent, take ``table_lock`` in its directory, re-check the marker
+    under the lock, run ``build()`` and write the marker LAST.  A
+    concurrent session waits on the lock, then finds the marker and
+    leaves the store alone, so no build overwrites files another session
+    is reading; a crash before the marker leaves none, and the next
+    call builds from scratch.  A build may commit the marker itself as
+    its own last step (the MinHash index's ``meta``).
+
+    The caller owns staleness (``store_path``) and the store's layout:
+    ``build`` writes below the marker's directory without clearing it,
+    since the lock file lives there."""
+    if path_exists(spark, marker):
+        return
+    from golang_cassandra_kafka_feed_spark.feed.lock import table_lock
+
+    with table_lock(posixpath.dirname(marker), "build"):
+        if not path_exists(spark, marker):
+            build()
             if not path_exists(spark, marker):
-                build().write.mode("overwrite").parquet(
-                    path.rstrip("/") + "/data"
-                )
-                write_marker(spark, marker, "")
-    return spark.read.parquet(path.rstrip("/") + "/data")
+                write_marker(spark, marker)
+
+
+def materialize_once(spark: SparkSession, path: str, build) -> DataFrame:
+    """A create-if-absent parquet store at ``path/data`` of the
+    DataFrame ``build()`` returns (``build_once``, marker
+    ``_STAGE_COMMITTED``); every caller answers from the parquet.  The
+    build must be deterministic, and ``path`` comes from
+    ``store_path``."""
+    data = path.rstrip("/") + "/data"
+    build_once(
+        spark,
+        path.rstrip("/") + "/_STAGE_COMMITTED",
+        lambda: build().write.mode("overwrite").parquet(data),
+    )
+    return spark.read.parquet(data)
 
 
 def write_marker_atomic(
@@ -109,12 +130,8 @@ def write_marker_atomic(
     so the old pointer is deleted first; that delete→rename gap is the
     "missing pointer" window above — safe by construction for callers
     that treat absence as recover-from-state."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)  # type: ignore[union-attr]
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())  # type: ignore[union-attr]
-    tmp = jvm.org.apache.hadoop.fs.Path(  # type: ignore[union-attr]
-        path + ".tmp"
-    )
+    fs, p = hadoop_fs(spark, path)
+    tmp = p.suffix(".tmp")
     out = fs.create(tmp, True)
     try:
         out.write(bytearray(content.encode("utf-8")))
@@ -132,12 +149,10 @@ def read_marker(spark: SparkSession, path: str) -> str | None:
     commit (e.g. the streaming rollup's _CURRENT version)."""
     if not path_exists(spark, path):
         return None
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)  # type: ignore[union-attr]
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())  # type: ignore[union-attr]
+    fs, p = hadoop_fs(spark, path)
     stream = fs.open(p)
     try:
-        return read_stream(jvm, stream).decode("utf-8")
+        return read_stream(spark._jvm, stream).decode("utf-8")
     finally:
         stream.close()
 

@@ -139,15 +139,14 @@ def _register_existing_bucketed(
     sort_cols: list[str] | None,
 ) -> None:
     """Catalog-register an ALREADY-BUILT bucketed layout at ``path``
-    without touching its files — the second-session path of
-    ``ensure_bucketed_table`` (the files are complete per the commit
-    marker; rewriting them would yank the layout out from under a
-    session that is reading it, review-found)."""
+    without touching its files (a no-op when the table is registered)
+    — rewriting them would yank the layout out from under a session
+    that is reading it."""
     sort = (
         f" SORTED BY ({', '.join(sort_cols)})" if sort_cols else ""
     )
     spark.sql(
-        f"CREATE TABLE {table} ({schema_ddl}) USING PARQUET "
+        f"CREATE TABLE IF NOT EXISTS {table} ({schema_ddl}) USING PARQUET "
         f"CLUSTERED BY ({', '.join(bucket_cols)}){sort} "
         f"INTO {n_buckets} BUCKETS LOCATION '{path}'"
     )
@@ -163,54 +162,36 @@ def ensure_bucketed_table(
     sort_cols: list[str] | None = None,
 ) -> DataFrame:
     """Create-if-absent wrapper around ``write_bucketed`` returning the
-    catalog-backed DataFrame.  Bucket metadata lives in the SESSION
-    catalog (the in-memory default has no cross-session persistence),
-    so the memo is catalog-scoped: a fresh session rewrites once —
-    and every subsequent read in the session joins shuffle-free.
-    Callers embed a staleness hash in ``table``/``path`` (the q110
-    inputFiles idiom) so a different scale factor can never serve a
-    stale layout.
-
-    Concurrency (review-found): two sessions sharing ``path`` used to
-    race — the second saw ``tableExists=False`` (the memo is
-    catalog-scoped) and OVERWROTE files the first was reading.  The
-    build now runs under the repo's table lock with a commit marker:
-    exactly one session ever writes the files; a later session finds
-    the marker and registers the existing layout in its own catalog
-    without touching the data (``_register_existing_bucketed``).
-    Marker-before-read ordering is safe because the marker is written
-    LAST, after the full ``saveAsTable`` — the fsutil write-marker
-    contract."""
+    catalog-backed DataFrame.  The files are built once per ``path``
+    (``fsutil.build_once``, marker ``_BUCKETED_COMMITTED``) into
+    ``path/data``, so the build lock lives in the store directory and
+    the overwrite never clears it.  Bucket metadata lives in the
+    SESSION catalog (the in-memory default has no cross-session
+    persistence), so a session that finds the layout committed by
+    another registers the existing files in its own catalog without
+    touching them; every later read in the session joins shuffle-free.
+    ``path`` comes from ``fsutil.store_path``, so a different scale
+    factor never serves a stale layout."""
     if not spark.catalog.tableExists(table):
-        from golang_cassandra_kafka_feed_spark.feed.lock import (
-            table_lock,
-        )
         from golang_cassandra_kafka_feed_spark.sources.fsutil import (
-            path_exists,
-            write_marker,
+            build_once,
         )
 
-        import os
-
-        marker = path.rstrip("/") + "/_BUCKETED_COMMITTED"
-        # lock lives in the PARENT dir: the overwrite build clears the
-        # table location itself, which would delete a lock inside it
-        base, name = os.path.split(path.rstrip("/"))
-        with table_lock(base or ".", f"{name}.bucketed_build"):
-            if not spark.catalog.tableExists(table):
-                if path_exists(spark, marker):
-                    _register_existing_bucketed(
-                        spark,
-                        df.schema.toDDL(),
-                        table,
-                        path,
-                        bucket_cols,
-                        n_buckets,
-                        sort_cols,
-                    )
-                else:
-                    write_bucketed(
-                        df, table, path, bucket_cols, n_buckets, sort_cols
-                    )
-                    write_marker(spark, marker, "")
+        data = path.rstrip("/") + "/data"
+        build_once(
+            spark,
+            path.rstrip("/") + "/_BUCKETED_COMMITTED",
+            lambda: write_bucketed(
+                df, table, data, bucket_cols, n_buckets, sort_cols
+            ),
+        )
+        _register_existing_bucketed(
+            spark,
+            df.schema.toDDL(),
+            table,
+            data,
+            bucket_cols,
+            n_buckets,
+            sort_cols,
+        )
     return spark.table(table)

@@ -47,17 +47,15 @@ Two operational guards (review-found):
   SAME checkpoint, different for a new one); a mismatch RAISES —
   the operator resumes the original checkpoint or starts a fresh
   rollup path, instead of silently losing merges either way.
-- **single-writer enforcement**: ``lease=True`` (default) wraps the
-  read-merge-write-move sequence in the repo's filesystem lease lock
-  (feed/lock.py), so a repair job racing the stream on the same path
-  becomes a bounded wait or a loud error, never a lost update.  The
-  lease lives on the ROLLUP PATH'S OWN filesystem: a remote URI path
-  (hdfs://, s3a://) routes the lock through the Hadoop FileSystem API
-  (a driver-local lock file would protect nothing for object-store
-  paths), a bare local path or ``file:`` URI locks with the local
-  os.O_EXCL create.  Exclusion strength is the
-  store's create contract (atomic on HDFS; enable conditional PUT on
-  S3A) — see feed/lock.py.
+- **single-writer enforcement**: every batch runs its
+  read-merge-write-move sequence under the repo's filesystem lease
+  lock (feed/lock.py), so a repair job racing the stream on the same
+  path becomes a bounded wait or a loud error, never a lost update.
+  The lease lives on the ROLLUP PATH'S OWN filesystem: a remote URI
+  path (hdfs://, s3a://) routes the lock through the Hadoop FileSystem
+  API, a bare local path or ``file:`` URI locks with the local
+  os.O_EXCL create.  Exclusion strength is the store's create contract
+  (atomic on HDFS; enable conditional PUT on S3A) — see feed/lock.py.
 
 Partials are mergeable by construction: counts by sum, amounts by
 exact DECIMAL(18,2) sums (associative — the q124/TPC-H idiom), so
@@ -76,13 +74,14 @@ by a stream.
 
 from __future__ import annotations
 
-import contextlib
 from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from golang_cassandra_kafka_feed_spark.feed.lock import table_lock
 from golang_cassandra_kafka_feed_spark.sources.fsutil import (
+    hadoop_fs,
     read_marker,
     write_marker_atomic,
 )
@@ -115,9 +114,7 @@ def rollup_partials(
 
 def _complete_versions(spark, path: str) -> list[int]:
     """Batch ids of version dirs with a parquet ``_SUCCESS`` marker."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path + "/v*/_SUCCESS")
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, p = hadoop_fs(spark, path + "/v*/_SUCCESS")
     out = []
     for st in fs.globStatus(p) or []:
         name = st.getPath().getParent().getName()
@@ -235,7 +232,6 @@ def rollup_foreach_batch(
     type_col: str = "event_type",
     value_col: str = "value",
     run_id: str | None = None,
-    lease: bool = True,
 ) -> Callable[[DataFrame, int], None]:
     """The ``foreachBatch`` function maintaining the rollup at
     ``path``.  Usage::
@@ -245,9 +241,8 @@ def rollup_foreach_batch(
 
     ``run_id`` overrides the recorded run identity (defaults to the
     owning streaming query's checkpoint-persisted id — see
-    ``_run_identity`` — or 'adhoc' for direct calls); ``lease=False``
-    disables the driver-local single-writer lock for object-store
-    paths."""
+    ``_run_identity`` — or 'adhoc' for direct calls).  Every batch
+    holds the rollup path's lease (``table_lock``) while it merges."""
     # one closure == one run: pin the first resolution so the identity
     # cannot flip between batches (review-found) even if other streams
     # start or stop in the same session mid-run.
@@ -258,15 +253,7 @@ def rollup_foreach_batch(
         run = pinned.setdefault(
             "run", _run_identity(batch_df, run_id)
         )
-        if lease:
-            from golang_cassandra_kafka_feed_spark.feed.lock import (
-                table_lock,
-            )
-
-            guard = table_lock(path, "_rollup")
-        else:
-            guard = contextlib.nullcontext()
-        with guard:
+        with table_lock(path, "_rollup"):
             cur = _resolve_current(spark, path)
             if cur is not None:
                 cur_id, cur_run = cur

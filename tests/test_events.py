@@ -340,7 +340,7 @@ def test_q124_rollup_memoizes_and_prunes_history_from_the_live_scan(
     q = QUERIES["q124_incremental_rollup"]
     r1 = q(spark, sf_dir)
     rows1 = sorted(map(tuple, r1.collect()))  # builds if absent
-    marker = glob.glob("/tmp/gckfs_q124_rollup_*/_ROLLUP_COMMITTED")
+    marker = glob.glob("/tmp/gckfs_q124_rollup_*/_STAGE_COMMITTED")
     assert marker
     mt = max(os.path.getmtime(m) for m in marker)
     r2 = q(spark, sf_dir)

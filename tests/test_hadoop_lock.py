@@ -1,6 +1,6 @@
 """URI-scoped table lock (feed/lock.py routes on the scheme): the lock
 must live on the DATA path's filesystem, so an object-store rollup's
-``lease=True`` is honest, not a driver-local no-op.
+single-writer lease is honest, not a driver-local no-op.
 A ``file:`` URI locks with the local primitives (atomic ``O_EXCL``
 create) next to its data; remote schemes go through the Hadoop
 FileSystem primitives (``_HFS``), whose contract is tested on a
@@ -131,7 +131,7 @@ def test_uri_empty_lock_file_waited_then_taken_over(spark, tmp_path):
 
 
 def test_rollup_lease_true_is_honest_on_uri_paths(spark, tmp_path):
-    """rollup_foreach_batch(lease=True) on a file://-as-remote path:
+    """rollup_foreach_batch's lease on a file://-as-remote path:
     the single-writer lease now lives next to the rollup data.  A
     repair job holding the lease blocks the stream's batch apply until
     release (bounded wait), and the maintained state still equals the

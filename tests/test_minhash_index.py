@@ -193,6 +193,47 @@ def test_ensure_rebuilds_an_uncommitted_index(spark, tmp_path):
     assert read_index_meta(spark, idx)["num_hashes"] == 64
 
 
+def test_concurrent_ensure_builds_the_index_once(
+    spark, tmp_path, monkeypatch
+):
+    """Two sessions ensuring the same index path at once: one builds
+    under the store's lock, the other waits, finds the committed meta
+    and reuses it, so no build ever rewrites files a reader holds."""
+    import threading
+
+    from golang_cassandra_kafka_feed_spark.operators import minhash_index
+
+    builds = []
+    real_build = minhash_index.build_minhash_index
+
+    def counting_build(*args, **kwargs):
+        builds.append(1)
+        return real_build(*args, **kwargs)
+
+    monkeypatch.setattr(minhash_index, "build_minhash_index", counting_build)
+    idx = str(tmp_path / "idx")
+    corpus = _corpus(spark, n=12)
+    start = threading.Barrier(2)
+    metas, errors = [], []
+
+    def ensure():
+        try:
+            start.wait(timeout=30)
+            metas.append(ensure_minhash_index(corpus, idx, hasher="md5"))
+        except BaseException as e:  # noqa: BLE001 — re-raised below
+            errors.append(e)
+
+    threads = [threading.Thread(target=ensure) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert len(builds) == 1, f"index built {len(builds)} times"
+    assert len(metas) == 2 and metas[0] == metas[1]
+
+
 def test_build_write_shape_is_mod_aligned(spark, tmp_path):
     """Band files are aligned to bucket_mod directories: O(mods)
     parquet files total, not a tasks x dirs spray — the small-files

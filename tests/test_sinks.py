@@ -180,6 +180,41 @@ def test_ensure_bucketed_table_reregisters_committed_layout(
         spark.sql("DROP TABLE IF EXISTS gckfs_test_ens2")
 
 
+def test_ensure_bucketed_table_locks_inside_its_store(
+    spark, tmp_path, monkeypatch
+):
+    """The build lock lives in the store directory, where a cleaner that
+    skips stores with a live lease can see it, and nothing is left in
+    the parent directory."""
+    import glob
+
+    from golang_cassandra_kafka_feed_spark.feed.lock import lease_state
+    from golang_cassandra_kafka_feed_spark.sources import sinks
+
+    path = str(tmp_path / "gckfs_ens3")
+    seen = {}
+    real_write = sinks.write_bucketed
+
+    def observing_write(*args, **kwargs):
+        seen["parent"] = glob.glob(str(tmp_path / ".*.lock"))
+        seen["store"] = [
+            lease_state(lock)[0] for lock in glob.glob(path + "/.*.lock")
+        ]
+        real_write(*args, **kwargs)
+
+    monkeypatch.setattr(sinks, "write_bucketed", observing_write)
+    df = spark.range(20).withColumnRenamed("id", "k")
+    try:
+        sinks.ensure_bucketed_table(
+            spark, df, "gckfs_test_ens3", path, ["k"], 4, ["k"]
+        )
+        assert seen["parent"] == [], "build lock left in the parent dir"
+        assert seen["store"] == ["live"], "no live lease in the store dir"
+        assert glob.glob(str(tmp_path / ".*")) == []
+    finally:
+        spark.sql("DROP TABLE IF EXISTS gckfs_test_ens3")
+
+
 def test_csv_multi_file_roundtrip_value_exact(spark, tmp_path):
     """maxRecordsPerFile bounds every CSV file (the multiLine reader
     makes files unsplittable, so bounded files = bounded serialism);
