@@ -74,7 +74,7 @@ def store_path(name: str, files: list[str], *params) -> str:
 def build_once(spark: SparkSession, marker: str, build) -> None:
     """Create-if-absent build of the store in ``marker``'s directory.
 
-    The one protocol of every cross-run store: when ``marker`` is
+    The one protocol of every create-if-absent store: when ``marker`` is
     absent, take ``table_lock`` in its directory, re-check the marker
     under the lock, run ``build()`` and write the marker LAST.  A
     concurrent session waits on the lock, then finds the marker and
