@@ -27,10 +27,8 @@ TakeOrderedAndProject, which is cheap on pruned input.
 from __future__ import annotations
 
 import collections
-import contextvars
 import os
 import threading
-from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -38,13 +36,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from golang_cassandra_kafka_feed_spark.feed.lock import table_lock
-
-# The (base, table) leases the current call context holds: a leased write
-# run inside another's lease on the same table (``add_posts`` runs
-# ``fan_out`` under the feed lease) does not wait on its own lease.
-_HELD_LEASES: contextvars.ContextVar[frozenset] = contextvars.ContextVar(
-    "feed_held_leases", default=frozenset()
-)
 
 
 def valid_length(col: str, lo: int, hi: int) -> F.Column:
@@ -149,14 +140,13 @@ class FeedStore:
     (reference: one Cassandra partition per user, cql:30-37; at 100 TB a
     bucket count ~ O(cluster cores) keeps files large and reads pruned).
 
-    Writes: the read-modify-write mutators (``create_users``,
-    ``fan_out`` and ``compact``) always run under their table's lease
-    (feed/lock.py, the LWT twin), held in the base dir, so two stores or
-    jobs on one base serialize their anti-join + append and leave one row
-    per key.  ``add_posts`` takes the feed lease before either of its
-    appends starts.  The ``posts`` table and ``create_follows`` have no
-    lease of their own: their anti-joins are exact within one writer
-    only.
+    Writes: every write runs its key check and append under its own
+    table's lease (feed/lock.py, the LWT twin), held in the base dir, so
+    two stores or jobs on one base serialize and leave one row per key
+    in every table.  ``add_posts`` writes two tables: it holds the
+    ``posts`` lease, then takes the feed lease inside it (lock order
+    posts → feed, which nothing reverses) and commits the feed first, so
+    a replay after a crash between the two commits writes both.
 
     Table handles: every read goes through one schema-pinned DataFrame per
     table, resolved lazily on first use and then reused, so a point read
@@ -165,11 +155,10 @@ class FeedStore:
     A handle's file listing is fixed when it is resolved, so:
 
     - every write through this store drops the written table's handle
-      right after the write (inside any lease it holds), and the next
-      read re-lists — read-your-writes holds on one instance;
-    - the leased mutators also drop the handle right after acquiring the
-      lease, so they see what other instances or processes committed
-      under it;
+      right after the write (inside its lease), and the next read
+      re-lists — read-your-writes holds on one instance;
+    - every write also drops the handle right after acquiring its lease,
+      so it sees what other instances or processes committed under it;
     - any other outside writer (another instance, a copy into the
       table directory) becomes visible after ``refresh(table)``.
 
@@ -239,20 +228,26 @@ class FeedStore:
         the base's own filesystem (local, ``file:``, or Hadoop for
         remote schemes).  The table's handle is dropped on entry: other
         instances or processes may have committed under the lease, so
-        the body re-lists.  Inside a lease this call context already
-        holds on the same table it is a no-op."""
-        key = (self.base, table)
-        held = _HELD_LEASES.get()
-        if key in held:
-            yield
-            return
+        the body re-lists."""
         with table_lock(self.base, table):
-            reset = _HELD_LEASES.set(held | {key})
-            try:
-                self.refresh(table)
-                yield
-            finally:
-                _HELD_LEASES.reset(reset)
+            self.refresh(table)
+            yield
+
+    def _new_rows(self, rows: DataFrame, table: str, keys: list[str]) -> DataFrame:
+        """The rows of ``rows`` whose ``keys`` are not in ``table`` yet,
+        first-wins within the batch: the primary-key upsert (cql:23-37)
+        as one anti-join.  Call it under the table's lease.
+
+        The result is materialized once (``localCheckpoint``), so neither
+        the append that follows nor a later action on the returned frame
+        re-evaluates a plan that reads the table the append grows, or
+        mints a nondeterministic column (a uuid) again."""
+        return (
+            rows.dropDuplicates(keys)
+            .join(self.table(table).select(*keys), keys, "left_anti")
+            .select(*rows.columns)
+            .localCheckpoint(eager=True)
+        )
 
     # -- CreateUser (feed.go:41-74): CAS -> batch dedup + anti-join --------
 
@@ -265,7 +260,7 @@ class FeedStore:
         3. losers against the existing table dropped via left-anti
            (the reference's "read the winner's row" path, feed.go:56-59,
            is a lookup the caller does via ``user_id_by_username``).
-        Returns the newly created rows (with generated UUIDs).
+        Returns the newly created rows, with the UUIDs written.
 
         The anti-join + append run under the ``users`` table lease
         (feed/lock.py, the LWT twin), so username uniqueness also holds
@@ -273,25 +268,13 @@ class FeedStore:
         reference closes with ``INSERT ... IF NOT EXISTS``
         (feed.go:41-74).
         """
-        with self._table_lease("users"):
-            valid = usernames.filter(valid_length("username", 1, 50))
-            fresh = (
-                valid.dropDuplicates(["username"])
-                .join(self.table("users"), "username", "left_anti")
-                .withColumn("user_id", F.expr("uuid()"))
-                .select("user_id", "username")
-            )
-            # Checkpoint BEFORE the append (as add_posts does): the plan
-            # reads the users table the append is about to grow, and
-            # uuid() is nondeterministic — any later action re-executing
-            # this plan would anti-join against the just-written names
-            # (returning empty) or mint different uuids than the ones
-            # written.
-            fresh = fresh.localCheckpoint(eager=True)
-            self._append(fresh, "users")
-        return self.table("users").join(
-            fresh.select("username"), "username", "left_semi"
+        minted = usernames.filter(valid_length("username", 1, 50)).select(
+            F.expr("uuid()").alias("user_id"), "username"
         )
+        with self._table_lease("users"):
+            fresh = self._new_rows(minted, "users", ["username"])
+            self._append(fresh, "users")
+        return fresh
 
     def user_id_by_username(self, username: str) -> DataFrame:
         """GetUserIDByUsername (feed.go:14-28): point lookup, returns 0/1 row."""
@@ -305,21 +288,16 @@ class FeedStore:
 
     def create_follows(self, edges: DataFrame) -> DataFrame:
         """Append follow edges (user_id, followee_id); idempotent on the
-        pair within one writer, self-follows rejected.  The reference's
-        LoggedBatch atomicity across two orientations (feed.go:79-84) is
-        moot: one table serves both scans.  Takes no table lease: two
-        concurrent writers of the same edge can both append it."""
-        fresh = (
-            edges.filter(F.col("user_id") != F.col("followee_id"))
-            .dropDuplicates(["user_id", "followee_id"])
-            .join(
-                self.table("follows"),
-                ["user_id", "followee_id"],
-                "left_anti",
-            )
-        ).localCheckpoint(eager=True)  # sever the follows-table lineage
-        # before appending to it (see create_users)
-        self._append(fresh.select("user_id", "followee_id"), "follows")
+        pair, also across writers (under the ``follows`` lease),
+        self-follows rejected.  The reference's LoggedBatch atomicity
+        across two orientations (feed.go:79-84) is moot: one table serves
+        both scans.  Returns the edges written."""
+        edges = edges.filter(F.col("user_id") != F.col("followee_id")).select(
+            "user_id", "followee_id"
+        )
+        with self._table_lease("follows"):
+            fresh = self._new_rows(edges, "follows", ["user_id", "followee_id"])
+            self._append(fresh, "follows")
         return fresh
 
     def get_followers(self, followee_id: str) -> DataFrame:
@@ -340,43 +318,29 @@ class FeedStore:
         Returns the written posts.
 
         Each ``post_id`` is written once, the ``posts`` primary-key upsert
-        (cql:23-28) made explicit: in-batch duplicates are dropped and
-        posts already stored are anti-joined away, so a redelivered post
-        (kafka.go:92) writes nothing.  The ``posts`` table has no lease
-        of its own (one writer per store is assumed there).
+        (cql:23-28) made explicit: under the ``posts`` lease, in-batch
+        duplicates are dropped and posts already stored are anti-joined
+        away (``_new_rows``), so a redelivered post (kafka.go:92) writes
+        nothing, also when two stores write it.
 
-        The fresh rows are materialized once (``localCheckpoint``).  Then,
-        under the feed lease, the feed fan-out (``fan_out``, which runs
-        inside that lease) and the ``posts`` append run side by side on
-        two driver threads.  Taking the lease first means a lease that
-        cannot be had (``LockTimeout``) fails the call before anything is
-        written: were the ``posts`` append already committed, a retry's
-        posts anti-join would drop the batch and its feed rows would
-        never be written.  The checkpoint makes the batch safe whatever its
-        lineage: a plan that reads this store's ``posts`` table (the
-        gate's own anti-join does) is not re-evaluated against the grown
-        table, not even a persisted one that Spark re-caches after the
-        append.
+        Still under that lease, the feed commits first (``fan_out``, under
+        the feed lease), then ``posts``.  A failed feed write (a crash, a
+        ``LockTimeout``) leaves ``posts`` untouched, so the retry writes
+        both; a failed ``posts`` append after the feed commit is repaired
+        by the retry too, since ``fan_out``'s anti-join drops the feed
+        rows already written.
         """
         # Validate BEFORE dropDuplicates: if one batch carries both a valid
         # and an invalid row for the same post_id, dedup must choose among
         # writable rows only — filtering afterwards would let an arbitrary
         # kept invalid duplicate drop a valid post nondeterministically.
-        fresh = (
-            posts.filter(valid_length("body", 1, 1000))
-            .select(*[f.name for f in POST_SCHEMA.fields])
-            .dropDuplicates(["post_id"])
-            .join(self.table("posts").select("post_id"), "post_id", "left_anti")
-            .localCheckpoint(eager=True)
+        valid = posts.filter(valid_length("body", 1, 1000)).select(
+            *[f.name for f in POST_SCHEMA.fields]
         )
-        with self._table_lease("feed_by_user"):
-            leased = contextvars.copy_context()
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                fanned = pool.submit(leased.run, self.fan_out, fresh)
-                try:
-                    self._append(fresh, "posts")
-                finally:
-                    fanned.result()
+        with self._table_lease("posts"):
+            fresh = self._new_rows(valid, "posts", ["post_id"])
+            self.fan_out(fresh)
+            self._append(fresh, "posts")
         return fresh
 
     def fan_out(self, posts: DataFrame) -> None:
@@ -417,25 +381,21 @@ class FeedStore:
         """One row per processed epoch — the reference's run counters
         (http_load.go:123-130) as a queryable table.  Derived rates:
         malformed/dropped = n_envelopes - n_decoded, redelivered
-        duplicates = n_decoded - n_fresh."""
-        # Idempotent under foreachBatch's at-least-once epoch replay: a
-        # retried epoch must not append a second (contradictory) row for
-        # the same epoch_id — the replayed attempt sees n_fresh=0 after
-        # the first attempt's writes committed.  The metrics table is
-        # tiny; the existence probe is one small scan.
-        existing = (
-            self.table("pipeline_metrics")
-            .filter(F.col("epoch_id") == int(epoch_id))
-            .limit(1)
-            .count()
-        )
-        if existing:
-            return
+        duplicates = n_decoded - n_fresh.
+
+        Keyed on ``epoch_id``: under foreachBatch's at-least-once epoch
+        replay, a retried epoch (which sees n_fresh=0 after the first
+        attempt's writes committed) appends no second, contradictory
+        row."""
         row = self.spark.createDataFrame(
             [(int(epoch_id), int(n_envelopes), int(n_decoded), int(n_fresh))],
             T.StructType(METRICS_SCHEMA.fields[:-1]),
         ).withColumn("recorded_at", F.current_timestamp())
-        self._append(row, "pipeline_metrics")
+        with self._table_lease("pipeline_metrics"):
+            self._append(
+                self._new_rows(row, "pipeline_metrics", ["epoch_id"]),
+                "pipeline_metrics",
+            )
 
     def get_feed(self, user_id: str, limit: int = 50) -> DataFrame:
         """GetFeed (feed.go:143-171): newest-``limit`` feed rows for one
@@ -477,12 +437,10 @@ class FeedStore:
         missing-path window.
 
         Holds the table lease (feed/lock.py) for the whole
-        read-rewrite-swap, so a concurrent ``create_users``/``fan_out``
-        serializes against the swap instead of appending into a
-        directory about to be renamed away, where the append would be
-        dropped with the ``.old`` copy.  The unleased ``posts`` append
-        of ``add_posts`` and ``create_follows`` give no such guarantee:
-        do not compact ``posts`` or ``follows`` while they write.
+        read-rewrite-swap.  Every write takes the same lease, so a
+        concurrent writer serializes against the swap instead of
+        appending into a directory about to be renamed away, where the
+        append would be dropped with the ``.old`` copy.
         """
         with self._table_lease(table):
             try:

@@ -90,10 +90,10 @@ def run_fanout_pipeline(
     the source's at-least-once replay: redelivered posts are dropped by
     the posts anti-join and, for a replayed epoch whose feed write
     committed, by ``fan_out``'s (user_id, post_id) anti-join — the
-    Cassandra PK upsert (cql:36) made explicit.  Known limit:
-    ``add_posts`` runs its two appends at once, so a crash that commits
-    the ``posts`` append but not the feed write leaves a replay that the
-    posts anti-join empties; those feed rows are not written.
+    Cassandra PK upsert (cql:36) made explicit.  ``add_posts`` commits
+    the feed before ``posts``, so a crash between the two commits leaves
+    a replay that writes the missing ``posts`` rows and no second feed
+    row.
 
     ``record_metrics=True`` appends one row per epoch to the store's
     ``pipeline_metrics`` table (epoch_id, n_envelopes, n_decoded, n_fresh)

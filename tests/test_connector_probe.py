@@ -1,4 +1,5 @@
-"""Per-round connector availability probe (VERDICT round-2 ask #5).
+"""Per-round connector availability probe (round-2 ask #5 of VERDICT.md,
+in git history).
 
 Every test run re-checks whether the kafka / cassandra / delta
 integration paths can light up in this environment, two independent

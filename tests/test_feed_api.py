@@ -378,3 +378,50 @@ def test_record_pipeline_metrics_replay_keeps_one_row(spark, store):
         for r in store.table("pipeline_metrics").collect()
     )
     assert rows == [(7, 4, 2, 1), (8, 3, 3, 3)]
+
+
+def test_add_posts_across_instances_one_row_per_post(spark, tmp_path):
+    """Two FeedStores on one base, the second holding a stale ``posts``
+    handle: both add the same post, and it lands once in ``posts`` and
+    once per follower in the feed — the post_id gate runs under the
+    ``posts`` lease, which re-lists the table."""
+    base = str(tmp_path / "shared")
+    a = FeedStore(spark, base, feed_buckets=4)
+    b = FeedStore(spark, base, feed_buckets=4)
+    a.create_follows(
+        spark.createDataFrame([("u1", "a")], "user_id string, followee_id string")
+    )
+    a.add_posts(_posts(spark, [("p0", "a", "zero", TS)]))
+    assert b.table("posts").count() == 1  # b caches this listing
+
+    p1 = _posts(spark, [("p1", "a", "one", TS)])
+    a.add_posts(p1)
+    b.add_posts(p1)
+    b.refresh()
+    assert sorted(r.post_id for r in b.table("posts").collect()) == ["p0", "p1"]
+    feed = sorted(
+        (r.user_id, r.post_id) for r in b.table("feed_by_user").collect()
+    )
+    assert feed == [("u1", "p0"), ("u1", "p1")]
+
+
+def test_create_follows_across_instances_one_row_per_edge(spark, tmp_path):
+    """The same for one edge: with a stale ``follows`` handle on the
+    second store, both stores' ``create_follows`` leave one row."""
+    base = str(tmp_path / "shared")
+    a = FeedStore(spark, base)
+    b = FeedStore(spark, base)
+
+    def edge(user):
+        return spark.createDataFrame(
+            [(user, "a")], "user_id string, followee_id string"
+        )
+
+    a.create_follows(edge("u1"))
+    assert b.table("follows").count() == 1  # b caches this listing
+
+    a.create_follows(edge("u2"))
+    b.create_follows(edge("u2"))
+    b.refresh()
+    edges = sorted(tuple(r) for r in b.table("follows").collect())
+    assert edges == [("u1", "a"), ("u2", "a")]

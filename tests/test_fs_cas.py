@@ -381,3 +381,75 @@ def test_add_posts_lease_timeout_writes_nothing(spark, tmp_path, monkeypatch):
     store.add_posts(posts)  # the retry writes both
     assert store.table("posts").count() == 1
     assert store.table("feed_by_user").count() == 1
+
+
+def _one_post_store(spark, base):
+    import datetime as dt
+
+    store = FeedStore(spark, base, feed_buckets=4)
+    store.create_follows(
+        spark.createDataFrame(
+            [("u0", "author"), ("u1", "author")],
+            "user_id string, followee_id string",
+        )
+    )
+    posts = spark.createDataFrame(
+        [("p0", "author", "body", dt.datetime(2026, 1, 1))],
+        "post_id string, author_id string, body string, created_at timestamp",
+    )
+    return store, posts
+
+
+def _fails_once(monkeypatch, name, when=lambda *a: True):
+    """Make ``FeedStore.<name>`` raise on its first call that ``when``
+    accepts, then behave as before."""
+    real = getattr(FeedStore, name)
+    failed = []
+
+    def dying(self, *a):
+        if not failed and when(*a):
+            failed.append(name)
+            raise RuntimeError(f"{name} died")
+        return real(self, *a)
+
+    monkeypatch.setattr(FeedStore, name, dying)
+
+
+def test_add_posts_feed_failure_leaves_posts_for_the_retry(
+    spark, tmp_path, monkeypatch
+):
+    """The crash window between ``add_posts``'s two commits: a feed write
+    that dies commits no ``posts`` row either, so the retry (a replayed
+    epoch) still passes the post_id gate and writes both tables."""
+    store, posts = _one_post_store(spark, str(tmp_path / "store5"))
+    _fails_once(monkeypatch, "fan_out")
+    with pytest.raises(RuntimeError, match="fan_out died"):
+        store.add_posts(posts)
+    assert store.table("posts").count() == 0
+    assert store.table("feed_by_user").count() == 0
+    store.add_posts(posts)
+    assert [r.post_id for r in store.table("posts").collect()] == ["p0"]
+    feed = sorted(
+        (r.user_id, r.post_id) for r in store.table("feed_by_user").collect()
+    )
+    assert feed == [("u0", "p0"), ("u1", "p0")]
+
+
+def test_add_posts_posts_failure_after_the_feed_commit_heals_on_retry(
+    spark, tmp_path, monkeypatch
+):
+    """The other window: the feed commits, then the ``posts`` append dies.
+    The retry writes the ``posts`` row, and ``fan_out``'s anti-join keeps
+    the feed at one row per (user_id, post_id)."""
+    store, posts = _one_post_store(spark, str(tmp_path / "store6"))
+    _fails_once(monkeypatch, "_append", lambda df, name: name == "posts")
+    with pytest.raises(RuntimeError, match="_append died"):
+        store.add_posts(posts)
+    assert store.table("posts").count() == 0
+    assert store.table("feed_by_user").count() == 2
+    store.add_posts(posts)
+    assert [r.post_id for r in store.table("posts").collect()] == ["p0"]
+    feed = sorted(
+        (r.user_id, r.post_id) for r in store.table("feed_by_user").collect()
+    )
+    assert feed == [("u0", "p0"), ("u1", "p0")]

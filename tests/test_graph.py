@@ -194,34 +194,48 @@ def test_dup_groups_store_matches_inline_and_caches(spark, tmp_path):
     ).write.mode("overwrite").parquet(src)
     d = spark.read.parquet(src)
 
-    inline = {
-        tuple(r) for r in ngram_jaccard_pairs(d, n=3, threshold=0.5).collect()
-    }
-    stored = {
-        tuple(r) for r in ngram_pairs_store(d, n=3, threshold=0.5).collect()
-    }
-    assert inline == stored and stored, "store diverged from inline"
-
-    grp = dup_groups_store(d, n=3, threshold=0.5)
-    got = {(r.id, r.comp) for r in grp.collect()}
-    assert got == {(1, 1), (2, 1), (4, 1)}  # doc 3 has no pair
-
-    # distinct params => distinct store paths (no stale serving)
+    # the two cross-run stores this test builds, keyed as
+    # ngram_pairs_store and dup_groups_store key them; removed at the
+    # end by their exact paths, so no other run's store is touched
     import hashlib
+    import shutil
 
     files = "|".join(sorted(d.inputFiles()))
     k05 = hashlib.md5(
         f"{files}|text|doc_id|3|0.5|pairs-v1".encode()
     ).hexdigest()[:12]
-    k03 = hashlib.md5(
-        f"{files}|text|doc_id|3|0.3|pairs-v1".encode()
+    kgroups = hashlib.md5(
+        f"{files}|text|doc_id|3|0.5|groups-v1".encode()
     ).hexdigest()[:12]
-    assert k05 != k03
-    assert os.path.exists(f"/tmp/gckfs_pairs_{k05}/_STAGE_COMMITTED")
+    built = [f"/tmp/gckfs_pairs_{k05}", f"/tmp/gckfs_dupgroups_{kgroups}"]
+    try:
+        inline = {
+            tuple(r)
+            for r in ngram_jaccard_pairs(d, n=3, threshold=0.5).collect()
+        }
+        stored = {
+            tuple(r) for r in ngram_pairs_store(d, n=3, threshold=0.5).collect()
+        }
+        assert inline == stored and stored, "store diverged from inline"
 
-    # in-memory frames bypass the store (nothing to key staleness on)
-    mem = spark.createDataFrame(
-        [(1, "a b c d e", "en", "a")],
-        "doc_id long, text string, lang string, source string",
-    )
-    assert ngram_pairs_store(mem).count() == 0
+        grp = dup_groups_store(d, n=3, threshold=0.5)
+        got = {(r.id, r.comp) for r in grp.collect()}
+        assert got == {(1, 1), (2, 1), (4, 1)}  # doc 3 has no pair
+
+        # distinct params => distinct store paths (no stale serving)
+        k03 = hashlib.md5(
+            f"{files}|text|doc_id|3|0.3|pairs-v1".encode()
+        ).hexdigest()[:12]
+        assert k05 != k03
+        for path in built:
+            assert os.path.exists(f"{path}/_STAGE_COMMITTED"), path
+
+        # in-memory frames bypass the store (nothing to key staleness on)
+        mem = spark.createDataFrame(
+            [(1, "a b c d e", "en", "a")],
+            "doc_id long, text string, lang string, source string",
+        )
+        assert ngram_pairs_store(mem).count() == 0
+    finally:
+        for path in built:
+            shutil.rmtree(path, ignore_errors=True)
